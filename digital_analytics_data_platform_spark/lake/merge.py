@@ -47,14 +47,22 @@ from __future__ import annotations
 import os
 import time
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
-from .table import DELETED_COL, CommitConflict, LakeTable, lww_collapse
+from .table import (
+    DELETED_COL,
+    CommitConflict,
+    LakeTable,
+    bucket_of,
+    lww_collapse,
+    retry_on_conflict,
+    stored_schema,
+)
 
 _LEDGER_KEY = "ledger"
 _LEDGER_MAX = 1024  # retained ledger entries; older batches are protected by LWW idempotence anyway
@@ -225,6 +233,30 @@ def align_to_fields(df: DataFrame, fields: list[T.StructField]) -> DataFrame:
     return df
 
 
+def _stage_batch(changes: DataFrame, snap) -> tuple[DataFrame, list[T.StructField], dict]:
+    """Stage an incoming batch against ``snap``: bind its logical names to
+    the table's physical columns, evolve the business fields (new payload
+    columns append; shared columns may WIDEN — int→long, float→double,
+    manifest-only since old files upcast at scan; key-column type changes
+    are refused), align the batch to them and default ``op`` to ``'U'``.
+    Returns the staged frame, the evolved fields and the
+    ``column_mapping`` additions that must ride the commit."""
+    changes, mapping_update = _to_physical_batch(changes, snap)
+    fields = evolve_fields(_business_fields(snap.schema()), changes.schema, snap.key_cols)
+    staged = align_to_fields(changes, fields)
+    if "op" not in staged.columns:
+        staged = staged.withColumn("op", F.lit("U"))
+    return staged, fields, mapping_update
+
+
+def _mapping_props(snap, mapping_update: dict) -> dict:
+    """Props update committing ``mapping_update`` on top of ``snap``'s
+    ``column_mapping``. Additions (a re-added dropped column's fresh
+    physical name) must ride the same commit as the data, or the logical
+    column forks across physical columns on the next write."""
+    return {"column_mapping": {**snap.mapping(), **mapping_update}} if mapping_update else {}
+
+
 @dataclass
 class MergeResult:
     version: int
@@ -261,46 +293,34 @@ def merge_changes(
 ) -> MergeResult:
     """Apply one micro-batch of CDC events — see :func:`_merge_changes_once`
     for the full semantics. ``conflict_retries`` adds optimistic-concurrency
-    retry: every commit validates ``expected_version`` against the snapshot
-    the merge was computed from, so a concurrent writer (another apply, a
-    compaction, a reconcile backfill) surfaces as :class:`CommitConflict`.
+    retry (:func:`~.table.retry_on_conflict`): every commit validates
+    ``expected_version`` against the snapshot the merge was computed from,
+    so a concurrent writer (another apply, a compaction, a reconcile
+    backfill) surfaces as :class:`CommitConflict`.
 
     Conflict cost depends on the strategy. **COW** retries RE-RUN the
     whole merge against the refreshed snapshot — the rewritten bucket
-    files depend on table state, so nothing can be salvaged (staged
-    files of the failed attempt become orphans; ``remove_orphan_files``
-    reclaims them). **MOR** losers REBASE instead of re-running: the
-    batch's delta files are computed from the batch alone, so the loser
-    re-reads the head, recomputes only the bookkeeping (ledger /
-    ``max_commit_lsn`` / ``delta_buckets`` / evolved schema /
-    ``column_mapping``) against it, and re-offers the SAME files —
-    O(manifest read + props commit) per lost race, which is what makes
-    concurrent writers (a second pipeline, snapshot-bootstrap chunks, a
-    background compactor) cheap. A rebase is never blind: every prop is
-    recomputed from the fresh head, a concurrently-landed identical
-    ``batch_key`` turns into a clean skip (duplicate files deleted),
-    and a concurrent bucket-spec rescale falls back to the full re-run.
+    files depend on table state, so nothing can be salvaged. **MOR**
+    losers first REBASE their delta files onto the new head, up to
+    ``conflict_retries`` times inside each run (:func:`append_and_rebase`);
+    a concurrent rescale or column rename/drop falls back to the re-run.
     Safe either way: the failed attempt never entered the ledger, and
     read-time LWW makes a replayed batch idempotent."""
-    attempt = 0
-    while True:
-        try:
-            return _merge_changes_once(
-                spark,
-                table,
-                changes,
-                batch_key=batch_key,
-                write_salt=write_salt,
-                quarantine=quarantine,
-                strategy=strategy,
-                max_ts=max_ts,
-                extra_props=extra_props,
-                conflict_retries=conflict_retries,
-            )
-        except CommitConflict:
-            if attempt >= conflict_retries:
-                raise
-            attempt += 1
+    return retry_on_conflict(
+        lambda: _merge_changes_once(
+            spark,
+            table,
+            changes,
+            batch_key=batch_key,
+            write_salt=write_salt,
+            quarantine=quarantine,
+            strategy=strategy,
+            max_ts=max_ts,
+            extra_props=extra_props,
+            conflict_retries=conflict_retries,
+        ),
+        conflict_retries,
+    )
 
 
 def _merge_changes_once(
@@ -358,37 +378,15 @@ def _merge_changes_once(
     if batch_key is not None and batch_key in ledger:
         return MergeResult(version=snap.version, skipped=True, wall_s=time.monotonic() - t0)
 
-    # logical → physical column binding (metadata-only rename/drop)
-    changes, mapping_update = _to_physical_batch(changes, snap)
-    mapping_props = (
-        {"column_mapping": {**snap.props.get("column_mapping", {}), **mapping_update}}
-        if mapping_update
-        else {}
-    )
-
-    # ---- schema alignment / evolution -----------------------------------
-    # New payload columns are appended; shared columns may WIDEN
-    # (int→long, float→double — manifest-only, old files upcast at
-    # scan); key-column type changes are refused (evolve_fields).
-    table_fields = _business_fields(snap.schema())
-    evolved_fields = evolve_fields(table_fields, changes.schema, key_cols)
-    evolved_names = [f.name for f in evolved_fields]
-    evolved_schema = T.StructType(
-        evolved_fields + [T.StructField(DELETED_COL, T.BooleanType(), False)]
-    )
-
-    has_op = "op" in changes.columns
     has_commit = "commit_lsn" in changes.columns
-    staged = align_to_fields(changes, evolved_fields)
-    if not has_op:
-        staged = staged.withColumn("op", F.lit("U"))
+    staged, evolved_fields, mapping_update = _stage_batch(changes, snap)
+    evolved_names = [f.name for f in evolved_fields]
 
     # ---- clean / quarantine / bucket ------------------------------------
     bad = garbage_predicate(staged.schema, key_cols, order_cols, max_ts)
-    bucket = F.when(bad, F.lit(-1)).otherwise(
-        F.pmod(F.xxhash64(F.col(key_cols[0])), F.lit(snap.n_buckets)).cast("int")
+    staged = staged.withColumn(
+        "_bucket", F.when(bad, F.lit(-1)).otherwise(bucket_of(key_cols[0], snap.n_buckets))
     )
-    staged = staged.withColumn("_bucket", bucket)
     phases: dict[str, float] = {}
     t_mark = time.monotonic()
 
@@ -401,10 +399,8 @@ def _merge_changes_once(
 
     if strategy == "mor":
         return _merge_mor(
-            spark, table, staged, snap, evolved_fields, evolved_schema, ledger,
-            batch_key, write_salt, quarantine, fp_expr, commit_expr, t0, phases,
-            extra_props=extra_props, mapping_update=mapping_update,
-            commit_rebase_retries=conflict_retries,
+            table, staged, snap, evolved_fields, batch_key, write_salt, quarantine,
+            fp_expr, commit_expr, t0, phases, extra_props, mapping_update, conflict_retries,
         )
 
     staged.persist(StorageLevel.MEMORY_AND_DISK)
@@ -483,9 +479,7 @@ def _merge_changes_once(
             F.col("_w._from_batch").alias("_from_batch"),
             F.col("_existed"),
         )
-        .withColumn(
-            "_bucket", F.pmod(F.xxhash64(F.col(key_cols[0])), F.lit(snap.n_buckets)).cast("int")
-        )
+        .withColumn("_bucket", bucket_of(key_cols[0], snap.n_buckets))
     )
     winners.persist(StorageLevel.MEMORY_AND_DISK)
     t_mark = time.monotonic()
@@ -503,16 +497,7 @@ def _merge_changes_once(
         .collect()
     )
     phases["lww_agg"] = time.monotonic() - t_mark
-    t_mark = time.monotonic()
 
-    commit_dir, new_files = table.write_data_files(
-        winners.select(*evolved_names, DELETED_COL, "_bucket"), write_salt=write_salt
-    )
-    del commit_dir
-    phases["write"] = time.monotonic() - t_mark
-    phases.update(getattr(table, "last_write_walls", {}))
-
-    ledger = _trim_ledger(ledger, batch_key, fingerprint, max_commit)
     lineage = [
         {
             "bucket": int(r["_bucket"]),
@@ -524,27 +509,27 @@ def _merge_changes_once(
         }
         for r in lineage_rows
     ]
-    # COW rewrite folds any merge-on-read deltas of these buckets down
-    delta_buckets = dict(snap.props.get("delta_buckets", {}))
-    for b in affected:
-        delta_buckets.pop(str(b), None)
-    new_snap = table.commit(
-        new_files=new_files,
-        replaced_buckets=affected,
-        expected_version=snap.version,
-        schema=evolved_schema,
+    t_mark = time.monotonic()
+    rewrite_buckets(
+        table,
+        snap,
+        winners.select(*evolved_names, DELETED_COL),
+        affected,
+        write_salt=write_salt,
+        schema=stored_schema(evolved_fields),
         props_update={
-            _LEDGER_KEY: ledger,
+            _LEDGER_KEY: _trim_ledger(ledger, batch_key, fingerprint, max_commit),
             "max_commit_lsn": max(max_commit, int(snap.props.get("max_commit_lsn", 0))),
-            "delta_buckets": delta_buckets,
-            **mapping_props,
+            **_mapping_props(snap, mapping_update),
             **(extra_props or {}),
         },
         lineage=lineage,
     )
+    phases["write"] = time.monotonic() - t_mark
+    phases.update(getattr(table, "last_write_walls", {}))
 
     res = MergeResult(
-        version=new_snap.version,
+        version=snap.version + 1,
         events_in=events_in,
         quarantined=n_quarantined,
         inserts=sum(r["inserts"] for r in lineage),
@@ -561,9 +546,8 @@ def _merge_changes_once(
 
 
 def _merge_mor(
-    spark, table, staged, snap, evolved_fields, evolved_schema, ledger,
-    batch_key, write_salt, quarantine, fp_expr, commit_expr, t0, phases,
-    extra_props=None, mapping_update=None, commit_rebase_retries=0,
+    table, staged, snap, evolved_fields, batch_key, write_salt, quarantine,
+    fp_expr, commit_expr, t0, phases, extra_props, mapping_update, rebase_retries,
 ):
     """Append-only merge-on-read apply: collapse the batch alone, append
     winners as bucketed delta files. No read of existing data — apply
@@ -576,7 +560,9 @@ def _merge_mor(
     aggregation job plus a full persist of the winners per batch; both
     are gone — the fixed per-batch driver cost is now one write job +
     one column-pruned stats job, which is what lets small batches keep
-    N→4N scaling efficiency."""
+    N→4N scaling efficiency. The files commit through
+    :func:`append_and_rebase`, so a lost CAS rebases instead of
+    re-running the batch."""
     from pyspark.sql import Observation
 
     t_mark = time.monotonic()
@@ -636,173 +622,150 @@ def _merge_mor(
     phases.update(getattr(table, "last_write_walls", {}))
     t_mark = time.monotonic()
 
-    # divert the _bucket=-1 files into the DLQ (rename, no data pass)
-    dlq_entries = [e for e in new_files if e["bucket"] == -1]
-    new_files = [e for e in new_files if e["bucket"] >= 0]
-    if dlq_entries:
-        qdir = table.quarantine_path()
-        os.makedirs(qdir, exist_ok=True)
-        for e in dlq_entries:
-            src = os.path.join(table.path, e["path"])
-            if quarantine:
-                os.rename(src, os.path.join(qdir, os.path.basename(e["path"])))
-            else:
-                os.remove(src)
-    phases["quarantine"] = time.monotonic() - t_mark
-
     # per-bucket lineage from the file-stats entries (strip the ride-
     # along metric so the manifest stays minimal)
     per_bucket: dict[int, dict[str, int]] = {}
     for f_ in new_files:
-        d = per_bucket.setdefault(f_["bucket"], {"keys": 0, "deletes": 0})
-        d["keys"] += f_["rows"]
-        d["deletes"] += int(f_.pop("deletes", 0) or 0)
-    affected = sorted(per_bucket)
-
-    if not affected:
-        head, head_ledger = snap, ledger
-        for attempt in range(max(commit_rebase_retries, 0) + 1):
-            if head is not snap:
-                head_ledger = dict(head.props.get(_LEDGER_KEY, {}))
-                if batch_key is not None and batch_key in head_ledger:
-                    return MergeResult(
-                        version=head.version, skipped=True, events_in=events_in,
-                        quarantined=n_quarantined, strategy="mor",
-                        wall_s=time.monotonic() - t0,
-                    )
-            try:
-                res = _ledger_only_commit(
-                    table, head.version, dict(head_ledger), batch_key, fingerprint,
-                    max_commit, extra_props=extra_props,
-                )
-                break
-            except CommitConflict:
-                if attempt >= commit_rebase_retries:
-                    raise
-                head = table.snapshot()
-        res.events_in, res.quarantined = events_in, n_quarantined
-        res.strategy = "mor"
-        res.wall_s = time.monotonic() - t0
-        return res
-
-    delta_increments: dict[str, int] = {}
-    for f_ in new_files:
-        b = str(f_["bucket"])
-        delta_increments[b] = delta_increments.get(b, 0) + 1
+        deletes = int(f_.pop("deletes", 0) or 0)
+        if f_["bucket"] >= 0:
+            d = per_bucket.setdefault(f_["bucket"], {"keys": 0, "deletes": 0, "files": 0})
+            d["keys"] += f_["rows"]
+            d["deletes"] += deletes
+            d["files"] += 1
     lineage = [
-        {
-            "bucket": b,
-            "keys": d["keys"],
-            "deletes": d["deletes"],
-            "mode": "mor",
-            "batch_key": batch_key,
-        }
+        {"bucket": b, "keys": d["keys"], "deletes": d["deletes"], "mode": "mor", "batch_key": batch_key}
         for b, d in sorted(per_bucket.items())
     ]
 
-    # ---- commit, with cheap CONFLICT REBASE ------------------------------
-    # A MOR batch's data files are computed from the batch ALONE — a lost
-    # commit CAS invalidates only the bookkeeping (ledger / delta_buckets /
-    # max_commit_lsn / schema / column_mapping), which was read against a
-    # stale head. So a loser does not re-run the batch: it re-reads the
-    # head, recomputes the bookkeeping against it, and re-offers the SAME
-    # files — O(one manifest read + one props commit) per lost race instead
-    # of O(batch recompute + rewrite). This is what makes N concurrent
-    # writers on one table (second pipeline, snapshot-bootstrap chunks,
-    # compactor) cheap. Falls back to the outer full re-run when the head's
-    # BUCKET SPEC changed (a rescale landed: our files' bucket ids are
-    # meaningless under the new spec), and skips cleanly when another
-    # writer landed this very batch_key first (duplicate staged files are
-    # deleted, not orphaned). Concurrent schema evolution re-merges via
-    # evolve_fields — incompatible concurrent type changes stay loud.
-    head = snap
-    head_ledger = ledger
-    for attempt in range(max(commit_rebase_retries, 0) + 1):
-        if head is not snap:
-            if head.n_buckets != snap.n_buckets:
-                for f_ in new_files:
-                    try:
-                        os.remove(os.path.join(table.path, f_["path"]))
-                    except OSError:
-                        pass
-                raise CommitConflict(
-                    "bucket spec changed under a MOR commit; full re-run required"
-                )
-            if head.props.get("column_mapping", {}) != snap.props.get("column_mapping", {}):
-                # our staged files bound logical→physical names against the
-                # stale snapshot's mapping; if a concurrent rename/drop
-                # landed, re-offering them would write values into a
-                # just-retired physical column (silently invisible) instead
-                # of the fresh physical a post-drop apply would allocate.
-                # Same remedy as a bucket-spec change: full re-run.
-                for f_ in new_files:
-                    try:
-                        os.remove(os.path.join(table.path, f_["path"]))
-                    except OSError:
-                        pass
-                raise CommitConflict(
-                    "column mapping changed under a MOR commit; full re-run required"
-                )
-            head_ledger = dict(head.props.get(_LEDGER_KEY, {}))
-            if batch_key is not None and batch_key in head_ledger:
-                for f_ in new_files:
-                    try:
-                        os.remove(os.path.join(table.path, f_["path"]))
-                    except OSError:
-                        pass
-                return MergeResult(
-                    version=head.version, skipped=True, events_in=events_in,
-                    quarantined=n_quarantined, strategy="mor",
-                    wall_s=time.monotonic() - t0,
-                )
-        final_fields = evolve_fields(_business_fields(head.schema()), T.StructType(evolved_fields), snap.key_cols)
-        final_schema = T.StructType(
-            final_fields + [T.StructField(DELETED_COL, T.BooleanType(), False)]
-        )
-        delta_buckets = dict(head.props.get("delta_buckets", {}))
-        for b, n_inc in delta_increments.items():
-            delta_buckets[b] = delta_buckets.get(b, 0) + n_inc
+    def commit_args(head) -> dict:
+        # every prop is recomputed from the head the files land on;
+        # concurrent schema evolution re-merges via evolve_fields
+        # (incompatible concurrent type changes stay loud)
         props = {
-            _LEDGER_KEY: _trim_ledger(dict(head_ledger), batch_key, fingerprint, max_commit),
-            "max_commit_lsn": max(max_commit, int(head.props.get("max_commit_lsn", 0))),
-            "delta_buckets": delta_buckets,
-            **(
-                {"column_mapping": {**head.props.get("column_mapping", {}), **mapping_update}}
-                if mapping_update
-                else {}
-            ),
-            **(extra_props or {}),
-        }
-        try:
-            table.commit(
-                new_files=new_files,
-                replaced_buckets=(),
-                expected_version=head.version,
-                schema=final_schema,
-                props_update=props,
-                lineage=lineage,
+            _LEDGER_KEY: _trim_ledger(
+                dict(head.props.get(_LEDGER_KEY, {})), batch_key, fingerprint, max_commit
             )
-            committed_version = head.version + 1
-            break
-        except CommitConflict:
-            if attempt >= commit_rebase_retries:
-                raise
-            head = table.snapshot()
-    deletes = sum(r["deletes"] for r in lineage)
-    keys = sum(r["keys"] for r in lineage)
-    res = MergeResult(
-        version=committed_version,
+        }
+        if not per_bucket:  # nothing clean to append: record the batch only
+            return {"props_update": {**props, **(extra_props or {})}}
+        delta_buckets = dict(head.props.get("delta_buckets", {}))
+        for b, d in per_bucket.items():
+            delta_buckets[str(b)] = delta_buckets.get(str(b), 0) + d["files"]
+        fields = evolve_fields(_business_fields(head.schema()), T.StructType(evolved_fields), key_cols)
+        return {
+            "schema": stored_schema(fields),
+            "props_update": {
+                **props,
+                "max_commit_lsn": max(max_commit, int(head.props.get("max_commit_lsn", 0))),
+                "delta_buckets": delta_buckets,
+                **_mapping_props(head, mapping_update),
+                **(extra_props or {}),
+            },
+            "lineage": lineage,
+        }
+
+    version, skipped = append_and_rebase(
+        table, snap, new_files, commit_args,
+        batch_key=batch_key, ledger_key=_LEDGER_KEY, quarantine=quarantine, retries=rebase_retries,
+    )
+    phases["commit"] = time.monotonic() - t_mark
+    if skipped:
+        return MergeResult(
+            version=version, skipped=True, events_in=events_in, quarantined=n_quarantined,
+            strategy="mor", wall_s=time.monotonic() - t0,
+        )
+    deletes = sum(d["deletes"] for d in per_bucket.values())
+    keys = sum(d["keys"] for d in per_bucket.values())
+    return MergeResult(
+        version=version,
         events_in=events_in,
         quarantined=n_quarantined,
         deletes=deletes,
         upserts=keys - deletes,
         keys_written=keys,
-        affected_buckets=affected,
+        affected_buckets=sorted(per_bucket),
         strategy="mor",
         wall_s=time.monotonic() - t0,
         phase_walls={k: round(v, 3) for k, v in phases.items()},
     )
-    return res
+
+
+def append_and_rebase(
+    table: LakeTable,
+    snap,
+    entries: list[dict],
+    commit_args: Callable[[Any], dict],
+    *,
+    batch_key: str | None,
+    ledger_key: str,
+    quarantine: bool,
+    retries: int,
+) -> tuple[int, bool]:
+    """Publish freshly written append files on top of ``snap`` — the
+    commit tail shared by the MOR merge and the SCD2 history sink.
+    ``entries`` come from :meth:`LakeTable.write_data_files`; files of
+    the garbage bucket ``-1`` are RENAMED into the quarantine DLQ (no
+    data pass; deleted when ``quarantine`` is off), the rest commit with
+    ``commit_args(head)`` (schema / props / lineage recomputed against
+    the head they land on). Returns ``(version, skipped)``.
+
+    Conflict REBASE: the files are computed from the batch ALONE, so a
+    lost commit CAS invalidates only the bookkeeping read against a
+    stale head. The loser re-reads the head and re-offers the SAME files,
+    up to ``retries`` times — O(one manifest read + one props commit)
+    per lost race instead of O(batch recompute + rewrite), which is what
+    makes N concurrent writers on one table (second pipeline,
+    snapshot-bootstrap chunks, compactor) cheap. Two heads end the
+    rebase, and both delete the staged files rather than orphan them:
+    one where another writer already ledgered ``batch_key`` (a clean
+    skip), and one whose bucket spec or ``column_mapping`` changed, where
+    :class:`CommitConflict` asks the caller's outer retry for a full
+    re-run — a rescale makes the files' bucket ids meaningless, and a
+    concurrent rename or drop rebinds logical names the staged files
+    already bound to physical columns. The mapping check compares the
+    whole dict: even a pure addition (a rename of ``tool`` to
+    ``label``) moves where ``label`` binds."""
+    dlq = [e for e in entries if e["bucket"] == -1]
+    files = [e for e in entries if e["bucket"] >= 0]
+    if dlq:
+        qdir = table.quarantine_path()
+        os.makedirs(qdir, exist_ok=True)
+        if quarantine:
+            for e in dlq:
+                src = os.path.join(table.path, e["path"])
+                os.rename(src, os.path.join(qdir, os.path.basename(e["path"])))
+        else:
+            _delete_files(table, dlq)
+    rebasing = False
+
+    def offer() -> tuple[int, bool] | None:
+        nonlocal rebasing
+        head = snap
+        if rebasing:
+            head = table.snapshot()
+            if files and (head.n_buckets != snap.n_buckets or head.mapping() != snap.mapping()):
+                return None
+            if batch_key is not None and batch_key in head.props.get(ledger_key, {}):
+                return head.version, True
+        rebasing = True
+        table.commit(new_files=files, expected_version=head.version, **commit_args(head))
+        return head.version + 1, False
+
+    out = retry_on_conflict(offer, retries)
+    if out is None or out[1]:
+        _delete_files(table, files)
+    if out is None:
+        raise CommitConflict("bucket spec or column mapping changed under an append; full re-run required")
+    return out
+
+
+def _delete_files(table: LakeTable, entries: list[dict]) -> None:
+    """Delete staged data files that will never be committed."""
+    for e in entries:
+        try:
+            os.remove(os.path.join(table.path, e["path"]))
+        except OSError:
+            pass
 
 
 def compact(
@@ -826,17 +789,13 @@ def compact(
     (see :meth:`LakeTable.write_data_files`): compaction is exactly when
     a 100 TB table buys back read locality, turning later ``stats_range``
     dashboard reads into sliver scans instead of full-bucket scans."""
-    attempt = 0
-    while True:
-        try:
-            return _compact_once(
-                spark, table, write_salt=write_salt, all_buckets=all_buckets,
-                cluster_by=cluster_by, cluster_mode=cluster_mode, buckets=buckets,
-            )
-        except CommitConflict:
-            if attempt >= conflict_retries:
-                raise
-            attempt += 1
+    return retry_on_conflict(
+        lambda: _compact_once(
+            spark, table, write_salt=write_salt, all_buckets=all_buckets,
+            cluster_by=cluster_by, cluster_mode=cluster_mode, buckets=buckets,
+        ),
+        conflict_retries,
+    )
 
 
 def _compact_once(
@@ -878,20 +837,61 @@ def _compact_once(
         if not scope:
             return 0
     df = table.read(spark, buckets=scope, include_deleted=True, physical=True)  # collapse auto-applies
-    df = df.withColumn(
-        "_bucket", F.pmod(F.xxhash64(F.col(snap.key_cols[0])), F.lit(snap.n_buckets)).cast("int")
+    new_files = rewrite_buckets(
+        table, snap, df, scope, write_salt=write_salt, cluster_by=cluster_by, cluster_mode=cluster_mode
     )
+    return sum(f["rows"] for f in new_files)
+
+
+def rewrite_buckets(
+    table: LakeTable,
+    snap,
+    rows: DataFrame,
+    scope: Iterable[int],
+    *,
+    n_buckets: int | None = None,
+    write_salt: int = 1,
+    cluster_by: list[str] | None = None,
+    cluster_mode: str = "range",
+    schema: T.StructType | None = None,
+    props_update: dict | None = None,
+    lineage: list[dict] | Callable[[list[dict]], list[dict]] | None = None,
+) -> list[dict]:
+    """Replace buckets ``scope`` of ``snap`` with ``rows`` (physical
+    layout, ``_deleted`` included) in one commit against ``snap.version``
+    — the primitive behind every bucket-rewriting writer: the COW merge,
+    compaction, rescale, full replace, window reconcile, tombstone expiry
+    and the SCD2 / patch compactions. Rows are bucketed by the first key
+    column under ``n_buckets`` (default: the snapshot's; a different
+    count is a bucket-spec change and needs every bucket in ``scope``).
+    The rewrite folds any merge-on-read deltas of ``scope`` down, so those
+    buckets leave the ``delta_buckets`` bookkeeping — unless the table
+    stores ``delta_buckets: False`` (reads that must never LWW-collapse),
+    which is kept. ``lineage`` may be a function of the written file
+    entries. Returns the written file entries."""
+    scope = list(scope)
     _, new_files = table.write_data_files(
-        df, write_salt=write_salt, cluster_by=cluster_by, cluster_mode=cluster_mode
+        rows.withColumn("_bucket", bucket_of(snap.key_cols[0], n_buckets or snap.n_buckets)),
+        write_salt=write_salt,
+        n_buckets=n_buckets,
+        cluster_by=cluster_by,
+        cluster_mode=cluster_mode,
     )
-    remaining = {} if all_buckets else {b: n for b, n in delta.items() if int(b) not in set(scope)}
+    props = dict(props_update or {})
+    delta = snap.props.get("delta_buckets", {})
+    if isinstance(delta, dict):
+        folded = {str(b) for b in scope}
+        props["delta_buckets"] = {b: n for b, n in delta.items() if b not in folded}
     table.commit(
         new_files=new_files,
         replaced_buckets=scope,
         expected_version=snap.version,
-        props_update={"delta_buckets": remaining},
+        schema=schema,
+        props_update=props,
+        lineage=lineage(new_files) if callable(lineage) else lineage,
+        n_buckets=n_buckets,
     )
-    return sum(f["rows"] for f in new_files)
+    return new_files
 
 
 def rescale_buckets(
@@ -918,39 +918,30 @@ def rescale_buckets(
     rewrite if the apply wins a race. Returns rows rewritten."""
     if new_n_buckets < 1:
         raise ValueError(f"new_n_buckets must be >= 1, got {new_n_buckets}")
-    attempt = 0
-    while True:
+
+    def once() -> int:
         snap = table.snapshot()
         if snap.n_buckets == new_n_buckets:
             return 0
-        df = table.read(spark, include_deleted=True, collapse=True, physical=True)
-        df = df.withColumn(
-            "_bucket",
-            F.pmod(F.xxhash64(F.col(snap.key_cols[0])), F.lit(new_n_buckets)).cast("int"),
+        new_files = rewrite_buckets(
+            table,
+            snap,
+            table.read(spark, include_deleted=True, collapse=True, physical=True),
+            range(snap.n_buckets),
+            n_buckets=new_n_buckets,
+            write_salt=write_salt,
+            lineage=lambda files: [
+                {
+                    "mode": "rescale",
+                    "from_buckets": snap.n_buckets,
+                    "to_buckets": new_n_buckets,
+                    "rows": sum(f["rows"] for f in files),
+                }
+            ],
         )
-        _, new_files = table.write_data_files(df, write_salt=write_salt, n_buckets=new_n_buckets)
-        rows = sum(f["rows"] for f in new_files)
-        try:
-            table.commit(
-                new_files=new_files,
-                replaced_buckets=range(snap.n_buckets),
-                expected_version=snap.version,
-                n_buckets=new_n_buckets,
-                props_update={"delta_buckets": {}},
-                lineage=[
-                    {
-                        "mode": "rescale",
-                        "from_buckets": snap.n_buckets,
-                        "to_buckets": new_n_buckets,
-                        "rows": rows,
-                    }
-                ],
-            )
-            return rows
-        except CommitConflict:
-            if attempt >= conflict_retries:
-                raise
-            attempt += 1
+        return sum(f["rows"] for f in new_files)
+
+    return retry_on_conflict(once, conflict_retries)
 
 
 def replace_full(
@@ -961,27 +952,6 @@ def replace_full(
     batch_key: str | None = None,
     write_salt: int = 1,
     conflict_retries: int = 0,
-) -> MergeResult:
-    """See :func:`_replace_full_once`; ``conflict_retries`` re-runs the
-    rebuild against the refreshed snapshot on a lost commit CAS (same
-    contract as :func:`merge_changes`)."""
-    attempt = 0
-    while True:
-        try:
-            return _replace_full_once(spark, table, df, batch_key=batch_key, write_salt=write_salt)
-        except CommitConflict:
-            if attempt >= conflict_retries:
-                raise
-            attempt += 1
-
-
-def _replace_full_once(
-    spark: SparkSession,
-    table: LakeTable,
-    df: DataFrame,
-    *,
-    batch_key: str | None = None,
-    write_salt: int = 1,
 ) -> MergeResult:
     """S5: CREATE-OR-REPLACE full rebuild — the source dataframe IS the
     new table state, swapped in atomically as one snapshot (the
@@ -994,60 +964,43 @@ def _replace_full_once(
     files + manifest chain = time travel across the rebuild). Collapses
     the input by the table's LWW order first so a raw multi-version
     feed is a valid source. Schema may gain columns (additive
-    evolution), same as MERGE."""
-    snap = table.snapshot()
-    key_cols, order_cols = snap.key_cols, snap.order_cols
-    ledger: dict[str, Any] = dict(snap.props.get(_LEDGER_KEY, {}))
-    if batch_key is not None and batch_key in ledger:
-        return MergeResult(version=snap.version, skipped=True)
+    evolution), same as MERGE.
 
-    df, mapping_update = _to_physical_batch(df, snap)  # logical → physical binding
-    # mapping additions (a batch re-adding a previously dropped logical
-    # column gets a fresh physical name) must ride THIS commit, same as
-    # the MERGE COW/MOR paths — dropping them forks the logical column
-    # across physical columns on the next write.
-    mapping_props = (
-        {"column_mapping": {**snap.props.get("column_mapping", {}), **mapping_update}}
-        if mapping_update
-        else {}
-    )
-    table_fields = _business_fields(snap.schema())
-    evolved_fields = evolve_fields(table_fields, df.schema, key_cols)
-    evolved_schema = T.StructType(
-        evolved_fields + [T.StructField(DELETED_COL, T.BooleanType(), False)]
-    )
-    staged = align_to_fields(df, evolved_fields)
-    if "op" not in staged.columns:
-        staged = staged.withColumn("op", F.lit("U"))
-    body = staged.select(
-        *[f_.name for f_ in evolved_fields], (F.col("op") == "D").alias(DELETED_COL)
-    ).filter(F.col(key_cols[0]).isNotNull())
-    state = (
-        lww_collapse(body, key_cols, order_cols)
-        .filter(~F.col(DELETED_COL))
-        .withColumn(
-            "_bucket", F.pmod(F.xxhash64(F.col(key_cols[0])), F.lit(snap.n_buckets)).cast("int")
+    ``conflict_retries`` re-runs the rebuild against the refreshed
+    snapshot on a lost commit CAS (:func:`~.table.retry_on_conflict`)."""
+
+    def once() -> MergeResult:
+        snap = table.snapshot()
+        key_cols, order_cols = snap.key_cols, snap.order_cols
+        ledger: dict[str, Any] = dict(snap.props.get(_LEDGER_KEY, {}))
+        if batch_key is not None and batch_key in ledger:
+            return MergeResult(version=snap.version, skipped=True)
+
+        staged, evolved_fields, mapping_update = _stage_batch(df, snap)
+        body = staged.select(
+            *[f_.name for f_ in evolved_fields], (F.col("op") == "D").alias(DELETED_COL)
+        ).filter(F.col(key_cols[0]).isNotNull())
+        new_files = rewrite_buckets(
+            table,
+            snap,
+            lww_collapse(body, key_cols, order_cols).filter(~F.col(DELETED_COL)),
+            range(snap.n_buckets),
+            write_salt=write_salt,
+            schema=stored_schema(evolved_fields),
+            props_update={
+                _LEDGER_KEY: _trim_ledger(ledger, batch_key, 0, 0),
+                **_mapping_props(snap, mapping_update),
+            },
+            lineage=[{"mode": "replace_full"}],
         )
-    )
-    _, new_files = table.write_data_files(state, write_salt=write_salt)
-    table.commit(
-        new_files=new_files,
-        replaced_buckets=range(snap.n_buckets),
-        expected_version=snap.version,
-        schema=evolved_schema,
-        props_update={
-            _LEDGER_KEY: _trim_ledger(ledger, batch_key, 0, 0),
-            "delta_buckets": {},
-            **mapping_props,
-        },
-        lineage=[{"mode": "replace_full"}],
-    )
-    return MergeResult(
-        version=snap.version + 1,
-        keys_written=sum(f["rows"] for f in new_files),
-        affected_buckets=sorted({f["bucket"] for f in new_files}),
-        strategy="replace_full",
-    )
+        return MergeResult(
+            version=snap.version + 1,
+            keys_written=sum(f["rows"] for f in new_files),
+            affected_buckets=sorted({f["bucket"] for f in new_files}),
+            strategy="replace_full",
+        )
+
+    return retry_on_conflict(once, conflict_retries)
 
 
 def _trim_ledger(ledger: dict, batch_key: str | None, fingerprint: int, max_commit: int) -> dict:
@@ -1077,7 +1030,6 @@ def _ledger_only_commit(
 ) -> MergeResult:
     snap = table.commit(
         new_files=[],
-        replaced_buckets=(),
         expected_version=expected_version,
         props_update={
             _LEDGER_KEY: _trim_ledger(ledger, batch_key, fp, max_commit),
@@ -1098,31 +1050,6 @@ def reconcile_backfill(
     write_salt: int = 1,
     conflict_retries: int = 0,
 ) -> MergeResult:
-    """See :func:`_reconcile_backfill_once`; ``conflict_retries`` re-runs
-    the window replace against the refreshed snapshot on a lost commit
-    CAS (same contract as :func:`merge_changes`)."""
-    attempt = 0
-    while True:
-        try:
-            return _reconcile_backfill_once(
-                spark, table, corrected, start, end, batch_key=batch_key, write_salt=write_salt
-            )
-        except CommitConflict:
-            if attempt >= conflict_retries:
-                raise
-            attempt += 1
-
-
-def _reconcile_backfill_once(
-    spark: SparkSession,
-    table: LakeTable,
-    corrected: DataFrame,
-    start,
-    end,
-    *,
-    batch_key: str | None = None,
-    write_salt: int = 1,
-) -> MergeResult:
     """S7: parameterized date-window reconcile — the corrected feed IS
     the truth for ``ts ∈ [start, end)`` (the reference's
     ``sql/05_SDI_PROFOUND/01_BRONZE/Backfill Reconcile/
@@ -1138,98 +1065,80 @@ def _reconcile_backfill_once(
     the manifest (at 100 TB the window prunes to a few buckets when the
     feed is small; a corpus-wide correction degrades to a full rewrite,
     same as the reference's chunked backfill).
-    """
+
+    ``conflict_retries`` re-runs the window replace against the
+    refreshed snapshot on a lost commit CAS
+    (:func:`~.table.retry_on_conflict`)."""
     if start >= end:
         raise ValueError(f"empty reconcile window [{start}, {end})")
-    snap = table.snapshot()
-    key_cols, order_cols = snap.key_cols, snap.order_cols
-    tcol = order_cols[0]
-    ledger: dict[str, Any] = dict(snap.props.get(_LEDGER_KEY, {}))
-    if batch_key is not None and batch_key in ledger:
-        return MergeResult(version=snap.version, skipped=True)
 
-    corrected, mapping_update = _to_physical_batch(corrected, snap)  # logical → physical
-    # same contract as replace_full: mapping additions ride the commit
-    mapping_props = (
-        {"column_mapping": {**snap.props.get("column_mapping", {}), **mapping_update}}
-        if mapping_update
-        else {}
-    )
+    def once() -> MergeResult:
+        snap = table.snapshot()
+        key_cols, order_cols = snap.key_cols, snap.order_cols
+        tcol = order_cols[0]
+        ledger: dict[str, Any] = dict(snap.props.get(_LEDGER_KEY, {}))
+        if batch_key is not None and batch_key in ledger:
+            return MergeResult(version=snap.version, skipped=True)
 
-    # precondition ASSERT: every corrected event lies inside the window
-    n_outside = corrected.filter((F.col(tcol) < F.lit(start)) | (F.col(tcol) >= F.lit(end))).limit(1).count()
-    if n_outside:
-        raise ValueError(f"corrected feed has events outside [{start}, {end})")
+        # Schema evolution and mapping additions follow the MERGE contract.
+        staged, evolved_fields, mapping_update = _stage_batch(corrected, snap)
+        mapping_props = _mapping_props(snap, mapping_update)
 
-    # corrected winners: collapse the feed by its own order; D winners
-    # stay as tombstones (guards against pre-window stragglers).
-    # Schema evolution follows the MERGE contract: new columns append,
-    # shared columns may widen, key-type changes are refused.
-    evolved_fields = evolve_fields(_business_fields(snap.schema()), corrected.schema, key_cols)
-    evolved_names = [f.name for f in evolved_fields]
-    evolved_schema = T.StructType(
-        evolved_fields + [T.StructField(DELETED_COL, T.BooleanType(), False)]
-    )
-    feed = corrected
-    if "op" not in feed.columns:
-        feed = feed.withColumn("op", F.lit("U"))
-    feed = align_to_fields(feed, evolved_fields)
-    feed = feed.select(*evolved_names, (F.col("op") == "D").alias(DELETED_COL))
-    new_win = lww_collapse(feed, key_cols, order_cols)
-    new_win.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        # bucket scope: buckets holding corrected keys ∪ buckets with
-        # files intersecting the window (manifest min/max stats prune
-        # the rest)
-        key_buckets = {
-            int(r["_b"])
-            for r in new_win.select(
-                F.pmod(F.xxhash64(F.col(key_cols[0])), F.lit(snap.n_buckets)).cast("int").alias("_b")
+        # precondition ASSERT: every corrected event lies inside the window
+        outside = (F.col(tcol) < F.lit(start)) | (F.col(tcol) >= F.lit(end))
+        if staged.filter(outside).limit(1).count():
+            raise ValueError(f"corrected feed has events outside [{start}, {end})")
+
+        # corrected winners: collapse the feed by its own order; D winners
+        # stay as tombstones (guards against pre-window stragglers).
+        evolved_names = [f.name for f in evolved_fields]
+        feed = staged.select(*evolved_names, (F.col("op") == "D").alias(DELETED_COL))
+        new_win = lww_collapse(feed, key_cols, order_cols)
+        new_win.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            # bucket scope: buckets holding corrected keys ∪ buckets with
+            # files intersecting the window (manifest min/max stats prune
+            # the rest)
+            key_buckets = {
+                int(r["_b"])
+                for r in new_win.select(bucket_of(key_cols[0], snap.n_buckets).alias("_b"))
+                .distinct()
+                .collect()
+            }
+            affected = sorted(key_buckets | window_file_buckets(snap, tcol, start, end))
+            if not affected:
+                res = _ledger_only_commit(
+                    table, snap.version, ledger, batch_key, 0, 0, extra_props=mapping_props or None
+                )
+                res.strategy = "reconcile"
+                return res
+
+            cur = table.read(spark, buckets=affected, include_deleted=True, physical=True)
+            cur = align_to_fields(cur, evolved_fields).select(*evolved_names, DELETED_COL)
+            # window rows are superseded wholesale; corrected keys win anywhere
+            keep = cur.filter(outside).join(
+                new_win.select(*key_cols), key_cols, "left_anti"
             )
-            .distinct()
-            .collect()
-        }
-        affected = sorted(key_buckets | window_file_buckets(snap, tcol, start, end))
-        if not affected:
-            res = _ledger_only_commit(
-                table, snap.version, ledger, batch_key, 0, 0, extra_props=mapping_props or None
+            new_files = rewrite_buckets(
+                table,
+                snap,
+                keep.unionByName(new_win),
+                affected,
+                write_salt=write_salt,
+                schema=stored_schema(evolved_fields),
+                props_update={_LEDGER_KEY: _trim_ledger(ledger, batch_key, 0, 0), **mapping_props},
+                lineage=[{"mode": "reconcile", "window": [str(start), str(end)], "buckets": affected}],
             )
-            res.strategy = "reconcile"
-            return res
+            return MergeResult(
+                version=snap.version + 1,
+                keys_written=sum(f["rows"] for f in new_files),
+                affected_buckets=affected,
+                strategy="reconcile",
+            )
+        finally:
+            new_win.unpersist()
 
-        cur = table.read(spark, buckets=affected, include_deleted=True, physical=True)
-        cur = align_to_fields(cur, evolved_fields).select(*evolved_names, DELETED_COL)
-        # window rows are superseded wholesale; corrected keys win anywhere
-        keep = cur.filter((F.col(tcol) < F.lit(start)) | (F.col(tcol) >= F.lit(end))).join(
-            new_win.select(*key_cols), key_cols, "left_anti"
-        )
-        new_state = keep.unionByName(new_win).withColumn(
-            "_bucket", F.pmod(F.xxhash64(F.col(key_cols[0])), F.lit(snap.n_buckets)).cast("int")
-        )
-        _, new_files = table.write_data_files(new_state, write_salt=write_salt)
-        delta_buckets = dict(snap.props.get("delta_buckets", {}))
-        for b in affected:
-            delta_buckets.pop(str(b), None)
-        table.commit(
-            new_files=new_files,
-            replaced_buckets=affected,
-            expected_version=snap.version,
-            schema=evolved_schema,
-            props_update={
-                _LEDGER_KEY: _trim_ledger(ledger, batch_key, 0, 0),
-                "delta_buckets": delta_buckets,
-                **mapping_props,
-            },
-            lineage=[{"mode": "reconcile", "window": [str(start), str(end)], "buckets": affected}],
-        )
-        return MergeResult(
-            version=snap.version + 1,
-            keys_written=sum(f["rows"] for f in new_files),
-            affected_buckets=affected,
-            strategy="reconcile",
-        )
-    finally:
-        new_win.unpersist()
+    return retry_on_conflict(once, conflict_retries)
 
 
 def window_file_buckets(snap, tcol: str, start, end) -> set:
@@ -1324,20 +1233,6 @@ def delete_where(
 def expire_tombstones(
     spark: SparkSession, table: LakeTable, *, older_than_lsn: int, conflict_retries: int = 0
 ) -> int:
-    """OCC wrapper around :func:`_expire_tombstones_once` (same retry
-    contract as :func:`compact` — a racing apply wins, the maintenance
-    op re-reads and re-runs)."""
-    attempt = 0
-    while True:
-        try:
-            return _expire_tombstones_once(spark, table, older_than_lsn=older_than_lsn)
-        except CommitConflict:
-            if attempt >= conflict_retries:
-                raise
-            attempt += 1
-
-
-def _expire_tombstones_once(spark: SparkSession, table: LakeTable, *, older_than_lsn: int) -> int:
     """Maintenance: rewrite buckets dropping tombstones whose order col
     is below the watermark (safe once no event older than the watermark
     can still arrive — the reference's lookback-window contract).
@@ -1346,24 +1241,22 @@ def _expire_tombstones_once(spark: SparkSession, table: LakeTable, *, older_than
     tombstone expired before the (sentinel-ordered, older) snapshot
     chunk for that key lands would let the chunk RESURRECT the deleted
     key — the DBLog-class hazard ``streaming/bootstrap.py`` guards by
-    construction."""
-    snap = table.snapshot()
-    _refuse_during_bootstrap(snap, "expire_tombstones")
-    df = table.read(spark, include_deleted=True, physical=True)
-    keep = df.filter(~(F.col(DELETED_COL) & (F.col(snap.order_cols[-1]) < older_than_lsn)))
-    keep = keep.withColumn(
-        "_bucket", F.pmod(F.xxhash64(F.col(snap.key_cols[0])), F.lit(snap.n_buckets)).cast("int")
-    )
-    _, new_files = table.write_data_files(keep)
-    table.commit(
-        new_files=new_files,
-        replaced_buckets=range(snap.n_buckets),
-        expected_version=snap.version,
-        # full canonical rewrite folds any MOR deltas down too — clear the
-        # delta bookkeeping so reads stop paying the collapse agg
-        props_update={"tombstone_watermark_lsn": older_than_lsn, "delta_buckets": {}},
-    )
-    return sum(f["rows"] for f in new_files)
+    construction.
+
+    ``conflict_retries``: a racing apply wins, the maintenance op
+    re-reads and re-runs (:func:`~.table.retry_on_conflict`)."""
+
+    def once() -> int:
+        snap = table.snapshot()
+        _refuse_during_bootstrap(snap, "expire_tombstones")
+        df = table.read(spark, include_deleted=True, physical=True)
+        keep = df.filter(~(F.col(DELETED_COL) & (F.col(snap.order_cols[-1]) < older_than_lsn)))
+        new_files = rewrite_buckets(
+            table, snap, keep, range(snap.n_buckets), props_update={"tombstone_watermark_lsn": older_than_lsn}
+        )
+        return sum(f["rows"] for f in new_files)
+
+    return retry_on_conflict(once, conflict_retries)
 
 
 def _refuse_during_bootstrap(snap, op: str) -> None:
@@ -1389,28 +1282,6 @@ def retention_truncate(
     ts_col: str | None = None,
     write_salt: int = 1,
     conflict_retries: int = 0,
-) -> dict:
-    """OCC wrapper around :func:`_retention_truncate_once` (same retry
-    contract as :func:`compact`)."""
-    attempt = 0
-    while True:
-        try:
-            return _retention_truncate_once(
-                spark, table, older_than, ts_col=ts_col, write_salt=write_salt
-            )
-        except CommitConflict:
-            if attempt >= conflict_retries:
-                raise
-            attempt += 1
-
-
-def _retention_truncate_once(
-    spark: SparkSession,
-    table: LakeTable,
-    older_than,
-    *,
-    ts_col: str | None = None,
-    write_salt: int = 1,
 ) -> dict:
     """Retention sweep: drop every row with ``ts_col < older_than`` —
     the TTL/data-retention maintenance a transcript lake legally needs
@@ -1442,50 +1313,55 @@ def _retention_truncate_once(
 
     Returns ``{"files_dropped", "files_rewritten", "rows_dropped",
     "rows_rewritten", "version"}``; metadata-only when
-    ``files_rewritten == 0`` (no Spark job at all)."""
-    snap = table.snapshot()
-    _refuse_during_bootstrap(snap, "retention_truncate")
-    tcol = (snap.physical_of(ts_col) or ts_col) if ts_col else snap.order_cols[0]
-    cutoff_stat = older_than.isoformat() if hasattr(older_than, "isoformat") else older_than
-    whole, straddling = [], []
-    for f in snap.files:
-        mx, mn = f.get(f"max_{tcol}"), f.get(f"min_{tcol}")
-        if mx is not None and mx < cutoff_stat:
-            whole.append(f)
-        elif mn is None or mn < cutoff_stat:
-            straddling.append(f)
-    if not whole and not straddling:
+    ``files_rewritten == 0`` (no Spark job at all).
+
+    ``conflict_retries``: a racing apply wins, the sweep re-reads and
+    re-runs (:func:`~.table.retry_on_conflict`)."""
+
+    def once() -> dict:
+        snap = table.snapshot()
+        _refuse_during_bootstrap(snap, "retention_truncate")
+        tcol = (snap.physical_of(ts_col) or ts_col) if ts_col else snap.order_cols[0]
+        cutoff_stat = older_than.isoformat() if hasattr(older_than, "isoformat") else older_than
+        whole, straddling = [], []
+        for f in snap.files:
+            mx, mn = f.get(f"max_{tcol}"), f.get(f"min_{tcol}")
+            if mx is not None and mx < cutoff_stat:
+                whole.append(f)
+            elif mn is None or mn < cutoff_stat:
+                straddling.append(f)
+        if not whole and not straddling:
+            return {
+                "files_dropped": 0, "files_rewritten": 0, "rows_dropped": 0,
+                "rows_rewritten": 0, "version": snap.version,
+            }
+        new_files: list[dict] = []
+        rewritten_rows = 0
+        if straddling:
+            df = spark.read.schema(snap.schema()).parquet(
+                *[os.path.join(table.path, f["path"]) for f in straddling]
+            )
+            keep = df.filter(F.col(tcol).isNull() | (F.col(tcol) >= F.lit(older_than)))
+            keep = keep.withColumn("_bucket", bucket_of(snap.key_cols[0], snap.n_buckets))
+            _, new_files = table.write_data_files(keep, write_salt=write_salt)
+            rewritten_rows = sum(f["rows"] for f in new_files)
+        removed = [f["path"] for f in whole] + [f["path"] for f in straddling]
+        out = table.commit(
+            new_files=new_files,
+            removed_files=removed,
+            expected_version=snap.version,
+        )
+        dropped = (
+            sum(int(f.get("rows") or 0) for f in whole)
+            + sum(int(f.get("rows") or 0) for f in straddling)
+            - rewritten_rows
+        )
         return {
-            "files_dropped": 0, "files_rewritten": 0, "rows_dropped": 0,
-            "rows_rewritten": 0, "version": snap.version,
+            "files_dropped": len(whole),
+            "files_rewritten": len(straddling),
+            "rows_dropped": dropped,
+            "rows_rewritten": rewritten_rows,
+            "version": out.version,
         }
-    new_files: list[dict] = []
-    rewritten_rows = 0
-    if straddling:
-        df = spark.read.schema(snap.schema()).parquet(
-            *[os.path.join(table.path, f["path"]) for f in straddling]
-        )
-        keep = df.filter(F.col(tcol).isNull() | (F.col(tcol) >= F.lit(older_than)))
-        keep = keep.withColumn(
-            "_bucket", F.pmod(F.xxhash64(F.col(snap.key_cols[0])), F.lit(snap.n_buckets)).cast("int")
-        )
-        _, new_files = table.write_data_files(keep, write_salt=write_salt)
-        rewritten_rows = sum(f["rows"] for f in new_files)
-    removed = [f["path"] for f in whole] + [f["path"] for f in straddling]
-    out = table.commit(
-        new_files=new_files,
-        removed_files=removed,
-        expected_version=snap.version,
-    )
-    dropped = (
-        sum(int(f.get("rows") or 0) for f in whole)
-        + sum(int(f.get("rows") or 0) for f in straddling)
-        - rewritten_rows
-    )
-    return {
-        "files_dropped": len(whole),
-        "files_rewritten": len(straddling),
-        "rows_dropped": dropped,
-        "rows_rewritten": rewritten_rows,
-        "version": out.version,
-    }
+
+    return retry_on_conflict(once, conflict_retries)

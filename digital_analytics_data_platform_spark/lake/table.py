@@ -28,7 +28,7 @@ import os
 import uuid
 import zlib
 from dataclasses import dataclass, field
-from typing import Any, Iterable
+from typing import Any, Callable, Iterable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -95,6 +95,41 @@ def keys_bloom(df: DataFrame, col: str, m: int = _BLOOM_M_DEFAULT) -> str | None
 
 class CommitConflict(RuntimeError):
     pass
+
+
+_R = TypeVar("_R")
+
+
+def retry_on_conflict(fn: Callable[[], _R], retries: int) -> _R:
+    """Every writer's ``conflict_retries`` contract: call ``fn`` up to
+    ``retries + 1`` times, again after each :class:`CommitConflict`, and
+    let the last conflict propagate so a hot table degrades loudly. ``fn``
+    must recompute against the refreshed head on each call — a lost CAS
+    means the state it read is stale. A re-run is safe because a failed
+    attempt never entered the ledger; its staged files become orphans
+    that ``remove_orphan_files`` reclaims."""
+    attempt = 0
+    while True:
+        try:
+            return fn()
+        except CommitConflict:
+            if attempt >= retries:
+                raise
+            attempt += 1
+
+
+def bucket_of(col: str, n_buckets: int) -> F.Column:
+    """The layout's one bucket function: ``pmod(xxhash64(col), n_buckets)``.
+    Tables bucket by their first key column; writers, bucket-pruned reads
+    and bucket-aligned side tables must all use this function, or rows
+    land in buckets the reads never look in."""
+    return F.pmod(F.xxhash64(F.col(col)), F.lit(n_buckets)).cast("int")
+
+
+def stored_schema(fields: list[T.StructField]) -> T.StructType:
+    """Stored schema of business ``fields``: the fields plus the
+    tombstone flag."""
+    return T.StructType(list(fields) + [T.StructField(DELETED_COL, T.BooleanType(), False)])
 
 
 @dataclass
@@ -233,7 +268,7 @@ class LakeTable:
         os.makedirs(os.path.join(path, "snapshots"), exist_ok=True)
         os.makedirs(os.path.join(path, "data"), exist_ok=True)
         if DELETED_COL not in schema.fieldNames():
-            schema = T.StructType(list(schema.fields) + [T.StructField(DELETED_COL, T.BooleanType(), False)])
+            schema = stored_schema(schema.fields)
         snap = Snapshot(
             version=0,
             parent=None,
@@ -297,11 +332,6 @@ class LakeTable:
         _atomic_write(cur_path, str(snap.version))
 
     # -- read ------------------------------------------------------------
-
-    def bucket_expr(self, n_buckets: int, col: str | None = None) -> F.Column:
-        """Bucket id for a key column: pmod(xxhash64(key), B)."""
-        c = F.col(col) if col else F.col(self.snapshot().key_cols[0])
-        return F.pmod(F.xxhash64(c), F.lit(n_buckets)).cast("int")
 
     def read(
         self,
@@ -1043,7 +1073,7 @@ class LakeTable:
         key0 = snap.key_cols[0]
         bucket = (
             spark.createDataFrame([(value,)], T.StructType([snap.schema()[key0]]))
-            .select(self.bucket_expr(snap.n_buckets, key0).alias("b"))
+            .select(bucket_of(key0, snap.n_buckets).alias("b"))
             .first()["b"]
         )
         df = self.read(
@@ -1261,7 +1291,8 @@ class LakeTable:
         After a rename the OLD name is free: a later batch writing it
         creates a brand-new column (fresh physical, old data NOT
         visible under it) — the Iceberg drop/re-add semantic."""
-        for attempt in range(conflict_retries + 1):
+
+        def once() -> None:
             snap = self.snapshot()
             live = self._current_logicals(snap)
             if old not in live:
@@ -1281,17 +1312,14 @@ class LakeTable:
                 m.pop(phys, None)  # rename back to the physical name = identity
             else:
                 m[phys] = new
-            try:
-                self.commit(
-                    new_files=[],
-                    expected_version=snap.version,
-                    props_update={"column_mapping": m},
-                    lineage=[{"mode": "rename_column", "from": old, "to": new, "physical": phys}],
-                )
-                return
-            except CommitConflict:
-                if attempt >= conflict_retries:
-                    raise
+            self.commit(
+                new_files=[],
+                expected_version=snap.version,
+                props_update={"column_mapping": m},
+                lineage=[{"mode": "rename_column", "from": old, "to": new, "physical": phys}],
+            )
+
+        retry_on_conflict(once, conflict_retries)
 
     def drop_column(self, name: str, *, conflict_retries: int = 10) -> None:
         """Metadata-only column drop: the physical column stays in every
@@ -1301,7 +1329,8 @@ class LakeTable:
         name later binds a FRESH physical column, so old values never
         resurrect (Iceberg field-ID semantics). Key/order columns are
         refused."""
-        for attempt in range(conflict_retries + 1):
+
+        def once() -> None:
             snap = self.snapshot()
             live = self._current_logicals(snap)
             if name not in live:
@@ -1311,17 +1340,14 @@ class LakeTable:
                 raise ValueError(f"cannot drop key/order column {name!r}")
             m = dict(snap.mapping())
             m[phys] = None
-            try:
-                self.commit(
-                    new_files=[],
-                    expected_version=snap.version,
-                    props_update={"column_mapping": m},
-                    lineage=[{"mode": "drop_column", "column": name, "physical": phys}],
-                )
-                return
-            except CommitConflict:
-                if attempt >= conflict_retries:
-                    raise
+            self.commit(
+                new_files=[],
+                expected_version=snap.version,
+                props_update={"column_mapping": m},
+                lineage=[{"mode": "drop_column", "column": name, "physical": phys}],
+            )
+
+        retry_on_conflict(once, conflict_retries)
 
     def rollback(
         self,
@@ -1360,8 +1386,8 @@ class LakeTable:
         if to_version not in self.list_snapshots():
             raise ValueError(f"cannot rollback to v{to_version}: snapshot expired or never existed")
         target = self.snapshot(to_version)
-        attempt = 0
-        while True:
+
+        def once() -> Snapshot:
             cur = self.snapshot()
             if cur.version == to_version:
                 return cur
@@ -1376,13 +1402,10 @@ class LakeTable:
                 props=dict(target.props),
                 lineage=[{"batch_key": f"rollback:v{to_version}", "mode": "rollback"}],
             )
-            try:
-                self._write_snapshot(snap)
-                return snap
-            except CommitConflict:
-                if attempt >= conflict_retries:
-                    raise
-                attempt += 1
+            self._write_snapshot(snap)
+            return snap
+
+        return retry_on_conflict(once, conflict_retries)
 
     def expire_snapshots(
         self, *, keep_last: int = 10, protect_versions_since: int | None = None

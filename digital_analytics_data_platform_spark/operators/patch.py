@@ -53,8 +53,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..lake.merge import _trim_ledger, align_to_fields, evolve_fields, garbage_predicate
-from ..lake.table import DELETED_COL, LakeTable
+from ..lake.merge import _trim_ledger, align_to_fields, evolve_fields, garbage_predicate, rewrite_buckets
+from ..lake.table import DELETED_COL, LakeTable, bucket_of, retry_on_conflict, stored_schema
 
 _PATCH_LEDGER_KEY = "patch_ledger"
 # state-encoding column names
@@ -246,23 +246,17 @@ class PatchTable:
         commit CAS (concurrent writer on this table) re-runs the whole
         batch against the refreshed snapshot — safe because the failed
         attempt never entered the ledger."""
-        from ..lake.table import CommitConflict
-
-        attempt = 0
-        while True:
-            try:
-                return self._apply_batch_once(
-                    spark,
-                    changes,
-                    batch_key=batch_key,
-                    write_salt=write_salt,
-                    quarantine=quarantine,
-                    max_ts=max_ts,
-                )
-            except CommitConflict:
-                if attempt >= conflict_retries:
-                    raise
-                attempt += 1
+        return retry_on_conflict(
+            lambda: self._apply_batch_once(
+                spark,
+                changes,
+                batch_key=batch_key,
+                write_salt=write_salt,
+                quarantine=quarantine,
+                max_ts=max_ts,
+            ),
+            conflict_retries,
+        )
 
     def _apply_batch_once(
         self,
@@ -308,9 +302,6 @@ class PatchTable:
             [f for f in changes.schema.fields if f.name in set(payload) | set(key_cols)]
         )
         state_fields = evolve_fields(state_fields, logical_incoming, key_cols, exclude=())
-        state_schema = T.StructType(
-            state_fields + [T.StructField(DELETED_COL, T.BooleanType(), False)]
-        )
 
         staged = changes
         if self.op_col not in staged.columns:
@@ -329,15 +320,12 @@ class PatchTable:
         )
         st = combine_state(st, key_cols, payload)  # O(batch) pre-collapse
         st = align_to_fields(st, state_fields)
-        st = st.select(*[f.name for f in state_fields]).withColumn(
-            DELETED_COL, F.lit(False)
+        st = st.select(
+            *[f.name for f in state_fields],
+            F.lit(False).alias(DELETED_COL),
+            bucket_of(key_cols[0], snap.n_buckets).alias("_bucket"),
         )
-        st = st.withColumn(
-            "_bucket",
-            F.pmod(F.xxhash64(F.col(key_cols[0])), F.lit(snap.n_buckets)).cast("int"),
-        )
-        commit_dir, entries = self.table.write_data_files(st, write_salt=write_salt)
-        del commit_dir
+        _, entries = self.table.write_data_files(st, write_salt=write_salt)
         if quarantine:
             qdir = self.table.quarantine_path()
             os.makedirs(qdir, exist_ok=True)
@@ -345,7 +333,7 @@ class PatchTable:
         self.table.commit(
             new_files=entries,
             expected_version=snap.version,
-            schema=state_schema,
+            schema=stored_schema(state_fields),
             props_update={
                 _PATCH_LEDGER_KEY: _trim_ledger(ledger, batch_key, 0, 0),
                 "patch_payload_cols": payload,
@@ -386,17 +374,12 @@ class PatchTable:
         compacted-then-patched equals patched-then-compacted
         (asserted by tests/test_patch.py::test_compact_preserves_state)."""
         snap = self.table.snapshot()
-        df = self.state(spark).withColumn(
-            "_bucket",
-            F.pmod(F.xxhash64(F.col(snap.key_cols[0])), F.lit(snap.n_buckets)).cast("int"),
-        )
-        df = df.withColumn(DELETED_COL, F.lit(False))
-        commit_dir, entries = self.table.write_data_files(df, write_salt=write_salt)
-        del commit_dir
-        self.table.commit(
-            new_files=entries,
-            replaced_buckets=range(snap.n_buckets),
-            expected_version=snap.version,
+        rewrite_buckets(
+            self.table,
+            snap,
+            self.state(spark).withColumn(DELETED_COL, F.lit(False)),
+            range(snap.n_buckets),
+            write_salt=write_salt,
             lineage=[{"compaction": True}],
         )
         return snap.version + 1

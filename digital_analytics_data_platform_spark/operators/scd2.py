@@ -45,13 +45,15 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..lake.merge import (
-    _LEDGER_MAX,
+    _business_fields,
     _trim_ledger,
     align_to_fields,
+    append_and_rebase,
     evolve_fields,
     garbage_predicate,
+    rewrite_buckets,
 )
-from ..lake.table import DELETED_COL, LakeTable
+from ..lake.table import DELETED_COL, LakeTable, bucket_of, retry_on_conflict, stored_schema
 
 _SCD2_LEDGER_KEY = "scd2_ledger"
 
@@ -155,28 +157,23 @@ class Scd2Table:
         conflict_retries: int = 0,
     ) -> int:
         """See :meth:`_apply_batch_once`. ``conflict_retries`` adds the
-        same optimistic-concurrency retry as ``merge_changes``: a lost
-        commit CAS (concurrent writer on this table) re-runs the whole
-        batch against the refreshed snapshot — safe because the failed
-        attempt never entered the ledger."""
-        from ..lake.table import CommitConflict
-
-        attempt = 0
-        while True:
-            try:
-                return self._apply_batch_once(
-                    spark,
-                    changes,
-                    batch_key=batch_key,
-                    write_salt=write_salt,
-                    quarantine=quarantine,
-                    max_ts=max_ts,
-                    commit_rebase_retries=conflict_retries,
-                )
-            except CommitConflict:
-                if attempt >= conflict_retries:
-                    raise
-                attempt += 1
+        same optimistic-concurrency retry as a MOR ``merge_changes``: a
+        lost commit CAS (concurrent writer on this table) first rebases
+        the written files onto the new head, and re-runs the whole batch
+        only when the bucket spec or column mapping changed — safe
+        because the failed attempt never entered the ledger."""
+        return retry_on_conflict(
+            lambda: self._apply_batch_once(
+                spark,
+                changes,
+                batch_key=batch_key,
+                write_salt=write_salt,
+                quarantine=quarantine,
+                max_ts=max_ts,
+                commit_rebase_retries=conflict_retries,
+            ),
+            conflict_retries,
+        )
 
     def _apply_batch_once(
         self,
@@ -193,10 +190,9 @@ class Scd2Table:
         existing file is read or rewritten. Returns the new snapshot
         version (or the current one on a ledger skip).
 
-        Conflict REBASE (same as the MOR merge kernel): the appended
-        files are computed from the batch alone, so a lost commit CAS
-        re-reads the head, recomputes only the ledger/schema against it
-        and re-offers the SAME files — never a batch re-run."""
+        The files commit through :func:`~..lake.merge.append_and_rebase`,
+        shared with the MOR merge: a lost commit CAS recomputes only the
+        ledger/schema against the new head and re-offers the SAME files."""
         t0 = time.monotonic()
         snap = self.table.snapshot()
         ledger: dict[str, Any] = dict(snap.props.get(_SCD2_LEDGER_KEY, {}))
@@ -207,11 +203,7 @@ class Scd2Table:
         # schema evolution: new payload columns appended, shared columns
         # may widen (int→long, float→double), key-type changes refused —
         # same contract as merge_changes (lake/merge.py:evolve_fields)
-        table_fields = [f for f in snap.schema().fields if f.name != DELETED_COL]
-        evolved_fields = evolve_fields(table_fields, changes.schema, key_cols, exclude=())
-        evolved_schema = T.StructType(
-            evolved_fields + [T.StructField(DELETED_COL, T.BooleanType(), False)]
-        )
+        evolved_fields = evolve_fields(_business_fields(snap.schema()), changes.schema, key_cols, exclude=())
         staged = align_to_fields(changes, evolved_fields)
         if self.op_col not in staged.columns:
             staged = staged.withColumn(self.op_col, F.lit("U"))
@@ -221,77 +213,34 @@ class Scd2Table:
         # discipline). One pass: garbage rows ride the same write into
         # the _bucket=-1 partition directory and those files are RENAMED
         # into the DLQ instead of committed (the kernel's MOR shape).
-        import os
-
         bad = garbage_predicate(staged.schema, key_cols, order_cols, max_ts)
-        staged = staged.withColumn(
-            "_bucket",
-            F.when(bad, F.lit(-1)).otherwise(
-                F.pmod(F.xxhash64(F.col(key_cols[0])), F.lit(snap.n_buckets)).cast("int")
-            ),
-        )
         staged = staged.select(
-            *[f.name for f in evolved_fields], F.lit(False).alias(DELETED_COL), "_bucket"
+            *[f.name for f in evolved_fields],
+            F.lit(False).alias(DELETED_COL),
+            F.when(bad, F.lit(-1)).otherwise(bucket_of(key_cols[0], snap.n_buckets)).alias("_bucket"),
         )
-        commit_dir, entries = self.table.write_data_files(staged, write_salt=write_salt)
-        dlq = [e for e in entries if e["bucket"] == -1]
-        entries = [e for e in entries if e["bucket"] >= 0]
-        if dlq:
-            qdir = self.table.quarantine_path()
-            os.makedirs(qdir, exist_ok=True)
-            for e in dlq:
-                src = os.path.join(self.table.path, e["path"])
-                if quarantine:
-                    os.rename(src, os.path.join(qdir, os.path.basename(e["path"])))
-                else:
-                    os.remove(src)
-        from ..lake.table import CommitConflict
+        _, entries = self.table.write_data_files(staged, write_salt=write_salt)
 
-        head, head_ledger = snap, ledger
-        while True:
-            if head is not snap:
-                if head.n_buckets != snap.n_buckets:
-                    for e in entries:
-                        try:
-                            os.remove(os.path.join(self.table.path, e["path"]))
-                        except OSError:
-                            pass
-                    raise CommitConflict("bucket spec changed under an SCD2 append")
-                head_ledger = dict(head.props.get(_SCD2_LEDGER_KEY, {}))
-                if batch_key is not None and batch_key in head_ledger:
-                    for e in entries:
-                        try:
-                            os.remove(os.path.join(self.table.path, e["path"]))
-                        except OSError:
-                            pass
-                    return head.version
-            final_fields = evolve_fields(
-                [f for f in head.schema().fields if f.name != DELETED_COL],
-                T.StructType(evolved_fields),
-                key_cols,
-                exclude=(),
+        def commit_args(head) -> dict:
+            fields = evolve_fields(
+                _business_fields(head.schema()), T.StructType(evolved_fields), key_cols, exclude=()
             )
-            final_schema = T.StructType(
-                final_fields + [T.StructField(DELETED_COL, T.BooleanType(), False)]
-            )
-            try:
-                self.table.commit(
-                    new_files=entries,
-                    expected_version=head.version,
-                    schema=final_schema,
-                    props_update={
-                        _SCD2_LEDGER_KEY: _trim_ledger(dict(head_ledger), batch_key, 0, 0),
-                        "delta_buckets": False,  # raw events; reads must NOT LWW-collapse
-                    },
-                    lineage=[{"batch_key": batch_key, "wall_s": round(time.monotonic() - t0, 3)}],
-                )
-                return head.version + 1
-            except CommitConflict:
-                if commit_rebase_retries <= 0:
-                    raise
-                commit_rebase_retries -= 1
-                head = self.table.snapshot()
+            return {
+                "schema": stored_schema(fields),
+                "props_update": {
+                    _SCD2_LEDGER_KEY: _trim_ledger(
+                        dict(head.props.get(_SCD2_LEDGER_KEY, {})), batch_key, 0, 0
+                    ),
+                    "delta_buckets": False,  # raw events; reads must NOT LWW-collapse
+                },
+                "lineage": [{"batch_key": batch_key, "wall_s": round(time.monotonic() - t0, 3)}],
+            }
 
+        version, _ = append_and_rebase(
+            self.table, snap, entries, commit_args, batch_key=batch_key,
+            ledger_key=_SCD2_LEDGER_KEY, quarantine=quarantine, retries=commit_rebase_retries,
+        )
+        return version
 
     # -- read --------------------------------------------------------
 
@@ -343,16 +292,12 @@ class Scd2Table:
         bucket (layout-only: rows are the deduped raw events; history
         semantics are unchanged — asserted by test_compact_preserves_history)."""
         snap = self.table.snapshot()
-        df = self.events(spark).withColumn(
-            "_bucket",
-            F.pmod(F.xxhash64(F.col(snap.key_cols[0])), F.lit(snap.n_buckets)).cast("int"),
-        )
-        df = df.withColumn(DELETED_COL, F.lit(False))
-        commit_dir, entries = self.table.write_data_files(df, write_salt=write_salt)
-        self.table.commit(
-            new_files=entries,
-            replaced_buckets=range(snap.n_buckets),
-            expected_version=snap.version,
+        rewrite_buckets(
+            self.table,
+            snap,
+            self.events(spark).withColumn(DELETED_COL, F.lit(False)),
+            range(snap.n_buckets),
+            write_salt=write_salt,
             lineage=[{"compaction": True}],
         )
         return snap.version + 1

@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..lake.merge import merge_changes
-from ..lake.table import _BLOOM_M_DEFAULT, DELETED_COL, LakeTable, keys_bloom, lww_collapse
+from ..lake.table import _BLOOM_M_DEFAULT, DELETED_COL, LakeTable, bucket_of, keys_bloom, lww_collapse
 
 _CURSOR_PROP = "ivm_src_version"
 
@@ -292,11 +292,7 @@ class IncrementalRollup:
         snap = self.table.snapshot()
         touched = [
             r["b"]
-            for r in deltas.select(
-                F.pmod(F.xxhash64(F.col(self.group_cols[0])), F.lit(snap.n_buckets))
-                .cast("int")
-                .alias("b")
-            )
+            for r in deltas.select(bucket_of(self.group_cols[0], snap.n_buckets).alias("b"))
             .distinct()
             .collect()
         ]
@@ -414,7 +410,7 @@ class IncrementalRollup:
             dirty_buckets = [
                 r["b"]
                 for r in merged.filter(F.col("_dirty"))
-                .select(source.bucket_expr(src_snap.n_buckets, self.group_cols[0]).alias("b"))
+                .select(bucket_of(self.group_cols[0], src_snap.n_buckets).alias("b"))
                 .distinct()
                 .collect()
             ]
@@ -771,9 +767,7 @@ class SketchRollup:
         snap = self.table.snapshot()
         touched = [
             r["b"]
-            for r in win.select(
-                F.pmod(F.xxhash64(F.col(g0)), F.lit(snap.n_buckets)).cast("int").alias("b")
-            )
+            for r in win.select(bucket_of(g0, snap.n_buckets).alias("b"))
             .distinct()
             .collect()
         ]
@@ -804,9 +798,7 @@ class SketchRollup:
         if aligned:
             dirty_buckets = [
                 r["b"]
-                for r in dirty_keys.select(
-                    source.bucket_expr(src_snap.n_buckets, g0).alias("b")
-                )
+                for r in dirty_keys.select(bucket_of(g0, src_snap.n_buckets).alias("b"))
                 .distinct()
                 .collect()
             ]
@@ -1111,9 +1103,7 @@ class JoinRollup:
         if aligned:
             buckets = [
                 r["b"]
-                for r in keys.select(
-                    table.bucket_expr(snap.n_buckets, j0).alias("b")
-                )
+                for r in keys.select(bucket_of(j0, snap.n_buckets).alias("b"))
                 .distinct()
                 .collect()
             ]

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..lake.merge import MergeResult, merge_changes
-from ..lake.table import LakeTable
+from ..lake.table import LakeTable, bucket_of
 from .quality import run_quality_checks
 from .transcripts import build_silver, gold_daily_wide, gold_long, gold_weekly_wide
 
@@ -130,7 +130,7 @@ class MedallionPipeline:
     ) -> LakeTable:
         """Secondary key index for a gold mart: the mart's live key
         tuples, re-bucketed by ``conv_id`` (first key col ⇒
-        ``pmod(xxhash64(conv_id), n_buckets)``, the SAME bucket function
+        ``bucket_of("conv_id", n_buckets)``, the SAME bucket function
         and count as Bronze/Silver, so the batch's in-hand ``affected``
         bucket list prunes it directly). The mart itself stays bucketed
         by day/qgp_week for consumption-time pruning; the index is what
@@ -199,9 +199,7 @@ class MedallionPipeline:
             affected = sorted(
                 r["_b"]
                 for r in batch.filter(F.col("conv_id").isNotNull())
-                .select(
-                    F.pmod(F.xxhash64("conv_id"), F.lit(snap.n_buckets)).cast("int").alias("_b")
-                )
+                .select(bucket_of("conv_id", snap.n_buckets).alias("_b"))
                 .distinct()
                 .collect()
             )
@@ -642,9 +640,7 @@ class MedallionPipeline:
             key_buckets = {
                 int(r["_b"])
                 for r in corrected.filter(F.col("conv_id").isNotNull())
-                .select(
-                    F.pmod(F.xxhash64("conv_id"), F.lit(snap.n_buckets)).cast("int").alias("_b")
-                )
+                .select(bucket_of("conv_id", snap.n_buckets).alias("_b"))
                 .distinct()
                 .collect()
             }

@@ -94,7 +94,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..lake.merge import MergeResult, merge_changes
-from ..lake.table import CommitConflict, LakeTable
+from ..lake.table import LakeTable, bucket_of, retry_on_conflict
 
 BOOTSTRAP_PROP = "bootstrap"
 SENTINEL_LSN = -1
@@ -178,7 +178,8 @@ def bootstrap_begin(
         "chunks": int(chunks),
         "versioned": bool(versioned),
     }
-    for attempt in range(conflict_retries + 1):
+
+    def once() -> dict:
         snap = table.snapshot()
         cur = snap.props.get(BOOTSTRAP_PROP)
         if cur:
@@ -191,18 +192,15 @@ def bootstrap_begin(
                 f"table {table.path} already mid-bootstrap for "
                 f"{cur.get('pipeline_id')}@{cur.get('snapshot_lsn')}; finish or abandon it first"
             )
-        try:
-            table.commit(
-                new_files=[],
-                expected_version=snap.version,
-                props_update={BOOTSTRAP_PROP: marker},
-                lineage=[{"mode": "bootstrap_begin", **marker}],
-            )
-            return marker
-        except CommitConflict:
-            if attempt >= conflict_retries:
-                raise
-    return marker  # unreachable
+        table.commit(
+            new_files=[],
+            expected_version=snap.version,
+            props_update={BOOTSTRAP_PROP: marker},
+            lineage=[{"mode": "bootstrap_begin", **marker}],
+        )
+        return marker
+
+    return retry_on_conflict(once, conflict_retries)
 
 
 def bootstrap_finish(
@@ -210,7 +208,8 @@ def bootstrap_finish(
 ) -> None:
     """Clear the bootstrap marker (props-only commit). No-op if already
     cleared; refuses to clear another pipeline's marker."""
-    for attempt in range(conflict_retries + 1):
+
+    def once() -> None:
         snap = table.snapshot()
         cur = snap.props.get(BOOTSTRAP_PROP)
         if not cur:
@@ -219,17 +218,14 @@ def bootstrap_finish(
             raise RuntimeError(
                 f"bootstrap marker on {table.path} belongs to {cur.get('pipeline_id')!r}"
             )
-        try:
-            table.commit(
-                new_files=[],
-                expected_version=snap.version,
-                props_update={BOOTSTRAP_PROP: None},
-                lineage=[{"mode": "bootstrap_finish", "pipeline_id": pipeline_id}],
-            )
-            return
-        except CommitConflict:
-            if attempt >= conflict_retries:
-                raise
+        table.commit(
+            new_files=[],
+            expected_version=snap.version,
+            props_update={BOOTSTRAP_PROP: None},
+            lineage=[{"mode": "bootstrap_finish", "pipeline_id": pipeline_id}],
+        )
+
+    retry_on_conflict(once, conflict_retries)
 
 
 def apply_snapshot_chunks(
@@ -278,10 +274,7 @@ def apply_snapshot_chunks(
         snapshot_lsn=snapshot_lsn,
         order_cols=tuple(snap.order_cols),
     )
-    bucket = F.coalesce(
-        F.pmod(F.xxhash64(F.col(snap.key_cols[0])), F.lit(n_buckets)).cast("int"),
-        F.lit(0),
-    )
+    bucket = F.coalesce(bucket_of(snap.key_cols[0], n_buckets), F.lit(0))
     results: list[MergeResult] = []
     for i in range(chunks):
         lo, hi = _chunk_bounds(n_buckets, chunks, i)
@@ -329,11 +322,13 @@ def bootstrap_stream(
     landing (both writers race through the version CAS and retry), then
     clears the bootstrap marker and awaits the stream.
 
-    Unversioned mode additionally filters the tail to ``lsn >=
-    snapshot_lsn`` (pushed-down codegen filter) — the sentinel-order
-    exactness argument needs no tail event older than the snapshot
-    consistency point; a versioned snapshot tolerates arbitrary
-    overlap, so the tail passes through unfiltered.
+    Unversioned mode additionally filters the tail to ``order_col >=
+    snapshot_lsn`` (pushed-down codegen filter), where ``order_col`` is
+    the table's last order column (``lsn`` for the default
+    ``["ts", "lsn"]`` order) — the sentinel-order exactness argument
+    needs no tail event older than the snapshot consistency point; a
+    versioned snapshot tolerates arbitrary overlap, so the tail passes
+    through unfiltered.
 
     An optional SCD2 history sink (``history_path=…`` passthrough)
     records only TAILED events: snapshot chunks are state, not history

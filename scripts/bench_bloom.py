@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from digital_analytics_data_platform_spark import datagen
 from digital_analytics_data_platform_spark.lake import LakeTable, merge_changes
+from digital_analytics_data_platform_spark.lake.table import bucket_of
 from digital_analytics_data_platform_spark.session import get_spark
 
 
@@ -67,7 +68,7 @@ def main() -> dict:
     # competent point read already has; bloom's payoff is ON TOP of it
     tgt_bucket = (
         spark.createDataFrame([(target,)], "conv_id string")
-        .select(tbl.bucket_expr(buckets, "conv_id").alias("b"))
+        .select(bucket_of("conv_id", buckets).alias("b"))
         .first()["b"]
     )
 

@@ -99,21 +99,118 @@ def test_merge_retries_through_conflict_and_loses_nothing(spark, make_table, mon
     assert {"b1", "b2", "b3"} <= set(ledger)
 
 
-def test_merge_conflict_exhausts_retries(spark, make_table, monkeypatch):
-    tbl = make_table()
+def _ts(s):
+    import datetime
 
-    def always_conflict(self, **kw):
-        raise CommitConflict("simulated")
+    return datetime.datetime.fromtimestamp(1767225600 + s, tz=datetime.timezone.utc).replace(tzinfo=None)
 
-    monkeypatch.setattr(LakeTable, "commit", always_conflict)
-    with pytest.raises(CommitConflict):
-        merge_changes(
-            spark,
-            tbl,
-            cdc_rows(spark, [("I", "c1", 0, "user", "a", None, 10, 1)]),
-            batch_key="b1",
-            conflict_retries=1,
+
+@pytest.fixture(scope="module")
+def budget_tables(spark, tmp_path_factory):
+    """Tiny tables for the retry-budget pins. Every publish in those tests
+    loses its CAS, so no entry point ever changes these tables."""
+    from types import SimpleNamespace
+
+    from pyspark.sql import types as T
+
+    from digital_analytics_data_platform_spark.operators.patch import PatchTable
+    from digital_analytics_data_platform_spark.operators.scd2 import Scd2Table
+    from digital_analytics_data_platform_spark.streaming.bootstrap import bootstrap_begin
+    from tests.conftest import TRANSCRIPT_SCHEMA
+
+    root = tmp_path_factory.mktemp("budgets")
+
+    def make(name):
+        return LakeTable.create(
+            str(root / name), TRANSCRIPT_SCHEMA, ["conv_id", "turn_idx"], ["ts", "lsn"], n_buckets=4
         )
+
+    tbl = make("t")  # v1 live rows, v2 a tombstone on a MOR delta tail
+    merge_changes(
+        spark, tbl,
+        cdc_rows(spark, [("I", "c1", 0, "user", "a", "x", 10, 1), ("I", "c2", 0, "user", "b", None, 20, 2)]),
+        batch_key="b1", strategy="mor",
+    )
+    merge_changes(
+        spark, tbl, cdc_rows(spark, [("D", "c2", 0, "user", "b", None, 30, 3)]), batch_key="b2", strategy="mor"
+    )
+    boot = make("boot")
+    bootstrap_begin(boot, snapshot_lsn=5, chunks=2, versioned=False)
+    log_schema = T.StructType(
+        [T.StructField("uid", T.StringType()), T.StructField("lsn", T.LongType()), T.StructField("a", T.StringType())]
+    )
+    return SimpleNamespace(
+        tbl=tbl,
+        boot=boot,
+        scd2=Scd2Table.create(
+            str(root / "hist"), TRANSCRIPT_SCHEMA, ["conv_id", "turn_idx"], ["ts", "lsn"], n_buckets=4
+        ),
+        patch=PatchTable.create(str(root / "patch"), log_schema, ["uid"], "lsn", n_buckets=4),
+        log_schema=log_schema,
+    )
+
+
+def _budget_cases():
+    from digital_analytics_data_platform_spark.lake.merge import (
+        delete_where,
+        expire_tombstones,
+        reconcile_backfill,
+        replace_full,
+        rescale_buckets,
+        retention_truncate,
+    )
+    from digital_analytics_data_platform_spark.streaming.bootstrap import bootstrap_begin, bootstrap_finish
+
+    row = ("I", "c3", 0, "user", "c", None, 40, 4)
+    garbage = (None, None, 0, "user", "g", None, 50, 5)  # null key: quarantined, nothing to append
+    cases = [
+        ("merge_cow", 2, lambda s, t: merge_changes(s, t.tbl, cdc_rows(s, [row]), batch_key="x", conflict_retries=1)),
+        ("merge_mor", 4, lambda s, t: merge_changes(
+            s, t.tbl, cdc_rows(s, [row]), batch_key="x", strategy="mor", conflict_retries=1)),
+        ("merge_mor_ledger_only", 4, lambda s, t: merge_changes(
+            s, t.tbl, cdc_rows(s, [garbage]), batch_key="x", strategy="mor", quarantine=False,
+            conflict_retries=1)),
+        ("delete_where", 4, lambda s, t: delete_where(
+            s, t.tbl, "role = 'user'", batch_key="x", conflict_retries=1)),
+        ("compact", 2, lambda s, t: compact(s, t.tbl, conflict_retries=1)),
+        ("rescale_buckets", 2, lambda s, t: rescale_buckets(s, t.tbl, 2, conflict_retries=1)),
+        ("replace_full", 2, lambda s, t: replace_full(
+            s, t.tbl, cdc_rows(s, [row]), batch_key="x", conflict_retries=1)),
+        ("reconcile_backfill", 2, lambda s, t: reconcile_backfill(
+            s, t.tbl, cdc_rows(s, [row]), _ts(0), _ts(100), batch_key="x", conflict_retries=1)),
+        ("expire_tombstones", 2, lambda s, t: expire_tombstones(s, t.tbl, older_than_lsn=10, conflict_retries=1)),
+        ("retention_truncate", 2, lambda s, t: retention_truncate(s, t.tbl, _ts(15), conflict_retries=1)),
+        ("rename_column", 2, lambda s, t: t.tbl.rename_column("text", "body", conflict_retries=1)),
+        ("drop_column", 2, lambda s, t: t.tbl.drop_column("tool", conflict_retries=1)),
+        ("rollback", 2, lambda s, t: t.tbl.rollback(1, conflict_retries=1)),
+        ("bootstrap_begin", 2, lambda s, t: bootstrap_begin(
+            t.tbl, snapshot_lsn=5, chunks=2, versioned=False, conflict_retries=1)),
+        ("bootstrap_finish", 2, lambda s, t: bootstrap_finish(t.boot, conflict_retries=1)),
+        ("scd2_apply_batch", 4, lambda s, t: t.scd2.apply_batch(
+            s, cdc_rows(s, [row]), batch_key="x", conflict_retries=1)),
+        ("patch_apply_batch", 2, lambda s, t: t.patch.apply_batch(
+            s, s.createDataFrame([("u1", 1, "v")], t.log_schema), batch_key="x", conflict_retries=1)),
+    ]
+    return [pytest.param(fn, attempts, id=name) for name, attempts, fn in cases]
+
+
+@pytest.mark.parametrize("call, attempts", _budget_cases())
+def test_conflict_retry_budget(spark, budget_tables, monkeypatch, call, attempts):
+    """Pins how many publishes each writer makes at ``conflict_retries=1``
+    when every publish loses its CAS, and that the last conflict
+    propagates. A plain re-run makes 2; the MOR merge (and delete_where,
+    which goes through it) and the SCD2 sink make 4, because their
+    rebase loop sits inside the outer re-run."""
+    published = []
+
+    def lose(self, snap):
+        published.append(snap.version)
+        raise CommitConflict("simulated lost CAS")
+
+    monkeypatch.setattr(LakeTable, "_write_snapshot", lose)
+    with pytest.raises(CommitConflict):
+        call(spark, budget_tables)
+    assert len(published) == attempts
 
 
 def test_compact_retries_when_apply_wins_the_race(spark, make_table, monkeypatch):
@@ -464,16 +561,27 @@ def test_mor_rebase_merges_concurrent_schema_evolution(spark, make_table, monkey
     assert rows["c0"] == (None, None)
 
 
+@pytest.mark.parametrize(
+    "race, batch_col, c1_value, physical",
+    [
+        # a concurrent drop retires the physical column the staged files wrote
+        pytest.param("drop", "tool", None, "tool__v2", id="drop"),
+        # a concurrent rename only ADDS a mapping entry, yet it rebinds the
+        # batch's `label` from a fresh physical column to the renamed `tool`
+        pytest.param("rename", "label", "browser", "tool", id="rename"),
+    ],
+)
 def test_mor_rebase_falls_back_on_concurrent_column_mapping_change(
-    spark, make_table, monkeypatch
+    spark, make_table, monkeypatch, race, batch_col, c1_value, physical
 ):
-    """r4 ADVICE: a MOR loser's staged files bound logical→physical names
-    against the STALE snapshot's column_mapping. If the lost CAS was a
-    concurrent drop_column, re-offering those files would write into the
-    just-retired physical column (silently invisible). The rebase must
-    detect the mapping change and fall back to the full re-run — after
-    which the batch's values land in the fresh physical column and stay
-    visible at the logical name."""
+    """A MOR loser's staged files bound logical→physical names against the
+    STALE snapshot's column_mapping. If the lost CAS was a concurrent
+    drop_column, re-offering those files would write into the
+    just-retired physical column (silently invisible); if it was a
+    rename onto the batch's column name, they would fork that logical
+    name across two physical columns. The rebase must detect any mapping
+    change and fall back to the full re-run — after which the batch's
+    values land in the physical column the logical name binds to now."""
     import glob
 
     tbl = make_table()
@@ -493,24 +601,27 @@ def test_mor_rebase_falls_back_on_concurrent_column_mapping_change(
     def racing_commit(self, **kw):
         if counts["races"] == 0 and kw.get("new_files"):
             counts["races"] = 1
-            tbl.drop_column("tool")
+            if race == "drop":
+                tbl.drop_column("tool")
+            else:
+                tbl.rename_column("tool", "label")
         return real_commit(self, **kw)
 
+    batch = cdc_rows(spark, [("I", "c2", 0, "tool", "b", "terminal", 20, 2)]).withColumnRenamed("tool", batch_col)
     monkeypatch.setattr(LakeTable, "write_data_files", counting_write)
     monkeypatch.setattr(LakeTable, "commit", racing_commit)
-    res = merge_changes(
-        spark, tbl, cdc_rows(spark, [("I", "c2", 0, "tool", "b", "terminal", 20, 2)]),
-        batch_key="b2", strategy="mor", conflict_retries=2,
-    )
+    res = merge_changes(spark, tbl, batch, batch_key="b2", strategy="mor", conflict_retries=2)
     monkeypatch.undo()
     assert not res.skipped and counts["races"] == 1
     assert counts["writes"] == 2, "mapping change must force the full re-run, not a rebase"
 
     snap = tbl.snapshot()
-    assert snap.physical_of("tool") == "tool__v2", snap.mapping()
-    vals = {r["conv_id"]: r["tool"] for r in tbl.read(spark).select("conv_id", "tool").collect()}
-    assert vals["c2"] == "terminal", "post-drop batch value invisible (landed in retired column)"
-    assert vals["c1"] is None, "dropped value resurrected"
+    assert snap.physical_of(batch_col) == physical, snap.mapping()
+    out = tbl.read(spark)
+    assert out.columns.count(batch_col) == 1, out.columns
+    vals = {r["conv_id"]: r[batch_col] for r in out.select("conv_id", batch_col).collect()}
+    assert vals["c2"] == "terminal", "batch value invisible (landed in a stale physical column)"
+    assert vals["c1"] == c1_value
 
     # the abandoned first-attempt files were deleted, not orphaned
     manifest_files = {f["path"] for f in snap.files}

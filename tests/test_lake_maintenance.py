@@ -8,6 +8,7 @@ import os
 from pyspark.sql import functions as F
 
 from digital_analytics_data_platform_spark.lake import LakeTable, compact, merge_changes
+from digital_analytics_data_platform_spark.lake.table import bucket_of
 from tests.conftest import cdc_rows
 
 
@@ -83,7 +84,7 @@ def test_remove_orphan_files(spark, make_table):
     # manifest never publishes them
     batch = cdc_rows(spark, [("I", "c9", 0, "user", "orphan", None, 99, 9)])
     staged = batch.withColumn("_deleted", F.lit(False)).drop("op").withColumn(
-        "_bucket", tbl.bucket_expr(tbl.snapshot().n_buckets)
+        "_bucket", bucket_of("conv_id", tbl.snapshot().n_buckets)
     )
     tbl.write_data_files(staged)
     pre = _parquet_count(tbl.path)

@@ -385,6 +385,7 @@ def test_adaptive_compaction_folds_only_hot_buckets(spark, make_table, tmp_path,
     while every cold bucket is never touched (read amplification
     bounded per bucket, compaction I/O proportional to churn)."""
     import digital_analytics_data_platform_spark.streaming.runner as runner_mod
+    from digital_analytics_data_platform_spark.lake.table import bucket_of
     from tests.conftest import cdc_rows
 
     tbl = make_table(n_buckets=32)
@@ -394,7 +395,7 @@ def test_adaptive_compaction_folds_only_hot_buckets(spark, make_table, tmp_path,
     bk = {
         r["conv_id"]: r["b"]
         for r in spark.createDataFrame([(c,) for c in cands], "conv_id string")
-        .select("conv_id", tbl.bucket_expr(32, "conv_id").alias("b"))
+        .select("conv_id", bucket_of("conv_id", 32).alias("b"))
         .collect()
     }
     hot_b = bk["hotconv"]
