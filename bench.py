@@ -303,8 +303,8 @@ def run_apply_bench(
 
 
 def run_pipeline_bench(spark, n_events: int, n_batches: int, n_buckets: int) -> dict:
-    """Full medallion apply (Bronze→Silver→Gold ×4 marts + key
-    indexes + in-hand QA) per batch — the production path whose
+    """Full medallion apply (Bronze→Silver→Gold ×4 marts + in-hand
+    QA) per batch — the production path whose
     per-batch cost must be O(touched), not O(table). Reported
     separately from the kernel-level cdc_apply so a fixed-cost
     regression (full-table scans per batch) shows up as a wall number,
@@ -355,15 +355,15 @@ def run_pipeline_bench(spark, n_events: int, n_batches: int, n_buckets: int) -> 
     # noise — 2% of cpu-time is the honest line. Gating only the
     # median batch would let a run whose other batches were heavily
     # stolen still stamp valid (r4 ADVICE).
-    steal_bound = max(STEAL_VALID_CPU_S, 0.02 * med * cpus)
-    all_valid = all(
-        s <= max(STEAL_VALID_CPU_S, 0.02 * w * cpus) for w, s in zip(walls, steals)
-    )
+    bounds = [max(STEAL_VALID_CPU_S, 0.02 * w * cpus) for w in walls]
+    steal_bound = bounds[walls.index(med)]
+    all_valid = all(s <= b for s, b in zip(steals, bounds))
     return {
         "pipeline_events": n_events,
         "pipeline_batches": n_batches,
         "pipeline_batch_walls_s": [round(w, 3) for w in walls],
         "pipeline_batch_steal_cpu_s": [round(s, 1) for s in steals],
+        "pipeline_batch_steal_bound_cpu_s": [round(b, 1) for b in bounds],
         "pipeline_events_per_sec_median": round(per_batch_events / med, 1),
         "pipeline_events_per_sec_steal_adj": round(per_batch_events / adj_wall, 1),
         "pipeline_steal_bound_cpu_s": round(steal_bound, 1),
@@ -451,7 +451,7 @@ def main() -> None:
     ]
     apply_stats.update({f"calm_{k}" if not k.startswith("calm") else k: v for k, v in calm.items()})
 
-    # full medallion path (marts + key indexes + QA) at a smaller event
+    # full medallion path (Silver, 4 marts + QA) at a smaller event
     # count — it recomputes gold per batch, so per-event cost is higher
     # than the kernel apply by design; what's graded is that the
     # per-batch wall stays flat as the TABLE grows (O(touched) claim)

@@ -205,7 +205,10 @@ class Scd2Table:
         # same contract as merge_changes (lake/merge.py:evolve_fields)
         evolved_fields = evolve_fields(_business_fields(snap.schema()), changes.schema, key_cols, exclude=())
         staged = align_to_fields(changes, evolved_fields)
-        if self.op_col not in staged.columns:
+        # default from the INCOMING columns: align_to_fields has already
+        # added the table's own op column as NULL, which would reject
+        # every row as garbage
+        if self.op_col not in changes.columns:
             staged = staged.withColumn(self.op_col, F.lit("U"))
 
         # same garbage definition as the MERGE kernel; rejects go to the

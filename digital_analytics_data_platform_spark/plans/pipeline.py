@@ -6,17 +6,26 @@ Orchestration/00_sdi_sa360_paid_search_sp_call.sql:1-17`` →
 ``sql/02_SDI_SA360/…/Orchestration``).
 
 Incremental contract (the reference's lookback-window discipline,
-SURVEY.md §2.9): downstream layers recompute only the partitions the
-Bronze batch touched —
+SURVEY.md §2.9), priced by the batch rather than the table:
 
-- Silver is keyed like Bronze (``conv_id, turn_idx``); the batch's
-  affected key-hash buckets are re-derived from Bronze state and
-  MERGEd, so an update to one turn re-enriches only its bucket.
-- Gold daily/weekly are keyed on (day/qgp_week, conv_id); the affected
-  ``(conv_id)`` set scopes the re-aggregation: Gold rows for touched
-  conversations are recomputed from Silver and MERGEd (the analog of
-  "gold daily wide MERGE with 14d lookback" — scoping by touched keys
-  instead of by wall-clock window, which is strictly tighter).
+- **Silver from the batch.** Silver is a per-row map of Bronze
+  (:func:`build_silver`: classification, text metrics, an as-of join to
+  a static dimension) with Bronze's key (``conv_id, turn_idx``) and LWW
+  order (``ts, lsn``). So the batch's own clean events merge straight
+  into Silver, ``D`` events as tombstones, in one merge: LWW keeps the
+  same winning event per key in both tables, and the map of the winner
+  is the winner of the map. Rows ``garbage_predicate`` rejects are
+  dropped first, because Bronze's DLQ already holds them.
+- **Gold from Silver's changelog.** Each mart commits the Silver version
+  it reflects (its cursor) in the same atomic commit as its merge. A
+  batch reads Silver's before/after-image changelog since the cursors;
+  the ``(qgp_week, conv_id)`` groups the images name are the dirty
+  groups. Gold recomputes those groups from Silver, bucket-pruned to
+  their conversations, and tombstones the mart keys in them that the
+  recompute no longer yields (the reference's scoped ``WHEN NOT MATCHED
+  BY SOURCE … DELETE``). A delete or a day-moving update names its
+  turn's OLD day in the before-image, so reading only the mart buckets
+  of the dirty days/weeks finds every row to tombstone.
 
 Every layer write goes through the same exactly-once MERGE kernel as
 Bronze, so replaying a batch is a no-op at every layer.
@@ -31,10 +40,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..lake.merge import MergeResult, merge_changes
-from ..lake.table import LakeTable, bucket_of
+from ..lake.merge import _LEDGER_KEY, MergeResult, align_to_fields, garbage_predicate, merge_changes
+from ..lake.table import DELETED_COL, LakeTable, bucket_of
+from ..operators.calendar import qgp_week
 from .quality import run_quality_checks
-from .transcripts import build_silver, gold_daily_wide, gold_long, gold_weekly_wide
+from .transcripts import LONG_METRICS, build_silver, gold_daily_wide, gold_long, gold_weekly_wide
+
+# Table prop each gold mart commits atomically with its merge: the Silver
+# version the mart reflects (the `IncrementalRollup.sync` cursor pattern).
+_CURSOR_PROP = "silver_version"
+# (mart, key columns); a mart buckets by its first key column
+_MARTS = (
+    ("gold_daily", ["day", "conv_id"]),
+    ("gold_weekly", ["qgp_week", "conv_id"]),
+    ("gold_daily_long", ["day", "conv_id", "metric_name"]),
+    ("gold_weekly_long", ["qgp_week", "conv_id", "metric_name"]),
+)
+# Silver columns gold_daily_wide reads besides the conv_id key, ts and lsn
+# included: a change confined to any other column moves no mart.
+_GOLD_INPUTS = ["day", "role", "n_tokens", "turn_kind", "ts", "lsn"]
 
 
 @dataclass
@@ -51,7 +75,7 @@ class MedallionResult:
 
 
 class MedallionPipeline:
-    """Owns the four lake tables and applies CDC batches through them."""
+    """Owns the medallion's lake tables and applies CDC batches through them."""
 
     def __init__(
         self,
@@ -89,7 +113,7 @@ class MedallionPipeline:
         # snapshot manifests (keeping the newest ``keep_snapshots`` per
         # table — this also bounds the read_changes changelog window and
         # time-travel horizon) and vacuum uncommitted-write orphans. The
-        # pipeline writes ~3 manifests/batch across ~10 tables, so an
+        # pipeline writes one manifest per table per batch, so an
         # unexpired 10^10-event replay would accumulate O(100k) manifest
         # files each carrying a full file list; the cadence keeps the
         # metadata O(keep_snapshots). 0 disables (caller schedules
@@ -125,55 +149,15 @@ class MedallionPipeline:
             n_buckets=self.n_buckets,
         )
 
-    def _ensure_keyidx(
-        self, spark: SparkSession, layer: str, keys: list[str], gold_tbl: LakeTable
-    ) -> LakeTable:
-        """Secondary key index for a gold mart: the mart's live key
-        tuples, re-bucketed by ``conv_id`` (first key col ⇒
-        ``bucket_of("conv_id", n_buckets)``, the SAME bucket function
-        and count as Bronze/Silver, so the batch's in-hand ``affected``
-        bucket list prunes it directly). The mart itself stays bucketed
-        by day/qgp_week for consumption-time pruning; the index is what
-        makes the scoped-delete "which keys already exist for these
-        conversations" lookup O(touched buckets) instead of an O(table
-        files) keys-only skim per mart per batch — the last per-batch
-        full-table read in the pipeline.
-
-        Maintained with the SAME ledgered LWW merge as the mart (same
-        change-set keys, same ``op`` tombstones, same ``_order``), so
-        replay/crash recovery are idempotent by construction; the
-        scheduled :meth:`run_full_audit` cross-checks index vs mart.
-
-        Bootstrap: if the mart predates its index (upgrade path), the
-        index is seeded from one full mart scan — a one-time migration
-        cost, ledgered under ``<layer>_keyidx:seed``. The seed is
-        re-attempted whenever the index exists with ZERO commits while
-        the mart has data (version stays 0 only until the first merge),
-        so a crash between ``LakeTable.create`` publishing the empty
-        snapshot and the seed merge committing cannot leave an
-        accepted-but-empty index; the ledgered seed key plus LWW make
-        the retry idempotent.
-        """
-        path = self._path(layer + "_keyidx")
-        idx_keys = ["conv_id"] + [k for k in keys if k != "conv_id"]
-        if LakeTable.exists(path):
-            idx_tbl = LakeTable.load(path)
-        else:
-            gold_schema = gold_tbl.snapshot().schema()
-            idx_tbl = LakeTable.create(
-                path,
-                T.StructType(
-                    [gold_schema[k] for k in idx_keys]
-                    + [T.StructField("_order", T.LongType(), True)]
-                ),
-                idx_keys,
-                ["_order"],
-                n_buckets=self.n_buckets,
-            )
-        if idx_tbl.snapshot().version == 0 and gold_tbl.snapshot().files:
-            seed = gold_tbl.read(spark).select(*idx_keys, "_order")
-            merge_changes(spark, idx_tbl, seed, batch_key=f"{layer}_keyidx:seed", strategy="cow")
-        return idx_tbl
+    def _cursors(self) -> dict[str, int]:
+        """Each gold mart's Silver cursor; 0 for a mart not created yet,
+        whose first refresh reads Silver from its empty version 0."""
+        out = {}
+        for name, _ in _MARTS:
+            path = self._path(name)
+            exists = LakeTable.exists(path)
+            out[name] = int(LakeTable.load(path).snapshot().props.get(_CURSOR_PROP, 0)) if exists else 0
+        return out
 
     # -- apply -------------------------------------------------------------
 
@@ -188,26 +172,17 @@ class MedallionPipeline:
             # Replay of an already-ledgered batch: Bronze is a no-op, but a
             # crash between the Bronze commit and the downstream merges
             # would otherwise leave Silver/Gold permanently missing this
-            # batch. Fast path: if every downstream ledger already holds
-            # this batch, the replay is FREE (the common at-least-once
-            # redelivery case) — only a genuine crash recovery pays the
-            # rebuild. Each downstream layer's own ledger key still makes
-            # already-completed merges no-ops during that rebuild.
+            # batch. Fast path: if Silver holds the batch and every mart
+            # has synced to Silver's head, the replay is FREE (the common
+            # at-least-once redelivery case) — only a genuine crash
+            # recovery re-runs the layers, where each layer's own ledger
+            # key makes already-completed merges no-ops.
             if self._downstream_applied(batch_id):
                 return out
-            snap = bronze_tbl.snapshot()
-            affected = sorted(
-                r["_b"]
-                for r in batch.filter(F.col("conv_id").isNotNull())
-                .select(bucket_of("conv_id", snap.n_buckets).alias("_b"))
-                .distinct()
-                .collect()
-            )
-        else:
-            affected = res_b.affected_buckets
-        if not affected:
-            return out
-        self._rebuild_downstream(spark, bronze_tbl, affected, batch_id, out)
+        elif not res_b.affected_buckets:
+            return out  # no clean event in the batch
+        silver_tbl = self._merge_silver(spark, bronze_tbl, batch, batch_id, out)
+        self._refresh_gold(spark, bronze_tbl, silver_tbl, batch_id, out)
         if self.full_audit_every:
             self._batches_since_audit += 1
             if self._batches_since_audit >= self.full_audit_every:
@@ -222,12 +197,14 @@ class MedallionPipeline:
 
     def run_maintenance(self, *, keep_snapshots: int | None = None, grace_seconds: float = 3600.0) -> list:
         """Expire old snapshots and vacuum orphan files on every table
-        the pipeline owns (marts, key indexes, bronze/silver). Driver-
-        side manifest arithmetic only — no Spark jobs. Exactly-once
-        ledgers live in each table's CURRENT snapshot props, so expiry
-        never weakens replay idempotence; it only bounds how far back
-        time travel / read_changes can reach."""
+        the pipeline owns. Driver-side manifest arithmetic only — no
+        Spark jobs. Exactly-once ledgers live in each table's CURRENT
+        snapshot props, so expiry never weakens replay idempotence; it
+        only bounds how far back time travel / read_changes can reach.
+        Silver keeps every snapshot from the lowest mart cursor on: the
+        next gold refresh reads Silver's changelog from there."""
         keep = keep_snapshots or self.keep_snapshots
+        floor = min(self._cursors().values())
         stats = []
         for name in sorted(os.listdir(self.base_dir)):
             path = self._path(name)
@@ -235,7 +212,9 @@ class MedallionPipeline:
                 continue
             tbl = LakeTable.load(path)
             s = {"table": name}
-            s.update(tbl.expire_snapshots(keep_last=keep))
+            s.update(tbl.expire_snapshots(
+                keep_last=keep, protect_versions_since=floor if name == "silver" else None
+            ))
             orphans = tbl.remove_orphan_files(grace_seconds=grace_seconds)
             s.update({f"orphan_{k}": v for k, v in orphans.items()})
             stats.append(s)
@@ -306,188 +285,149 @@ class MedallionPipeline:
         return out
 
     def _downstream_applied(self, batch_id) -> bool:
-        """True iff every downstream layer's exactly-once ledger already
-        records this batch (driver-side JSON reads — no Spark jobs).
-        Conservative: a trimmed ledger entry or missing table reads as
-        not-applied, which only costs an idempotent rebuild. The gold
-        KEY INDEXES are checked too: each mart's index merges AFTER the
-        mart itself, so a crash in that window would otherwise leave
-        the fast path satisfied while the index is missing the batch's
-        keys — desyncing every later scoped delete for them. (Per-batch
-        QA rows are deliberately NOT gated on: they're observability,
-        idempotently re-writable, and covered by the scheduled audit.)"""
-        from ..lake.merge import _LEDGER_KEY
+        """True iff Silver's ledger records this batch and every mart's
+        cursor has reached Silver's head (driver-side JSON reads — no
+        Spark jobs). Conservative: a trimmed ledger entry or a missing
+        table reads as not-applied, which only costs an idempotent
+        re-run. (Per-batch QA rows are deliberately NOT gated on:
+        they're observability, idempotently re-writable, and covered by
+        the scheduled audit.)"""
+        path = self._path("silver")
+        if not LakeTable.exists(path):
+            return False
+        snap = LakeTable.load(path).snapshot()
+        if f"silver:{batch_id}" not in snap.props.get(_LEDGER_KEY, {}):
+            return False
+        return min(self._cursors().values()) >= snap.version
 
-        marts = ("gold_daily", "gold_weekly", "gold_daily_long", "gold_weekly_long")
-        for layer in ("silver",) + marts:
-            if not LakeTable.exists(self._path(layer)):
-                return False
-            ledger = LakeTable.load(self._path(layer)).snapshot().props.get(_LEDGER_KEY, {})
-            if f"{layer}:{batch_id}" not in ledger:
-                return False
-        for layer in marts:
-            idx_path = self._path(layer + "_keyidx")
-            if not LakeTable.exists(idx_path):
-                return False
-            ledger = LakeTable.load(idx_path).snapshot().props.get(_LEDGER_KEY, {})
-            if f"{layer}_keyidx:{layer}:{batch_id}" not in ledger:
-                return False
-        return True
+    def _merge_silver(
+        self, spark: SparkSession, bronze_tbl: LakeTable, batch: DataFrame, batch_id, out: MedallionResult
+    ) -> LakeTable:
+        """Silver from the batch: its clean events, aligned to Bronze's
+        columns as the Bronze merge stages them, mapped by build_silver
+        and merged in one go (``D`` events become tombstones)."""
+        snap = bronze_tbl.snapshot()
+        fields = [
+            T.StructField(snap.logical_of(f.name), f.dataType)
+            for f in snap.schema().fields
+            if f.name != DELETED_COL and snap.logical_of(f.name) is not None
+        ]
+        staged = align_to_fields(batch, fields)
+        if "op" not in staged.columns:
+            staged = staged.withColumn("op", F.lit("U"))
+        clean = staged.filter(~garbage_predicate(staged.schema, snap.key_cols, snap.order_cols))
+        rows = build_silver(clean.select(*[f.name for f in fields], "op"), self.conv_dim)
+        silver_tbl = self._ensure("silver", rows, snap.key_cols, snap.order_cols)
+        out.silver = merge_changes(
+            spark, silver_tbl, rows, batch_key=f"silver:{batch_id}", strategy=self.strategy
+        )
+        return silver_tbl
 
-    def _rebuild_downstream(
-        self, spark: SparkSession, bronze_tbl: LakeTable, affected: list[int],
+    def _refresh_gold(
+        self, spark: SparkSession, bronze_tbl: LakeTable, silver_tbl: LakeTable,
         batch_id, out: MedallionResult,
     ) -> None:
-        """Silver/Gold recompute scoped to the touched Bronze buckets —
-        shared by the normal apply path and the reconcile backfill."""
-        # ---- Silver: re-enrich only the touched Bronze buckets ----------
-        from ..lake.table import DELETED_COL
-
-        touched_all = bronze_tbl.read(spark, buckets=affected, include_deleted=True)
-        touched = touched_all.filter(~F.col(DELETED_COL)).drop(DELETED_COL)
-        silver_rows = build_silver(touched, self.conv_dim)
-        # carry lsn as the LWW order (same total order as Bronze)
-        silver_tbl = self._ensure(
-            "silver", silver_rows, ["conv_id", "turn_idx"], ["ts", "lsn"]
+        """Recompute the gold groups Silver's changelog marks dirty, merge
+        them into every mart with the mart's new cursor, then run the
+        per-batch QA over the same scope."""
+        head = silver_tbl.snapshot()
+        lagging = sorted({c for c in self._cursors().values() if c < head.version})
+        if not lagging:
+            return
+        # One changelog per distinct cursor, not one from the lowest: a
+        # turn inserted after a lagging cursor and deleted again by head
+        # nets out of the longer window (both images null), yet a mart
+        # that synced in between counted it. Cursors only differ after a
+        # crash between mart merges, so a batch reads one changelog.
+        imgs, touched = None, set()
+        for since in lagging:
+            clog = silver_tbl.read_changelog(
+                spark, since_version=since, until_version=head.version, columns=_GOLD_INPUTS
+            )
+            named = clog.select("conv_id", F.explode(F.array("before.day", "after.day")).alias("day"))
+            imgs = named if imgs is None else imgs.unionByName(named)
+            # every changed key has a file written since the cursor, so
+            # the buckets of those files hold every dirty conversation
+            old = {f["path"] for f in silver_tbl.snapshot(since).files}
+            touched |= {f["bucket"] for f in head.files if f["path"] not in old}
+        dirty = (
+            imgs.filter(F.col("day").isNotNull())
+            .distinct()
+            .withColumn("qgp_week", qgp_week(F.col("day")))
+            .persist()
         )
-        res_s = merge_changes(
-            spark, silver_tbl, silver_rows, batch_key=f"silver:{batch_id}", strategy=self.strategy
-        )
-        out.silver = res_s
-
-        # Deletes don't appear in Bronze reads; propagate tombstones so a
-        # turn deleted upstream disappears downstream too.
-        self._propagate_deletes(spark, bronze_tbl, silver_tbl, affected, batch_id)
-        self._rebuild_gold(spark, bronze_tbl, silver_tbl, touched_all, batch_id, out, affected=affected)
-
-    def _rebuild_gold(
-        self, spark: SparkSession, bronze_tbl: LakeTable, silver_tbl: LakeTable,
-        touched_all: DataFrame, batch_id, out: MedallionResult,
-        extra_conv_keys: DataFrame | None = None,
-        affected: list[int] | None = None,
-    ) -> None:
-        # ---- Gold: recompute touched conversations from Silver ----------
+        weeks = dirty.select("qgp_week", "conv_id").distinct()
+        silver_scoped = silver_tbl.read(spark, buckets=sorted(touched), snapshot_version=head.version)
         # `_order` is the apply sequence (Bronze snapshot version), NOT
         # max(lsn): a recompute after a delete can have a *lower* max
         # lsn, and LWW on lsn would then keep the stale row. The apply
         # sequence is monotone per batch, so later recomputes always win.
-        apply_seq = bronze_tbl.snapshot().version
-        # scope includes tombstoned conversations (a fully-deleted conv
-        # must still drive gold scoped deletes), hence touched_all.
-        # No broadcast hint: the touched set is O(batch keys) — unbounded
-        # at 100M-event batches. AQE picks broadcast when it's actually
-        # small.
-        conv_keys = touched_all.select("conv_id").distinct()
-        if extra_conv_keys is not None:
-            # reconcile passes the PRE-replace window conversations here:
-            # a conversation the correction removed entirely no longer
-            # appears in any post-replace bronze read, but its gold rows
-            # must still be scope-deleted
-            conv_keys = conv_keys.unionByName(extra_conv_keys).distinct()
-        # Bucket-pruned Silver read: Silver is bucketed by
-        # xxhash64(conv_id) with the SAME bucket count as Bronze
-        # (_ensure passes self.n_buckets), and a conversation's bucket is
-        # a function of conv_id alone — so every row of every touched
-        # conversation lives inside the `affected` bucket list already in
-        # hand. Reading only those files makes the gold rebuild
-        # O(touched buckets) instead of O(table) per batch — at 100×
-        # scale the full-silver scan here was the pipeline's dominant
-        # fixed cost. The semi-join still scopes to exactly the touched
-        # conversations (a bucket holds other conversations too).
-        same_layout = (
-            affected is not None
-            and silver_tbl.snapshot().n_buckets == bronze_tbl.snapshot().n_buckets
-        )
-        silver_scoped = (
-            silver_tbl.read(spark, buckets=affected) if same_layout else silver_tbl.read(spark)
-        )
-        silver_state = silver_scoped.join(conv_keys, "conv_id", "left_semi")
-        # `affected` was derived with Bronze's bucket function; it prunes
-        # a conv-bucketed key index only if the index has the SAME bucket
-        # count (checked per-index in _merge_gold_with_index).
-        bronze_n = bronze_tbl.snapshot().n_buckets
-        idx_affected = (affected, bronze_n) if affected is not None else None
-        # The daily frame feeds FOUR mart lineages (daily, weekly, both
-        # longs) plus QA; without a persist each one re-runs the silver
-        # scan + gold aggregation — ~6 redundant executions of the
-        # batch's most expensive lineage. Both frames are O(touched).
-        daily = gold_daily_wide(silver_state).withColumn(
-            "_order", F.lit(apply_seq).cast("long")
+        seq = bronze_tbl.snapshot().version
+        apply_seq = F.lit(seq).cast("long")
+        # A dirty week's recompute spans all its days, so the daily frame
+        # is exact for every (day, conv_id) group it holds; both frames
+        # feed two marts and QA, hence the persists.
+        daily = gold_daily_wide(
+            silver_scoped.join(weeks, ["qgp_week", "conv_id"], "left_semi")
         ).persist()
-        weekly = None
+        weekly = gold_weekly_wide(daily).persist()
+        frames = {
+            "gold_daily": daily,
+            "gold_weekly": weekly,
+            "gold_daily_long": gold_long(daily, ["day", "conv_id"]),
+            "gold_weekly_long": gold_long(weekly, ["qgp_week", "conv_id"]),
+        }
+        metrics = F.explode(F.array(*[F.lit(m) for m in LONG_METRICS])).alias("metric_name")
         try:
-            gold_d_tbl = self._ensure("gold_daily", daily, ["day", "conv_id"], ["_order"])
-            out.gold_daily = self._merge_gold_with_index(
-                spark, "gold_daily", gold_d_tbl, daily, ["day", "conv_id"],
-                conv_keys, apply_seq, f"gold_daily:{batch_id}", idx_affected,
-            )
-            weekly = gold_weekly_wide(daily.drop("_order")).withColumn(
-                "_order", F.lit(apply_seq).cast("long")
-            ).persist()
-            gold_w_tbl = self._ensure("gold_weekly", weekly, ["qgp_week", "conv_id"], ["_order"])
-            out.gold_weekly = self._merge_gold_with_index(
-                spark, "gold_weekly", gold_w_tbl, weekly, ["qgp_week", "conv_id"],
-                conv_keys, apply_seq, f"gold_weekly:{batch_id}", idx_affected,
-            )
-
-            # ---- Gold long shapes: same MERGE discipline, key extended with
-            # metric_name (the reference ships every mart daily/weekly ×
-            # wide/long, ``sql/02_SDI_SA360/README.md:27-32``; long-mart MERGE
-            # keys per ``…daily_long.sql:70-73``).
-            daily_long = gold_long(daily.drop("_order"), ["day", "conv_id"]).withColumn(
-                "_order", F.lit(apply_seq).cast("long")
-            )
-            out.gold_daily_long = self._merge_long(
-                spark, "gold_daily_long", daily_long, ["day", "conv_id"],
-                conv_keys, apply_seq, f"gold_daily_long:{batch_id}", idx_affected,
-            )
-            weekly_long = gold_long(weekly.drop("_order"), ["qgp_week", "conv_id"]).withColumn(
-                "_order", F.lit(apply_seq).cast("long")
-            )
-            out.gold_weekly_long = self._merge_long(
-                spark, "gold_weekly_long", weekly_long, ["qgp_week", "conv_id"],
-                conv_keys, apply_seq, f"gold_weekly_long:{batch_id}", idx_affected,
-            )
+            for name, keys in _MARTS:
+                # Deletion candidates need no mart read: a group a mart
+                # holds at its cursor and loses by head lost every row it
+                # had, and each of those rows' before-images names it.
+                groups = (dirty if keys[0] == "day" else weeks).select(*keys[:2])
+                if len(keys) > 2:
+                    groups = groups.select("*", metrics)
+                recomputed = frames[name].withColumn("_order", apply_seq)
+                gone = groups.join(recomputed.select(*keys), keys, "left_anti").select(
+                    *keys, F.lit("D").alias("op"), apply_seq.alias("_order")
+                )
+                setattr(out, name, merge_changes(
+                    spark,
+                    self._ensure(name, recomputed, keys, ["_order"]),
+                    recomputed.withColumn("op", F.lit("U")).unionByName(gone, allowMissingColumns=True),
+                    batch_key=f"{name}:{batch_id}", strategy="cow", extra_props={_CURSOR_PROP: head.version},
+                ))
 
             if self.run_qa:
-                # Per-batch QA reads O(touched) data, not O(table): bronze and
-                # silver prune to the touched buckets, the gold marts scope to
-                # the touched conversations. Every cross-layer reconciliation
-                # (silver_rows_eq_bronze, weekly_eq_sum_daily, long_eq_wide)
-                # compares BOTH sides under the same scope, so the invariants
-                # hold batch-locally. The unscoped audit still exists — as a
+                # Per-batch QA reads O(dirty) data: Bronze and Silver
+                # scoped to the dirty conversations (so silver_rows_eq_bronze
+                # checks Silver-from-the-batch against Bronze), the gold side
+                # on the recomputed frames in hand — zero gold table reads
+                # per batch. The unscoped audit still exists — as a
                 # scheduled job via :meth:`run_full_audit`, which is the
                 # reference's shape too (QA runs per scheduled orchestration,
                 # not per chunk: ``orchestration/bigquery/…/
                 # 00_sdi_sa360_paid_search_sp_call.sql:1-17``).
-                qa_bronze = (
-                    bronze_tbl.read(spark, buckets=affected) if affected is not None
-                    else bronze_tbl.read(spark)
-                )
-                qa_silver = silver_scoped
-                # Gold-side checks run on the recomputed frames already in
-                # hand (≡ the marts' post-merge state for the touched
-                # conversations) — zero gold table reads per batch; the
-                # persisted state is audited by run_full_audit on schedule.
+                convs = dirty.select("conv_id")
+                same_layout = bronze_tbl.snapshot().n_buckets == head.n_buckets
+                qa_bronze = bronze_tbl.read(spark, buckets=sorted(touched) if same_layout else None)
                 out.qa = run_quality_checks(
-                    qa_bronze.join(conv_keys, "conv_id", "left_semi"),
-                    qa_silver.join(conv_keys, "conv_id", "left_semi"),
-                    daily.drop("_order"),
-                    weekly.drop("_order"),
-                    gold_daily_long=daily_long.drop("_order"),
+                    qa_bronze.join(convs, "conv_id", "left_semi"),
+                    silver_scoped.join(convs, "conv_id", "left_semi"),
+                    daily,
+                    weekly,
+                    gold_daily_long=frames["gold_daily_long"],
                     out_dir=os.path.join(self.base_dir, "qa"),
-                    # the gold frames here are the batch RECOMPUTE
-                    # (weekly/long derive from the in-hand daily frame),
-                    # so label the rows honestly: they validate the
+                    # the gold frames here are the batch RECOMPUTE, so
+                    # label the rows honestly: they validate the
                     # recompute's internal consistency; the PERSISTED
                     # marts are audited by the scheduled run_full_audit
                     gold_layer="gold_recompute",
                 )
-                self._persist_qa(spark, out.qa, f"batch:{batch_id}", apply_seq)
+                self._persist_qa(spark, out.qa, f"batch:{batch_id}", seq)
         finally:
+            dirty.unpersist()
             daily.unpersist()
-            if weekly is not None:
-                weekly.unpersist()
+            weekly.unpersist()
 
     def run_full_audit(
         self, spark: SparkSession, *, as_of=None, max_ts=None, max_delay_hours: float = 24.0
@@ -508,34 +448,9 @@ class MedallionPipeline:
             max_delay_hours=max_delay_hours,
             out_dir=os.path.join(self.base_dir, "qa"),
         )
-        results.extend(self._audit_key_indexes(spark))
         self._persist_qa(spark, results, f"full_audit:v{bronze_tbl.snapshot().version}",
                          bronze_tbl.snapshot().version)
         return results
-
-    def _audit_key_indexes(self, spark: SparkSession) -> list:
-        """Scheduled cross-check that each gold mart's conv-bucketed key
-        index (:meth:`_ensure_keyidx`) holds exactly the mart's live key
-        set — the index carries the per-batch scoped-delete lookups, so
-        drift here would mean missed or spurious gold tombstones. One
-        full scan of each side, symmetric-difference count must be 0."""
-        from .quality import _row
-
-        out = []
-        for layer, keys in [
-            ("gold_daily", ["day", "conv_id"]),
-            ("gold_weekly", ["qgp_week", "conv_id"]),
-            ("gold_daily_long", ["day", "conv_id", "metric_name"]),
-            ("gold_weekly_long", ["qgp_week", "conv_id", "metric_name"]),
-        ]:
-            idx_path = self._path(layer + "_keyidx")
-            if not (LakeTable.exists(self._path(layer)) and LakeTable.exists(idx_path)):
-                continue
-            mart = LakeTable.load(self._path(layer)).read(spark).select(*keys)
-            idx = LakeTable.load(idx_path).read(spark).select(*keys)
-            drift = mart.exceptAll(idx).count() + idx.exceptAll(mart).count()
-            out.append(_row(layer, "keyidx_matches_mart", "HIGH", 0, drift, drift == 0))
-        return out
 
     def _persist_qa(self, spark: SparkSession, results: list, run_id: str, apply_seq: int) -> None:
         """QA rows land in a LakeTable (not loose JSON): the reference
@@ -600,9 +515,10 @@ class MedallionPipeline:
         the whole medallion. Bronze AND Silver windows are physically
         replaced (:func:`…lake.merge.reconcile_backfill`) — corrections
         may carry *older* ts than the wrong rows they supersede, so the
-        LWW merge must not arbitrate them — then Gold rebuilds via the
-        normal monotone apply-sequence recompute for exactly the touched
-        buckets.
+        LWW merge must not arbitrate them — then Gold refreshes from
+        Silver's changelog, which is exact across the rewrite: a
+        conversation the correction removes entirely arrives as
+        before-images, so its gold rows are tombstoned.
 
         ``batch_key`` defaults to the window, which makes a *replay of
         the same correction* a no-op; a SECOND, different correction for
@@ -610,23 +526,10 @@ class MedallionPipeline:
         or it would be silently ledger-skipped.
         """
         from ..lake.merge import reconcile_backfill as lake_reconcile, window_file_buckets
-        from ..lake.table import DELETED_COL
 
         bronze_tbl = LakeTable.load(self._path("bronze"))
         batch_id = batch_key or f"reconcile:{start}:{end}"
         in_window = (F.col("ts") >= F.lit(start)) & (F.col("ts") < F.lit(end))
-        # PRE-replace window conversations, captured against the current
-        # snapshot's (immutable) file list BEFORE the replace commits:
-        # conversations the correction removes entirely vanish from every
-        # post-replace read, yet their gold rows must be scope-deleted.
-        pre_convs = (
-            bronze_tbl.read(spark, include_deleted=True)
-            .filter(in_window)
-            .select("conv_id")
-            .distinct()
-        )
-        pre_convs.persist()
-        pre_convs.count()  # materialize against the pre-replace snapshot
         res_b = lake_reconcile(
             spark, bronze_tbl, corrected, start, end, batch_key=f"bronze:{batch_id}"
         )
@@ -648,33 +551,36 @@ class MedallionPipeline:
         else:
             affected = res_b.affected_buckets
         if not affected:
-            pre_convs.unpersist()
             return out
 
         # Silver window-replace: feed = enriched bronze window rows plus
         # tombstones for keys the correction deleted (their D winners
-        # survive in bronze as in-window tombstones).
+        # survive in bronze as in-window tombstones) and for keys it
+        # omitted: Bronze dropped those rows outright, and Silver's
+        # changelog names a change only by a key the commit writes, so
+        # an untombstoned removal would never reach Gold.
         touched_all = bronze_tbl.read(spark, buckets=affected, include_deleted=True)
         live = touched_all.filter(in_window & ~F.col(DELETED_COL)).drop(DELETED_COL)
         silver_feed = build_silver(live, self.conv_dim).withColumn("op", F.lit("U"))
+        silver_tbl = self._ensure("silver", silver_feed.drop("op"), ["conv_id", "turn_idx"], ["ts", "lsn"])
+        keys = ["conv_id", "turn_idx"]
+        window_keys = touched_all.filter(in_window).select(*keys)
+        omitted = (
+            silver_tbl.read(spark, buckets=window_file_buckets(silver_tbl.snapshot(), "ts", start, end))
+            .filter(in_window)
+            .join(window_keys, keys, "left_anti")
+        )
         dead = (
             touched_all.filter(in_window & F.col(DELETED_COL))
-            .select("conv_id", "turn_idx", "ts", "lsn")
+            .select(*keys, "ts", "lsn")
+            .unionByName(omitted.select(*keys, "ts", "lsn"))
             .withColumn("op", F.lit("D"))
         )
-        silver_tbl = self._ensure("silver", silver_feed.drop("op"), ["conv_id", "turn_idx"], ["ts", "lsn"])
-        for c in silver_feed.columns:
-            if c not in dead.columns:
-                dead = dead.withColumn(c, F.lit(None).cast(silver_feed.schema[c].dataType))
         out.silver = lake_reconcile(
-            spark, silver_tbl, silver_feed.unionByName(dead.select(*silver_feed.columns)),
+            spark, silver_tbl, silver_feed.unionByName(dead, allowMissingColumns=True),
             start, end, batch_key=f"silver:{batch_id}",
         )
-        self._rebuild_gold(
-            spark, bronze_tbl, silver_tbl, touched_all, batch_id, out,
-            extra_conv_keys=pre_convs, affected=affected,
-        )
-        pre_convs.unpersist()
+        self._refresh_gold(spark, bronze_tbl, silver_tbl, batch_id, out)
         return out
 
     def register_views(self, spark: SparkSession, prefix: str = "vw_") -> list[str]:
@@ -711,123 +617,6 @@ class MedallionPipeline:
             ).createOrReplaceTempView(f"{prefix}qa_dashboard")
             registered.append(f"{prefix}qa_dashboard")
         return registered
-
-    def _merge_long(
-        self, spark, layer: str, long: DataFrame, ids: list[str], conv_keys: DataFrame,
-        apply_seq: int, batch_key: str, idx_affected: tuple | None,
-    ) -> MergeResult:
-        tbl = self._ensure(layer, long, ids + ["metric_name"], ["_order"])
-        return self._merge_gold_with_index(
-            spark, layer, tbl, long, ids + ["metric_name"],
-            conv_keys, apply_seq, batch_key, idx_affected,
-        )
-
-    def _merge_gold_with_index(
-        self, spark, layer: str, gold_tbl: LakeTable, recomputed: DataFrame,
-        keys: list[str], conv_keys: DataFrame, apply_seq: int, batch_key: str,
-        idx_affected: tuple | None,
-    ) -> MergeResult:
-        """One gold-mart MERGE plus its key-index upkeep, in the crash-
-        safe order: read the index (pre-batch state) → derive scoped
-        tombstones → merge the mart → merge the SAME change-set's keys
-        into the index. A crash between the two merges replays cleanly:
-        the index still holds the pre-batch keys, so the recomputed
-        change-set is identical, the mart merge ledger-skips, and the
-        index merge proceeds; a crash after both ledger-skips both."""
-        idx_tbl = self._ensure_keyidx(spark, layer, keys, gold_tbl)
-        prune = None
-        if idx_affected is not None:
-            buckets, bronze_n = idx_affected
-            if idx_tbl.snapshot().n_buckets == bronze_n:
-                prune = buckets
-        full = self._with_scoped_deletes(
-            spark, idx_tbl, recomputed, keys, conv_keys, apply_seq, prune
-        )
-        # Both merges consume the same O(touched) change-set; cache it so
-        # the recompute lineage (silver read → gold agg) runs once, and
-        # so the index merge can't see a post-merge index snapshot (the
-        # read inside `full` is pinned to the pre-batch file list anyway,
-        # but the cache makes that airtight AND cheap). In the common
-        # no-tombstone case _with_scoped_deletes returns `recomputed`
-        # ITSELF — which the caller may already hold persisted (the
-        # daily/weekly frames) — so only persist/unpersist a frame this
-        # function created, never the caller's.
-        own_cache = full is not recomputed
-        if own_cache:
-            full = full.persist()
-        try:
-            res = merge_changes(spark, gold_tbl, full, batch_key=batch_key, strategy="cow")
-            idx_cols = keys + ["_order"] + (["op"] if "op" in full.columns else [])
-            merge_changes(
-                spark, idx_tbl, full.select(*idx_cols),
-                batch_key=f"{layer}_keyidx:{batch_key}", strategy="cow",
-            )
-        finally:
-            if own_cache:
-                full.unpersist()
-        return res
-
-    def _with_scoped_deletes(
-        self, spark, idx_tbl: LakeTable, recomputed: DataFrame, keys: list[str],
-        conv_keys: DataFrame, apply_seq: int, affected: list[int] | None = None,
-    ) -> DataFrame:
-        """The reference's scoped ``WHEN NOT MATCHED BY SOURCE …
-        DELETE`` (``sql/05_SDI_PROFOUND/…/01_sp_reconcile_…:176-178``):
-        gold rows of touched conversations that vanished from the
-        recompute (all their turns deleted) become tombstones.
-
-        Scale note — the "which keys already exist" lookup reads the
-        mart's conv-bucketed KEY INDEX (:meth:`_ensure_keyidx`), pruned
-        to the batch's affected buckets, not the mart itself: gold
-        buckets by its first key (day / qgp_week), and pruning the mart
-        to the batch's touched *days* would be WRONG — a delete event's
-        ``ts`` can differ from the previously-live version's ``ts`` (ts
-        is payload, LWW keeps the delete's values), so the day whose
-        gold row must be tombstoned may appear in no surviving bronze
-        row. A conversation's index bucket, by contrast, is a function
-        of ``conv_id`` alone, so the affected list covers every
-        existing key of every touched conversation. This makes the
-        existing-keys read O(touched buckets) per mart per batch; the
-        pre-index keys-only mart skim was the pipeline's last per-batch
-        O(table-files) read (bucket pruning asserted in
-        tests/test_pipeline.py, column pruning in
-        tests/test_plan_properties.py)."""
-        existing = (
-            idx_tbl.read(spark, buckets=affected)
-            .join(conv_keys, "conv_id", "left_semi")
-            .select(*keys)
-        )
-        gone = existing.join(recomputed.select(*keys), keys, "left_anti")
-        if gone.isEmpty():
-            return recomputed
-        tomb = gone.withColumn("op", F.lit("D")).withColumn(
-            "_order", F.lit(apply_seq).cast("long")
-        )
-        for c in recomputed.columns:
-            if c not in tomb.columns:
-                tomb = tomb.withColumn(c, F.lit(None).cast(recomputed.schema[c].dataType))
-        return recomputed.withColumn("op", F.lit("U")).unionByName(tomb)
-
-    def _propagate_deletes(self, spark, bronze_tbl, silver_tbl, affected, batch_id) -> None:
-        """Keys tombstoned in Bronze's touched buckets get tombstoned in
-        Silver with the same (ts, lsn) order — LWW keeps it idempotent."""
-        from ..lake.table import DELETED_COL
-
-        dead = (
-            bronze_tbl.read(spark, buckets=affected, include_deleted=True)
-            .filter(F.col(DELETED_COL))
-            .select("conv_id", "turn_idx", "ts", "lsn")
-        )
-        if dead.isEmpty():
-            return
-        silver_schema = silver_tbl.snapshot().schema()
-        tomb = dead.withColumn("op", F.lit("D"))
-        for f_ in silver_schema.fields:
-            if f_.name not in tomb.columns and f_.name != DELETED_COL:
-                tomb = tomb.withColumn(f_.name, F.lit(None).cast(f_.dataType))
-        merge_changes(
-            spark, silver_tbl, tomb, batch_key=f"silver_tomb:{batch_id}", strategy=self.strategy
-        )
 
     # -- reads -------------------------------------------------------------
 

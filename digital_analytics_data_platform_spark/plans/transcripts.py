@@ -125,10 +125,10 @@ def gold_weekly_wide(daily: DataFrame) -> DataFrame:
     )
 
 
-_LONG_METRICS = ["n_turns", "user_turns", "assistant_turns", "tool_turns", "total_tokens", "questions"]
+LONG_METRICS = ["n_turns", "user_turns", "assistant_turns", "tool_turns", "total_tokens", "questions"]
 
 
 def gold_long(wide: DataFrame, ids: list[str]) -> DataFrame:
     """Long shape of a wide mart (T6, EXCLUDE NULLS)."""
-    cast = wide.select(*ids, *[F.col(m).cast("double").alias(m) for m in _LONG_METRICS])
-    return unpivot(cast, ids, _LONG_METRICS)
+    cast = wide.select(*ids, *[F.col(m).cast("double").alias(m) for m in LONG_METRICS])
+    return unpivot(cast, ids, LONG_METRICS)

@@ -12,6 +12,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half of physical memory, at most 32g: a fixed 32g heap lets one
+    local JVM grow past what a small host (or one shared with other
+    workloads) can give it."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1024 * 1024)
+    return f"{min(32 * 1024, phys_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "dadp-spark",
     master: str | None = None,
@@ -33,7 +41,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem())
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # Whole-stage-codegen methods for wide projections (many
         # defensive casts / derived columns over the same inputs) easily

@@ -309,32 +309,19 @@ def apply_stream(
     return query, metrics
 
 
-def read_batch_metrics(table_path: str, pipeline_id: str = "bronze") -> list[dict]:
-    """Load the per-batch metrics records (test_results analog)."""
-    metrics_path = os.path.join(table_path, "metrics")
-    out = []
-    if not os.path.isdir(metrics_path):
-        return out
-    for fn in sorted(os.listdir(metrics_path)):
-        if fn.startswith(pipeline_id) and fn.endswith(".json"):
-            with open(os.path.join(metrics_path, fn)) as f:
-                out.append(json.load(f))
-    return out
-
-
 def metrics_df(spark: SparkSession, table_path: str, pipeline_id: str | None = "bronze") -> DataFrame:
     """The per-batch metrics sink as a queryable DataFrame (the "metrics
     tables" half of the north rule's lineage/metrics contract; the
     per-partition half is :meth:`LakeTable.lineage_df`). One row per
     applied micro-batch: batch id, event/insert/update/delete/quarantine
-    counts, commit version, wall seconds, strategy. ``pipeline_id=None``
-    reads every pipeline writing to this table's metrics dir.
+    counts, affected buckets, commit version, wall seconds, strategy.
+    ``pipeline_id=None`` reads every pipeline writing to this table's
+    metrics dir.
 
     A *distributed* ``spark.read.json`` over the metrics directory with
     an explicit schema — at a 10^10-event replay the metrics sink is
-    millions of small records, a driver-side listdir loop would not
-    hold (that loop, :func:`read_batch_metrics`, stays for tests and
-    tiny tables)."""
+    millions of small records, which a driver-side listdir loop would
+    not hold."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -350,6 +337,7 @@ def metrics_df(spark: SparkSession, table_path: str, pipeline_id: str | None = "
             T.StructField("deletes", T.LongType()),
             T.StructField("upserts", T.LongType()),
             T.StructField("keys_written", T.LongType()),
+            T.StructField("affected_buckets", T.ArrayType(T.LongType())),
             T.StructField("skipped", T.BooleanType()),
             T.StructField("strategy", T.StringType()),
             T.StructField("wall_s", T.DoubleType()),

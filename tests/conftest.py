@@ -12,7 +12,11 @@ from pyspark.sql import types as T  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("dadp-tests", master="local[8]", shuffle_partitions=8)
+    # Test data is tiny, so a job's cost is its task count: one task
+    # slot per core of a 4-vCPU host, and 2 shuffle partitions, the
+    # count the hypothesis suites' own sessions ask for (getOrCreate
+    # applies it to this shared session, so every later test ran at 2).
+    s = get_spark("dadp-tests", master="local[4]", shuffle_partitions=2)
     yield s
     s.stop()
 
@@ -96,3 +100,25 @@ def assert_state_equal(engine_pd, oracle_pd):
     e = oracle_pd[cols].reset_index(drop=True)
     bad = (g != e) & ~(g.isna() & e.isna())
     assert not bad.any().any(), f"value mismatch:\n{g[bad.any(axis=1)].head()}\nvs\n{e[bad.any(axis=1)].head()}"
+
+
+def assert_marts_match_recompute(spark, pipe):
+    """Every persisted gold mart of a MedallionPipeline equals a full
+    recompute from its Silver table."""
+    from digital_analytics_data_platform_spark.plans.transcripts import (
+        gold_daily_wide,
+        gold_long,
+        gold_weekly_wide,
+    )
+
+    daily = gold_daily_wide(pipe.read(spark, "silver"))
+    weekly = gold_weekly_wide(daily)
+    expected = {
+        "gold_daily": daily,
+        "gold_weekly": weekly,
+        "gold_daily_long": gold_long(daily, ["day", "conv_id"]),
+        "gold_weekly_long": gold_long(weekly, ["qgp_week", "conv_id"]),
+    }
+    for mart, exp in expected.items():
+        got = pipe.read(spark, mart)
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, exp.select(*got.columns).collect())), mart

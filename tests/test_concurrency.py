@@ -379,11 +379,12 @@ def test_two_live_pipelines_one_table(spark, make_table, tmp_path):
     ledger = tbl.snapshot().props["ledger"]
     assert sum(1 for k in ledger if k.startswith("left:")) >= 1
     assert sum(1 for k in ledger if k.startswith("right:")) >= 1
-    from digital_analytics_data_platform_spark.streaming.runner import read_batch_metrics
+    from pyspark.sql import functions as F
 
-    ev = sum(m["events_in"] for m in read_batch_metrics(tbl.path, "left"))
-    ev += sum(m["events_in"] for m in read_batch_metrics(tbl.path, "right"))
-    assert ev == n
+    from digital_analytics_data_platform_spark.streaming.runner import metrics_df
+
+    ev = metrics_df(spark, tbl.path, None).filter(F.col("pipeline_id").isin("left", "right"))
+    assert ev.agg(F.sum("events_in")).first()[0] == n
 
 
 def test_scd2_and_patch_apply_retry_through_conflict(spark, tmp_path, monkeypatch):

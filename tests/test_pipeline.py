@@ -1,11 +1,16 @@
-"""Medallion orchestration: Bronze→Silver→Gold per batch, incremental
-recompute scoped to touched conversations, delete propagation, QA."""
+"""Medallion orchestration: Bronze→Silver→Gold per batch, Silver fed by
+the batch, Gold recomputed for the groups Silver's changelog marks
+dirty, delete propagation, crash replay, QA."""
 
 from pyspark.sql import functions as F
 
 from digital_analytics_data_platform_spark import datagen
+import pytest
+
+from digital_analytics_data_platform_spark.lake import LakeTable
 from digital_analytics_data_platform_spark.plans import MedallionPipeline
-from tests.conftest import TRANSCRIPT_SCHEMA, cdc_rows
+from digital_analytics_data_platform_spark.plans import pipeline as pipe_mod
+from tests.conftest import TRANSCRIPT_SCHEMA, assert_marts_match_recompute, cdc_rows
 
 
 def _pipe(tmp_path, **kw):
@@ -202,8 +207,8 @@ def test_medallion_update_reaggregates_gold(spark, tmp_path):
 def test_reconcile_removes_conversation_entirely(spark, tmp_path):
     """Code-review regression: a conversation whose every turn sits
     inside the corrected window and which the correction omits must
-    vanish from Gold too (conv scope must come from the PRE-replace
-    window state, not a post-replace read)."""
+    vanish from Gold too: Bronze drops its rows outright, so Silver must
+    tombstone them for its changelog to carry the removal to Gold."""
     from datetime import datetime, timezone
 
     def _ts(s):
@@ -230,6 +235,7 @@ def test_reconcile_removes_conversation_entirely(spark, tmp_path):
         assert p.read(spark, layer).filter("conv_id = 'gone'").count() == 0, layer
     assert p.read(spark, "gold_daily").filter("conv_id = 'kept'").count() == 1
     assert p.read(spark, "gold_daily").filter("conv_id = 'out'").count() == 1
+    assert_marts_match_recompute(spark, p)
 
 
 def test_reconcile_crash_recovery_and_new_batch_key(spark, tmp_path):
@@ -274,9 +280,11 @@ def test_reconcile_crash_recovery_and_new_batch_key(spark, tmp_path):
 
 
 def test_gold_rebuild_silver_read_is_bucket_pruned(spark, tmp_path, monkeypatch):
-    """The silver read feeding the gold rebuild must prune to the
-    touched buckets (silver shares Bronze's conv_id bucket layout) —
-    a full-silver scan per batch is O(table) work for O(batch) input."""
+    """Every Silver read of a batch (its merge, its changelog, the gold
+    recompute) prunes to the touched buckets (Silver shares Bronze's
+    conv_id bucket layout); Bronze is read only by its own merge, since
+    Silver is fed from the batch; every gold mart read is bucket-pruned
+    (its merge, and the deletion candidates read by dirty day/week)."""
     from digital_analytics_data_platform_spark.lake.table import LakeTable
 
     p = _pipe(tmp_path)
@@ -303,6 +311,11 @@ def test_gold_rebuild_silver_read_is_bucket_pruned(spark, tmp_path, monkeypatch)
     for buckets in silver_reads:
         assert buckets is not None, "full-silver scan in the per-batch rebuild"
         assert sorted(buckets) == r.bronze.affected_buckets
+    bronze_reads = [b for path, b in reads if path == str(tmp_path / "medallion" / "bronze")]
+    assert bronze_reads == [r.bronze.affected_buckets], "bronze re-read beyond its own merge"
+    for mart in ("gold_daily", "gold_weekly", "gold_daily_long", "gold_weekly_long"):
+        mart_reads = [b for path, b in reads if path == str(tmp_path / "medallion" / mart)]
+        assert mart_reads and all(b is not None for b in mart_reads), f"unpruned per-batch {mart} scan"
 
 
 def test_qa_results_table_and_view(spark, tmp_path):
@@ -408,179 +421,17 @@ def test_submit_pipeline_cli_replay_and_resume(spark, tmp_path, monkeypatch):
     )
 
 
-def test_gold_scoped_delete_reads_keyidx_bucket_pruned(spark, tmp_path, monkeypatch):
-    """The scoped-delete existing-keys lookup must read each mart's
-    conv-bucketed key index pruned to the batch's affected buckets —
-    never the mart itself, and never unpruned: the pre-index keys-only
-    mart skim was the pipeline's last per-batch O(table-files) read."""
-    from digital_analytics_data_platform_spark.lake.table import LakeTable
-
-    p = _pipe(tmp_path)
-    rows = [("I", f"conv{i}", 0, "user", f"t{i}", None, 10 + i, i + 1) for i in range(40)]
-    p.apply_batch(spark, cdc_rows(spark, rows), 0)
-
-    reads = []
-    orig_read = LakeTable.read
-
-    def recording_read(self, spark_, **kw):
-        reads.append((self.path, kw.get("buckets")))
-        return orig_read(self, spark_, **kw)
-
-    monkeypatch.setattr(LakeTable, "read", recording_read)
-    r = p.apply_batch(
-        spark, cdc_rows(spark, [("U", "conv0", 0, "user", "t0b", None, 99, 100)]), 1
-    )
-    assert len(r.bronze.affected_buckets) == 1
-    marts = ("gold_daily", "gold_weekly", "gold_daily_long", "gold_weekly_long")
-    for mart in marts:
-        mart_path = str(tmp_path / "medallion" / mart)
-        idx_path = mart_path + "_keyidx"
-        # The COW merge reads the mart's own touched buckets (O(batch));
-        # what must be gone is any UNPRUNED mart scan — the pre-index
-        # existing-keys skim read the whole file list.
-        for buckets in [b for path, b in reads if path == mart_path]:
-            assert buckets is not None, f"unpruned per-batch {mart} scan"
-        idx_reads = [b for path, b in reads if path == idx_path]
-        assert idx_reads, f"{mart} key index never read"
-        for buckets in idx_reads:
-            assert buckets is not None, f"unpruned {mart} key-index scan"
-            assert sorted(buckets) == r.bronze.affected_buckets
-
-
-def test_gold_keyidx_crash_between_mart_and_index_merge(spark, tmp_path, monkeypatch):
-    """Crash window: the mart merge committed but the index merge did
-    not. Replaying the batch must (a) leave the mart correct (its merge
-    ledger-skips), (b) complete the index merge, (c) keep index ≡ mart
-    keys — the order-of-merges argument in _merge_gold_with_index."""
-    from digital_analytics_data_platform_spark.lake import merge as merge_mod
-    from digital_analytics_data_platform_spark.plans import pipeline as pipe_mod
-
-    p = _pipe(tmp_path)
-    p.apply_batch(
-        spark,
-        cdc_rows(
-            spark,
-            [
-                ("I", "c1", 0, "user", "hello", None, 10, 1),
-                ("I", "c1", 1, "assistant", "hi", None, 20, 2),
-            ],
-        ),
-        0,
-    )
-
-    real_merge = merge_mod.merge_changes
-    state = {"boom": True}
-
-    def crashing_merge(spark_, table, changes, **kw):
-        if state["boom"] and "gold_daily_keyidx:gold_daily:1" == kw.get("batch_key"):
-            state["boom"] = False
-            raise RuntimeError("simulated crash before index merge")
-        return real_merge(spark_, table, changes, **kw)
-
-    monkeypatch.setattr(pipe_mod, "merge_changes", crashing_merge)
-    batch = cdc_rows(spark, [("D", "c1", 1, None, None, None, 30, 3)])
-    try:
-        p.apply_batch(spark, batch, 1)
-        raise AssertionError("expected simulated crash")
-    except RuntimeError:
-        pass
-    # recovery: replay the same batch id
-    p.apply_batch(spark, batch, 1)
-    daily = p.read(spark, "gold_daily")
-    assert daily.filter(F.col("conv_id") == "c1").agg(F.sum("n_turns")).collect()[0][0] == 1
-    audit = p._audit_key_indexes(spark)
-    assert audit and all(row["status"] == "PASS" for row in audit)
-
-
-def test_gold_keyidx_crash_on_last_index_merge_defeats_fast_path(spark, tmp_path, monkeypatch):
-    """Worst crash window for the replay FAST PATH: every mart merge
-    committed, only the LAST index merge (gold_weekly_long_keyidx) did
-    not. _downstream_applied must report not-applied (it checks the
-    index ledgers too), so the replay rebuilds and completes the index
-    merge instead of returning early with a permanently desynced index."""
-    from digital_analytics_data_platform_spark.plans import pipeline as pipe_mod
-
-    p = _pipe(tmp_path)
-    p.apply_batch(
-        spark,
-        cdc_rows(
-            spark,
-            [
-                ("I", "c1", 0, "user", "hello", None, 10, 1),
-                ("I", "c1", 1, "assistant", "hi", None, 20, 2),
-            ],
-        ),
-        0,
-    )
-    real_merge = pipe_mod.merge_changes
-    state = {"boom": True}
-
-    def crashing_merge(spark_, table, changes, **kw):
-        if state["boom"] and kw.get("batch_key") == "gold_weekly_long_keyidx:gold_weekly_long:1":
-            state["boom"] = False
-            raise RuntimeError("simulated crash on final index merge")
-        return real_merge(spark_, table, changes, **kw)
-
-    monkeypatch.setattr(pipe_mod, "merge_changes", crashing_merge)
-    batch = cdc_rows(spark, [("D", "c1", 1, None, None, None, 30, 3)])
-    try:
-        p.apply_batch(spark, batch, 1)
-        raise AssertionError("expected simulated crash")
-    except RuntimeError:
-        pass
-    assert not p._downstream_applied(1), "fast path must see the missing index ledger"
-    p.apply_batch(spark, batch, 1)  # recovery replay
-    assert p._downstream_applied(1)
-    audit = p._audit_key_indexes(spark)
-    assert audit and all(row["status"] == "PASS" for row in audit)
-    # and a later full-conv delete relies on the now-consistent index
-    p.apply_batch(spark, cdc_rows(spark, [("D", "c1", 0, None, None, None, 40, 4)]), 2)
-    assert p.read(spark, "gold_weekly_long").filter(F.col("conv_id") == "c1").count() == 0
-
-
-def test_gold_keyidx_bootstrap_seeds_from_existing_mart(spark, tmp_path):
-    """Upgrade path: a mart that predates its key index gets the index
-    seeded from one full mart scan on the next batch, and scoped
-    deletes keep working against pre-index rows."""
-    import shutil
-
-    p = _pipe(tmp_path)
-    p.apply_batch(
-        spark,
-        cdc_rows(
-            spark,
-            [
-                ("I", "c1", 0, "user", "hello", None, 10, 1),
-                ("I", "c2", 0, "user", "other", None, 20, 2),
-            ],
-        ),
-        0,
-    )
-    # simulate a pre-index deployment
-    for mart in ("gold_daily", "gold_weekly", "gold_daily_long", "gold_weekly_long"):
-        shutil.rmtree(str(tmp_path / "medallion" / f"{mart}_keyidx"))
-    # delete every turn of c1: without the seeded index the scoped
-    # delete would miss c1's pre-index gold rows and leave them live
-    p.apply_batch(spark, cdc_rows(spark, [("D", "c1", 0, None, None, None, 30, 3)]), 1)
-    daily = p.read(spark, "gold_daily")
-    assert daily.filter(F.col("conv_id") == "c1").count() == 0
-    assert daily.filter(F.col("conv_id") == "c2").count() == 1
-    audit = p._audit_key_indexes(spark)
-    assert audit and all(row["status"] == "PASS" for row in audit)
-
-
 def test_apply_batch_leaves_no_cached_frames(spark, tmp_path):
-    """The daily/weekly persists (and the change-set persist inside
-    _merge_gold_with_index) must all be released when apply_batch
-    returns — a long-running streaming driver would otherwise leak
-    block-manager entries every batch."""
+    """The dirty-group and daily/weekly persists must all be released
+    when apply_batch returns — a long-running streaming driver would
+    otherwise leak block-manager entries every batch."""
     baseline = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
     p = _pipe(tmp_path)
     for i in range(2):
         p.apply_batch(
             spark, cdc_rows(spark, [("I", "c1", i, "user", f"t{i}", None, 10 + i, i + 1)]), i
         )
-    # delete a turn so the scoped-delete union path (own_cache=True) runs too
+    # delete a turn so the gold tombstone path runs too
     p.apply_batch(spark, cdc_rows(spark, [("D", "c1", 1, None, None, None, 30, 3)]), 2)
     leaked = spark.sparkContext._jsc.sc().getPersistentRDDs().size() - baseline
     assert leaked <= 0, f"{leaked} cached RDDs leaked by apply_batch"
@@ -600,17 +451,6 @@ def test_full_audit_every_n_batches(spark, tmp_path):
     assert results[0] is None and results[2] is None
     assert results[1] and results[3]
     assert all(row["status"] == "PASS" for row in results[1] + results[3])
-
-
-def test_full_audit_includes_keyidx_consistency(spark, tmp_path):
-    p = _pipe(tmp_path)
-    p.apply_batch(
-        spark, cdc_rows(spark, [("I", "c1", 0, "user", "hello", None, 10, 1)]), 0
-    )
-    results = p.run_full_audit(spark)
-    idx_rows = [r for r in results if r["test_name"] == "keyidx_matches_mart"]
-    assert len(idx_rows) == 4
-    assert all(r["status"] == "PASS" for r in idx_rows)
 
 
 def test_ledger_trim_past_capacity_stays_correct(spark, tmp_path, monkeypatch):
@@ -695,3 +535,114 @@ def test_submit_pipeline_publish_tag_gate(spark, tmp_path, monkeypatch):
         tbl = LakeTable.load(f"{lake}/{layer}")
         assert "published" in tbl.tags()
         assert tbl.read(spark, tag="published").count() == tbl.read(spark).count()
+
+
+def test_gold_day_moving_delete_and_update_tombstone_old_day(spark, tmp_path):
+    """A delete's ts is payload (LWW keeps the delete's values) and an
+    update may move a turn to another day, so the old day appears in no
+    surviving row — only in Silver's before-image. Its rows must still
+    be tombstoned in all four marts."""
+    p = _pipe(tmp_path)
+    day = 86400
+    p.apply_batch(
+        spark,
+        cdc_rows(
+            spark,
+            [
+                ("I", "c1", 0, "user", "hello", None, 10, 1),
+                ("I", "c2", 0, "user", "a question?", None, 20, 2),
+                ("I", "c2", 1, "assistant", "an answer", None, 30, 3),
+            ],
+        ),
+        0,
+    )
+    # both events land 10 days (and so another QGP week) later
+    p.apply_batch(
+        spark,
+        cdc_rows(
+            spark,
+            [
+                ("D", "c1", 0, None, None, None, 10 * day, 4),
+                ("U", "c2", 0, "user", "a question?", None, 10 * day + 5, 5),
+            ],
+        ),
+        1,
+    )
+    for mart in ("gold_daily", "gold_weekly", "gold_daily_long", "gold_weekly_long"):
+        assert p.read(spark, mart).filter("conv_id = 'c1'").count() == 0, mart
+    daily = sorted((str(r["day"]), r["n_turns"]) for r in p.read(spark, "gold_daily").filter("conv_id = 'c2'").collect())
+    assert daily == [("2026-01-01", 1), ("2026-01-11", 1)]
+    assert_marts_match_recompute(spark, p)
+
+
+def test_gold_crash_after_each_mart_merge_converges(spark, tmp_path, monkeypatch):
+    """A crash after any one of the four mart merges leaves the later
+    marts' cursors behind Silver's head: the replay must not take the
+    fast path while a cursor lags, and must converge. After the first
+    crash, run_maintenance with keep_snapshots=1 must keep every Silver
+    snapshot from the lowest mart cursor on, or the replay's changelog
+    read would fail."""
+    p = _pipe(tmp_path)
+    p.apply_batch(
+        spark,
+        cdc_rows(
+            spark,
+            [("I", "c1", 0, "user", "hello", None, 10, 1), ("I", "c1", 1, "assistant", "hi", None, 20, 2)],
+        ),
+        0,
+    )
+    real_merge = pipe_mod.merge_changes
+    crash_after = {"key": None}
+
+    def crashing_merge(spark_, table, changes, **kw):
+        res = real_merge(spark_, table, changes, **kw)
+        if kw.get("batch_key") == crash_after["key"]:
+            raise RuntimeError(f"simulated crash after {crash_after['key']}")
+        return res
+
+    monkeypatch.setattr(pipe_mod, "merge_changes", crashing_merge)
+    silver = LakeTable.load(p._path("silver"))
+    marts = [name for name, _ in pipe_mod._MARTS]
+    for i, mart in enumerate(marts, start=1):
+        # a day-moving update, so every crash leaves a gold row to move
+        batch = cdc_rows(spark, [("U", "c1", 1, "assistant", f"edit {i}", None, 20 + i * 86400, 2 + i)])
+        crash_after["key"] = f"{mart}:{i}"
+        with pytest.raises(RuntimeError):
+            p.apply_batch(spark, batch, i)
+        crash_after["key"] = None
+        head = silver.snapshot().version
+        floor = min(p._cursors().values())
+        lagging = mart != marts[-1]
+        assert (floor < head) == lagging
+        assert p._downstream_applied(i) != lagging
+        if i == 1:
+            p.run_maintenance(keep_snapshots=1)
+            assert set(range(floor, head + 1)) <= set(silver.list_snapshots())
+        r = p.apply_batch(spark, batch, i)
+        assert r.bronze.skipped and (r.silver is not None) == lagging
+        assert set(p._cursors().values()) == {silver.snapshot().version}
+    assert_marts_match_recompute(spark, p)
+
+
+def test_apply_batch_is_seven_merges_with_silver_fed_by_the_batch(spark, tmp_path, monkeypatch):
+    """Silver consumes the batch itself, not the touched Bronze buckets
+    (its events_in is the batch's event count on a populated table), and
+    one batch commits exactly one merge per table: bronze, silver, the
+    four marts and qa."""
+    p = MedallionPipeline(str(tmp_path / "medallion"), n_buckets=8, run_qa=True)
+    p.create_tables(TRANSCRIPT_SCHEMA)
+    seed = [("I", f"c{i}", t, "user", f"m{i}-{t}", None, 10 * i + t, 10 * i + t + 1) for i in range(8) for t in range(4)]
+    p.apply_batch(spark, cdc_rows(spark, seed), 0)
+    calls = []
+    real_merge = pipe_mod.merge_changes
+
+    def counting_merge(spark_, table, changes, **kw):
+        calls.append(kw["batch_key"].split(":", 1)[0])
+        return real_merge(spark_, table, changes, **kw)
+
+    monkeypatch.setattr(pipe_mod, "merge_changes", counting_merge)
+    batch = [("U", f"c{i}", 0, "user", f"edit {i}", None, 500 + i, 500 + i) for i in range(3)]
+    r = p.apply_batch(spark, cdc_rows(spark, batch), 1)
+    assert r.silver.events_in == len(batch)
+    assert calls == ["bronze", "silver", "gold_daily", "gold_weekly", "gold_daily_long", "gold_weekly_long", "qa"]
+    assert all(row["status"] == "PASS" for row in r.qa)

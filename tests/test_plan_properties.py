@@ -94,9 +94,9 @@ def test_exact_dedupe_has_partial_combine_and_no_window(spark):
 def test_gold_keys_read_is_column_pruned(spark, tmp_path):
     """A keys-only projection over a gold mart must read ONLY the key
     columns (+ the deleted flag), never the full metric width — plan
-    hygiene for consumption-time key scans (the per-batch scoped-delete
-    lookup itself now reads the narrow conv-bucketed key index, see
-    test_gold_scoped_delete_reads_keyidx_bucket_pruned)."""
+    hygiene for key scans such as the per-batch deletion-candidate read
+    (whose bucket pruning test_pipeline.py's
+    test_gold_rebuild_silver_read_is_bucket_pruned pins)."""
     from digital_analytics_data_platform_spark import datagen
     from digital_analytics_data_platform_spark.lake.table import LakeTable
     from digital_analytics_data_platform_spark.plans.pipeline import MedallionPipeline

@@ -269,3 +269,16 @@ def test_streaming_dual_sink_history(spark, tmp_path):
     cur = {(r["conv_id"], r["turn_idx"]): r["text"] for r in t.current(spark).collect()}
     t1 = {(r["conv_id"], r["turn_idx"]): r["text"] for r in tbl.read(spark).collect()}
     assert cur == t1 and len(t1) > 0
+
+
+def test_apply_batch_without_op_column_defaults_to_upsert(spark, tmp_path):
+    """A batch with no op column is all upserts: the table's own op
+    column must not reach the batch as NULL first and quarantine every
+    row as garbage."""
+    import os
+
+    t = _scd2(tmp_path)
+    batch = cdc_rows(spark, [("I", "c1", 0, "user", "hello", None, 10, 1)]).drop("op", "commit_lsn")
+    t.apply_batch(spark, batch, batch_key="b1")
+    assert t.history(spark).count() == 1
+    assert not os.path.exists(t.table.quarantine_path())

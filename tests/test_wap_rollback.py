@@ -13,7 +13,7 @@ import pytest
 
 from digital_analytics_data_platform_spark.lake import merge_changes
 from digital_analytics_data_platform_spark.plans import MedallionPipeline
-from tests.conftest import TRANSCRIPT_SCHEMA, cdc_rows
+from tests.conftest import TRANSCRIPT_SCHEMA, assert_marts_match_recompute, cdc_rows
 from tests.test_merge_semantics import state
 
 
@@ -122,6 +122,7 @@ def test_wap_gate_publishes_blocks_and_recovers(spark, tmp_path):
     r = p.apply_batch(spark, cdc_rows(spark, [("I", "c2", 0, "user", "yo", None, 20, 2)]), 1)
     assert not r.bronze.skipped
     assert p.read(spark, "gold_daily").count() == 2
+    assert_marts_match_recompute(spark, p)
 
     # a clean audit publishes the repaired heads
     ok2 = p.audit_and_publish(spark)
