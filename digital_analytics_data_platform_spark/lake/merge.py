@@ -952,6 +952,7 @@ def replace_full(
     batch_key: str | None = None,
     write_salt: int = 1,
     conflict_retries: int = 0,
+    extra_props: dict | None = None,
 ) -> MergeResult:
     """S5: CREATE-OR-REPLACE full rebuild — the source dataframe IS the
     new table state, swapped in atomically as one snapshot (the
@@ -967,7 +968,8 @@ def replace_full(
     evolution), same as MERGE.
 
     ``conflict_retries`` re-runs the rebuild against the refreshed
-    snapshot on a lost commit CAS (:func:`~.table.retry_on_conflict`)."""
+    snapshot on a lost commit CAS (:func:`~.table.retry_on_conflict`).
+    ``extra_props`` ride the same commit, as in :func:`merge_changes`."""
 
     def once() -> MergeResult:
         snap = table.snapshot()
@@ -990,6 +992,7 @@ def replace_full(
             props_update={
                 _LEDGER_KEY: _trim_ledger(ledger, batch_key, 0, 0),
                 **_mapping_props(snap, mapping_update),
+                **(extra_props or {}),
             },
             lineage=[{"mode": "replace_full"}],
         )

@@ -26,6 +26,16 @@ SURVEY.md §2.9), priced by the batch rather than the table:
   BY SOURCE … DELETE``). A delete or a day-moving update names its
   turn's OLD day in the before-image, so reading only the mart buckets
   of the dirty days/weeks finds every row to tombstone.
+- **Two persisted marts, two views.** ``gold_daily`` and ``gold_weekly``
+  are tables; each long mart is the unpivot of its wide mart
+  (:func:`gold_long`), served by :meth:`MedallionPipeline.read` and
+  ``register_views`` as a view, so a batch commits five times: Bronze,
+  Silver, the two marts and its QA rows.
+- **QA as one scan, appended.** The per-batch checks run as one fused
+  aggregation over the batch's scope, and their rows append
+  merge-on-read to ``qa_results``: a row's key carries its run id, so
+  no existing bucket needs reading, and ``run_maintenance`` folds the
+  delta tail.
 
 Every layer write goes through the same exactly-once MERGE kernel as
 Bronze, so replaying a batch is a no-op at every layer.
@@ -40,11 +50,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..lake.merge import _LEDGER_KEY, MergeResult, align_to_fields, garbage_predicate, merge_changes
+from ..lake.merge import (
+    _LEDGER_KEY, MergeResult, align_to_fields, compact, garbage_predicate, merge_changes, replace_full,
+)
 from ..lake.table import DELETED_COL, LakeTable, bucket_of
 from ..operators.calendar import qgp_week
 from .quality import run_quality_checks
-from .transcripts import LONG_METRICS, build_silver, gold_daily_wide, gold_long, gold_weekly_wide
+from .transcripts import build_silver, gold_daily_wide, gold_long, gold_weekly_wide
 
 # Table prop each gold mart commits atomically with its merge: the Silver
 # version the mart reflects (the `IncrementalRollup.sync` cursor pattern).
@@ -53,9 +65,9 @@ _CURSOR_PROP = "silver_version"
 _MARTS = (
     ("gold_daily", ["day", "conv_id"]),
     ("gold_weekly", ["qgp_week", "conv_id"]),
-    ("gold_daily_long", ["day", "conv_id", "metric_name"]),
-    ("gold_weekly_long", ["qgp_week", "conv_id", "metric_name"]),
 )
+# long view → (the wide mart it unpivots, the wide mart's keys)
+_LONG_VIEWS = {f"{name}_long": (name, keys) for name, keys in _MARTS}
 # Silver columns gold_daily_wide reads besides the conv_id key, ts and lsn
 # included: a change confined to any other column moves no mart.
 _GOLD_INPUTS = ["day", "role", "n_tokens", "turn_kind", "ts", "lsn"]
@@ -67,8 +79,6 @@ class MedallionResult:
     silver: MergeResult | None = None
     gold_daily: MergeResult | None = None
     gold_weekly: MergeResult | None = None
-    gold_daily_long: MergeResult | None = None
-    gold_weekly_long: MergeResult | None = None
     qa: list = field(default_factory=list)
     full_audit: list | None = None
     maintenance: list | None = None
@@ -149,14 +159,19 @@ class MedallionPipeline:
             n_buckets=self.n_buckets,
         )
 
-    def _cursors(self) -> dict[str, int]:
-        """Each gold mart's Silver cursor; 0 for a mart not created yet,
-        whose first refresh reads Silver from its empty version 0."""
+    def _cursors(self) -> dict[str, int | None]:
+        """Each gold mart's Silver cursor: 0 for a mart not created yet,
+        whose first refresh reads Silver from its empty version 0; None
+        for a mart persisted without one (a lake written before marts
+        carried cursors), which the next refresh rebuilds in full."""
         out = {}
         for name, _ in _MARTS:
             path = self._path(name)
-            exists = LakeTable.exists(path)
-            out[name] = int(LakeTable.load(path).snapshot().props.get(_CURSOR_PROP, 0)) if exists else 0
+            if not LakeTable.exists(path):
+                out[name] = 0
+                continue
+            cursor = LakeTable.load(path).snapshot().props.get(_CURSOR_PROP)
+            out[name] = None if cursor is None else int(cursor)
         return out
 
     # -- apply -------------------------------------------------------------
@@ -192,19 +207,24 @@ class MedallionPipeline:
             self._batches_since_expiry += 1
             if self._batches_since_expiry >= self.expire_snapshots_every:
                 self._batches_since_expiry = 0
-                out.maintenance = self.run_maintenance()
+                out.maintenance = self.run_maintenance(spark)
         return out
 
-    def run_maintenance(self, *, keep_snapshots: int | None = None, grace_seconds: float = 3600.0) -> list:
-        """Expire old snapshots and vacuum orphan files on every table
-        the pipeline owns. Driver-side manifest arithmetic only — no
+    def run_maintenance(
+        self, spark: SparkSession, *, keep_snapshots: int | None = None, grace_seconds: float = 3600.0
+    ) -> list:
+        """Fold ``qa_results``' merge-on-read delta tail, then expire old
+        snapshots and vacuum orphan files on every table the pipeline
+        owns. Past the fold, driver-side manifest arithmetic only — no
         Spark jobs. Exactly-once ledgers live in each table's CURRENT
         snapshot props, so expiry never weakens replay idempotence; it
         only bounds how far back time travel / read_changes can reach.
         Silver keeps every snapshot from the lowest mart cursor on: the
         next gold refresh reads Silver's changelog from there."""
         keep = keep_snapshots or self.keep_snapshots
-        floor = min(self._cursors().values())
+        if LakeTable.exists(self._path("qa_results")):
+            compact(spark, LakeTable.load(self._path("qa_results")))
+        floor = min((c for c in self._cursors().values() if c is not None), default=None)
         stats = []
         for name in sorted(os.listdir(self.base_dir)):
             path = self._path(name)
@@ -298,7 +318,7 @@ class MedallionPipeline:
         snap = LakeTable.load(path).snapshot()
         if f"silver:{batch_id}" not in snap.props.get(_LEDGER_KEY, {}):
             return False
-        return min(self._cursors().values()) >= snap.version
+        return all(c is not None and c >= snap.version for c in self._cursors().values())
 
     def _merge_silver(
         self, spark: SparkSession, bronze_tbl: LakeTable, batch: DataFrame, batch_id, out: MedallionResult
@@ -328,12 +348,103 @@ class MedallionPipeline:
         batch_id, out: MedallionResult,
     ) -> None:
         """Recompute the gold groups Silver's changelog marks dirty, merge
-        them into every mart with the mart's new cursor, then run the
-        per-batch QA over the same scope."""
+        them into both marts with each mart's new cursor, then run the
+        per-batch QA over the same scope. A mart persisted without a
+        cursor may have lost the Silver snapshots its changelog would
+        start from, so then both marts are recomputed in full from
+        Silver's head and replaced wholesale instead."""
         head = silver_tbl.snapshot()
-        lagging = sorted({c for c in self._cursors().values() if c < head.version})
-        if not lagging:
+        cursors = self._cursors()
+        rebuild = None in cursors.values()
+        lagging = sorted({c for c in cursors.values() if c is not None and c < head.version})
+        if not (rebuild or lagging):
             return
+        dirty = weeks = touched = None
+        if rebuild:
+            silver_scoped = silver_tbl.read(spark, snapshot_version=head.version)
+            gold_in = silver_scoped
+        else:
+            dirty, touched = self._dirty_groups(spark, silver_tbl, head, lagging)
+            weeks = dirty.select("qgp_week", "conv_id").distinct()
+            silver_scoped = silver_tbl.read(spark, buckets=sorted(touched), snapshot_version=head.version)
+            gold_in = silver_scoped.join(weeks, ["qgp_week", "conv_id"], "left_semi")
+        # `_order` is the apply sequence (Bronze snapshot version), NOT
+        # max(lsn): a recompute after a delete can have a *lower* max
+        # lsn, and LWW on lsn would then keep the stale row. The apply
+        # sequence is monotone per batch, so later recomputes always win.
+        seq = bronze_tbl.snapshot().version
+        apply_seq = F.lit(seq).cast("long")
+        # A dirty week's recompute spans all its days, so the daily frame
+        # is exact for every (day, conv_id) group it holds; both frames
+        # feed a mart and QA, hence the persists.
+        daily = gold_daily_wide(gold_in).persist()
+        weekly = gold_weekly_wide(daily).persist()
+        frames = {"gold_daily": daily, "gold_weekly": weekly}
+        try:
+            for name, keys in _MARTS:
+                recomputed = frames[name].withColumn("_order", apply_seq)
+                mart = self._ensure(name, recomputed, keys, ["_order"])
+                kw = {"batch_key": f"{name}:{batch_id}", "extra_props": {_CURSOR_PROP: head.version}}
+                if rebuild:
+                    setattr(out, name, replace_full(spark, mart, recomputed, **kw))
+                    continue
+                # Deletion candidates need no mart read: a group a mart
+                # holds at its cursor and loses by head lost every row it
+                # had, and each of those rows' before-images names it.
+                groups = (dirty if name == "gold_daily" else weeks).select(*keys)
+                gone = groups.join(recomputed.select(*keys), keys, "left_anti").select(
+                    *keys, F.lit("D").alias("op"), apply_seq.alias("_order")
+                )
+                setattr(out, name, merge_changes(
+                    spark, mart,
+                    recomputed.withColumn("op", F.lit("U")).unionByName(gone, allowMissingColumns=True),
+                    strategy="cow", **kw,
+                ))
+
+            if self.run_qa:
+                # Per-batch QA reads O(dirty) data: Bronze and Silver
+                # scoped to the dirty conversations (so silver_rows_eq_bronze
+                # checks Silver-from-the-batch against Bronze), the gold side
+                # on the recomputed frames in hand — zero gold table reads
+                # per batch. The unscoped audit still exists — as a
+                # scheduled job via :meth:`run_full_audit`, which is the
+                # reference's shape too (QA runs per scheduled orchestration,
+                # not per chunk: ``orchestration/bigquery/…/
+                # 00_sdi_sa360_paid_search_sp_call.sql:1-17``).
+                if rebuild:
+                    qa_bronze, qa_silver = bronze_tbl.read(spark), silver_scoped
+                else:
+                    convs = dirty.select("conv_id")
+                    same_layout = bronze_tbl.snapshot().n_buckets == head.n_buckets
+                    qa_bronze = bronze_tbl.read(spark, buckets=sorted(touched) if same_layout else None)
+                    qa_bronze = qa_bronze.join(convs, "conv_id", "left_semi")
+                    qa_silver = silver_scoped.join(convs, "conv_id", "left_semi")
+                out.qa = run_quality_checks(
+                    qa_bronze,
+                    qa_silver,
+                    daily,
+                    weekly,
+                    gold_daily_long=gold_long(daily, _MARTS[0][1]),
+                    # the gold frames here are the batch RECOMPUTE, so
+                    # label the rows honestly: they validate the
+                    # recompute's internal consistency; the PERSISTED
+                    # marts are audited by the scheduled run_full_audit
+                    gold_layer="gold_recompute",
+                )
+                self._persist_qa(spark, out.qa, f"batch:{batch_id}", seq)
+        finally:
+            if dirty is not None:
+                dirty.unpersist()
+            daily.unpersist()
+            weekly.unpersist()
+
+    @staticmethod
+    def _dirty_groups(
+        spark: SparkSession, silver_tbl: LakeTable, head, lagging: list[int]
+    ) -> tuple[DataFrame, set]:
+        """The persisted ``(day, conv_id, qgp_week)`` groups Silver's
+        before/after images name since the lagging cursors, and the
+        Silver buckets those versions wrote."""
         # One changelog per distinct cursor, not one from the lowest: a
         # turn inserted after a lagging cursor and deleted again by head
         # nets out of the longer window (both images null), yet a mart
@@ -356,78 +467,7 @@ class MedallionPipeline:
             .withColumn("qgp_week", qgp_week(F.col("day")))
             .persist()
         )
-        weeks = dirty.select("qgp_week", "conv_id").distinct()
-        silver_scoped = silver_tbl.read(spark, buckets=sorted(touched), snapshot_version=head.version)
-        # `_order` is the apply sequence (Bronze snapshot version), NOT
-        # max(lsn): a recompute after a delete can have a *lower* max
-        # lsn, and LWW on lsn would then keep the stale row. The apply
-        # sequence is monotone per batch, so later recomputes always win.
-        seq = bronze_tbl.snapshot().version
-        apply_seq = F.lit(seq).cast("long")
-        # A dirty week's recompute spans all its days, so the daily frame
-        # is exact for every (day, conv_id) group it holds; both frames
-        # feed two marts and QA, hence the persists.
-        daily = gold_daily_wide(
-            silver_scoped.join(weeks, ["qgp_week", "conv_id"], "left_semi")
-        ).persist()
-        weekly = gold_weekly_wide(daily).persist()
-        frames = {
-            "gold_daily": daily,
-            "gold_weekly": weekly,
-            "gold_daily_long": gold_long(daily, ["day", "conv_id"]),
-            "gold_weekly_long": gold_long(weekly, ["qgp_week", "conv_id"]),
-        }
-        metrics = F.explode(F.array(*[F.lit(m) for m in LONG_METRICS])).alias("metric_name")
-        try:
-            for name, keys in _MARTS:
-                # Deletion candidates need no mart read: a group a mart
-                # holds at its cursor and loses by head lost every row it
-                # had, and each of those rows' before-images names it.
-                groups = (dirty if keys[0] == "day" else weeks).select(*keys[:2])
-                if len(keys) > 2:
-                    groups = groups.select("*", metrics)
-                recomputed = frames[name].withColumn("_order", apply_seq)
-                gone = groups.join(recomputed.select(*keys), keys, "left_anti").select(
-                    *keys, F.lit("D").alias("op"), apply_seq.alias("_order")
-                )
-                setattr(out, name, merge_changes(
-                    spark,
-                    self._ensure(name, recomputed, keys, ["_order"]),
-                    recomputed.withColumn("op", F.lit("U")).unionByName(gone, allowMissingColumns=True),
-                    batch_key=f"{name}:{batch_id}", strategy="cow", extra_props={_CURSOR_PROP: head.version},
-                ))
-
-            if self.run_qa:
-                # Per-batch QA reads O(dirty) data: Bronze and Silver
-                # scoped to the dirty conversations (so silver_rows_eq_bronze
-                # checks Silver-from-the-batch against Bronze), the gold side
-                # on the recomputed frames in hand — zero gold table reads
-                # per batch. The unscoped audit still exists — as a
-                # scheduled job via :meth:`run_full_audit`, which is the
-                # reference's shape too (QA runs per scheduled orchestration,
-                # not per chunk: ``orchestration/bigquery/…/
-                # 00_sdi_sa360_paid_search_sp_call.sql:1-17``).
-                convs = dirty.select("conv_id")
-                same_layout = bronze_tbl.snapshot().n_buckets == head.n_buckets
-                qa_bronze = bronze_tbl.read(spark, buckets=sorted(touched) if same_layout else None)
-                out.qa = run_quality_checks(
-                    qa_bronze.join(convs, "conv_id", "left_semi"),
-                    silver_scoped.join(convs, "conv_id", "left_semi"),
-                    daily,
-                    weekly,
-                    gold_daily_long=frames["gold_daily_long"],
-                    out_dir=os.path.join(self.base_dir, "qa"),
-                    # the gold frames here are the batch RECOMPUTE, so
-                    # label the rows honestly: they validate the
-                    # recompute's internal consistency; the PERSISTED
-                    # marts are audited by the scheduled run_full_audit
-                    gold_layer="gold_recompute",
-                )
-                self._persist_qa(spark, out.qa, f"batch:{batch_id}", seq)
-        finally:
-            dirty.unpersist()
-            daily.unpersist()
-            weekly.unpersist()
+        return dirty, touched
 
     def run_full_audit(
         self, spark: SparkSession, *, as_of=None, max_ts=None, max_delay_hours: float = 24.0
@@ -446,7 +486,6 @@ class MedallionPipeline:
             as_of=as_of,
             max_ts=max_ts,
             max_delay_hours=max_delay_hours,
-            out_dir=os.path.join(self.base_dir, "qa"),
         )
         self._persist_qa(spark, results, f"full_audit:v{bronze_tbl.snapshot().version}",
                          bronze_tbl.snapshot().version)
@@ -458,9 +497,11 @@ class MedallionPipeline:
         views over it (``sql/02_SDI_SA360/01_BRONZE/tests/
         00_create_sdi_bronze_sa360_test_results.sql:18-45``,
         ``…03_GOLD/tests/99_view_sa360_test_dashboard.sql``).
-        Key = (run_id, layer, test) so a replayed batch overwrites its
-        own rows idempotently; ``register_views`` exposes
-        ``vw_qa_results``."""
+        Key = (run_id, layer, test): a run's rows never collide with
+        another run's, so they append merge-on-read without reading any
+        existing bucket, and read-time LWW makes a replayed batch
+        overwrite its own rows idempotently (``run_maintenance`` folds
+        the delta tail); ``register_views`` exposes ``vw_qa_results``."""
         if not results:
             return
         rows = [
@@ -500,7 +541,7 @@ class MedallionPipeline:
                 ["_order"],
                 n_buckets=8,  # tiny table: a handful of rows per batch
             )
-        merge_changes(spark, tbl, df, batch_key=f"qa:{run_id}", strategy="cow")
+        merge_changes(spark, tbl, df, batch_key=f"qa:{run_id}", strategy="mor")
 
     def reconcile_backfill(
         self,
@@ -584,18 +625,19 @@ class MedallionPipeline:
         return out
 
     def register_views(self, spark: SparkSession, prefix: str = "vw_") -> list[str]:
-        """S10: the consumption layer — one temp view per persisted mart
+        """S10: the consumption layer — one temp view per layer
         (the reference's thin Gold views,
         ``sql/02_SDI_SA360/03_GOLD/Views/vw_gold_sdi_sa360_campaign_daily_wide.sql``).
         Views read the current snapshot lazily; dashboards query these,
-        never the files."""
+        never the files. The long views unpivot their wide mart."""
         layers = [
             "bronze", "silver", "gold_daily", "gold_weekly",
             "gold_daily_long", "gold_weekly_long", "qa_results",
         ]
         registered = []
         for layer in layers:
-            if LakeTable.exists(self._path(layer)):
+            table = _LONG_VIEWS[layer][0] if layer in _LONG_VIEWS else layer
+            if LakeTable.exists(self._path(table)):
                 self.read(spark, layer).createOrReplaceTempView(f"{prefix}{layer}")
                 registered.append(f"{prefix}{layer}")
         if LakeTable.exists(self._path("qa_results")):
@@ -624,6 +666,12 @@ class MedallionPipeline:
         """Read a layer. ``read_kw`` passes through to
         :meth:`LakeTable.read` — e.g. ``stats_range={"day": (lo, hi)}``
         for file-skipped dashboard range reads on the day/qgp_week-keyed
-        gold marts."""
+        gold marts. ``gold_daily_long`` / ``gold_weekly_long`` are views:
+        the unpivot of their wide mart's read, so the same ``read_kw``
+        prune the wide mart's files (a directory an older lake persisted
+        under a long name is never read)."""
+        if layer in _LONG_VIEWS:
+            wide, keys = _LONG_VIEWS[layer]
+            return gold_long(self.read(spark, wide, **read_kw), keys)
         df = LakeTable.load(self._path(layer)).read(spark, **read_kw)
         return df.drop("_order") if "_order" in df.columns else df

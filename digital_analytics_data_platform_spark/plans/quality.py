@@ -19,9 +19,6 @@ is_critical_failure) — the ``*_test_results`` schema
 
 from __future__ import annotations
 
-import json
-import os
-import time
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -34,9 +31,9 @@ def _row(
     layer: str, name: str, severity: str, expected: float, actual: float | None, passed: bool
 ) -> dict:
     """``actual=None`` means "unmeasurable" (e.g. freshness of an empty
-    layer) — kept as a JSON null, never ``float('inf')``: json.dump
-    would emit bare ``Infinity``, which is not valid JSON and breaks any
-    strict consumer of the persisted QA sink."""
+    layer) — kept as a null, never ``float('inf')``: serialized to JSON
+    that would be a bare ``Infinity``, which is not valid JSON and
+    breaks any strict consumer of the QA rows."""
     return {
         "test_layer": layer,
         "test_name": name,
@@ -136,18 +133,19 @@ def check_anomaly_vs_baseline(
     return _row("bronze", f"anomaly_{value_col}", "MEDIUM", baseline, latest, ok)
 
 
-def _grain_expr(keys: list[str]):
+def _grain_expr(keys: list[str], prefix: str):
     """Duplicate-grain + null-key counters as agg expressions, so the
-    whole layer audit is ONE job instead of one count() per check:
-    duplicate rows = count(*) − count(distinct keys); null keys via a
-    conditional sum."""
+    whole layer audit rides one aggregation instead of one count() per
+    check: duplicate rows = count(*) − count(distinct keys); null keys
+    via a conditional sum. ``prefix`` keeps the column names distinct
+    once the layers' aggregates are fused into one row."""
     null_cond = F.lit(False)
     for k in keys:
         null_cond = null_cond | F.col(k).isNull()
     return [
-        F.count(F.lit(1)).alias("_n"),
-        F.count_distinct(F.struct(*[F.col(k) for k in keys])).alias("_nk"),
-        F.sum(null_cond.cast("long")).alias("_nulls"),
+        F.count(F.lit(1)).alias(f"{prefix}_n"),
+        F.count_distinct(F.struct(*[F.col(k) for k in keys])).alias(f"{prefix}_nk"),
+        F.sum(null_cond.cast("long")).alias(f"{prefix}_nulls"),
     ]
 
 
@@ -161,12 +159,12 @@ def run_quality_checks(
     max_ts: Any = None,
     as_of: Any = None,
     max_delay_hours: float = 24.0,
-    out_dir: str | None = None,
     gold_layer: str = "gold",
 ) -> list[dict]:
     """Full per-batch audit. Each layer is scanned exactly once (all its
-    checks ride one aggregation) — at the 10^10-event design point the
-    old one-job-per-check shape was ~12 full layer reads per batch.
+    checks ride one aggregation), and the layers' single-row aggregates
+    are cross-joined into one row read by ONE ``collect``: at small
+    inputs each plan's fixed cost dominates, so one plan beats five.
 
     ``gold_layer`` labels the gold-side rows. The per-batch pipeline
     passes ``"gold_recompute"`` because it hands in the recomputed
@@ -175,73 +173,75 @@ def run_quality_checks(
     marts — the persisted state is audited by the scheduled
     ``run_full_audit``, which keeps the default label)."""
     keys = ["conv_id", "turn_idx"]
-    results: list[dict] = []
+    b_aggs = _grain_expr(keys, "b") + [F.max("ts").alias("b_max_ts")]
+    if max_ts is not None:
+        b_aggs.append(F.sum((F.col("ts") > F.lit(max_ts)).cast("long")).alias("b_future"))
+    parts = [
+        bronze.agg(*b_aggs),
+        silver.agg(*_grain_expr(keys, "s")),
+        gold_daily.agg(
+            *_grain_expr(["day", "conv_id"], "gd"),
+            F.sum(((F.col("n_turns") < 0) | (F.col("total_tokens") < 0)).cast("long")).alias("gd_neg"),
+            F.sum("n_turns").alias("gd_turns"),
+            F.sum("total_tokens").alias("gd_tokens"),
+        ),
+        gold_weekly.agg(F.sum("n_turns").alias("gw_turns"), F.sum("total_tokens").alias("gw_tokens")),
+    ]
+    long_metrics = ("n_turns", "total_tokens")
+    if gold_daily_long is not None:
+        # the wide side of long == wide is gd_turns / gd_tokens: only
+        # the LONG side is scanned here
+        parts.append(gold_daily_long.agg(*[
+            F.sum(F.when(F.col("metric_name") == m, F.col("metric_value"))).alias(f"l_{m}")
+            for m in long_metrics
+        ]))
+    fused = parts[0]
+    for p in parts[1:]:
+        fused = fused.crossJoin(p)
+    r = fused.collect()[0]
 
-    # ---- bronze: one agg (dup grain, null keys, future ts, freshness) ----
-    b_aggs = _grain_expr(keys) + [F.max("ts").alias("_max_ts")]
-    if max_ts is not None:
-        b_aggs.append(F.sum((F.col("ts") > F.lit(max_ts)).cast("long")).alias("_future"))
-    b = bronze.agg(*b_aggs).collect()[0]
-    dup_b = int(b["_n"]) - int(b["_nk"])
+    results: list[dict] = []
+    # ---- bronze: dup grain, null keys, future ts, freshness --------------
+    dup_b = int(r["b_n"]) - int(r["b_nk"])
     results.append(_row("bronze", "duplicate_grain", "HIGH", 0, dup_b, dup_b == 0))
-    results.append(_row("bronze", "null_or_blank_keys", "HIGH", 0, int(b["_nulls"] or 0), not b["_nulls"]))
+    results.append(_row("bronze", "null_or_blank_keys", "HIGH", 0, int(r["b_nulls"] or 0), not r["b_nulls"]))
     if max_ts is not None:
-        fut = int(b["_future"] or 0)
+        fut = int(r["b_future"] or 0)
         results.append(_row("bronze", "future_timestamps", "MEDIUM", 0, fut, fut == 0))
     if as_of is not None:
-        if b["_max_ts"] is None:
+        if r["b_max_ts"] is None:
             results.append(_row("bronze", "freshness", "HIGH", max_delay_hours, None, False))
         else:
-            delay_h = (as_of - b["_max_ts"]).total_seconds() / 3600.0
+            delay_h = (as_of - r["b_max_ts"]).total_seconds() / 3600.0
             results.append(
                 _row("bronze", "freshness", "HIGH", max_delay_hours, delay_h, delay_h <= max_delay_hours)
             )
 
-    # ---- silver: one agg (dup grain + rowcount vs bronze) ---------------
-    s = silver.agg(*_grain_expr(keys)).collect()[0]
-    dup_s = int(s["_n"]) - int(s["_nk"])
+    # ---- silver: dup grain + rowcount vs bronze --------------------------
+    dup_s = int(r["s_n"]) - int(r["s_nk"])
     results.append(_row("silver", "duplicate_grain", "HIGH", 0, dup_s, dup_s == 0))
-    results.append(
-        _row("silver", "silver_rows_eq_bronze", "HIGH", int(b["_n"]), int(s["_n"]), int(b["_n"]) == int(s["_n"]))
-    )
+    n_b, n_s = int(r["b_n"]), int(r["s_n"])
+    results.append(_row("silver", "silver_rows_eq_bronze", "HIGH", n_b, n_s, n_b == n_s))
 
-    # ---- gold daily: one agg (dup grain, non-negative, rollup sums) ------
-    gd = gold_daily.agg(
-        *_grain_expr(["day", "conv_id"]),
-        F.sum(((F.col("n_turns") < 0) | (F.col("total_tokens") < 0)).cast("long")).alias("_neg"),
-        F.sum("n_turns").alias("_sum_turns"),
-        F.sum("total_tokens").alias("_sum_tokens"),
-    ).collect()[0]
-    dup_g = int(gd["_n"]) - int(gd["_nk"])
+    # ---- gold daily: dup grain, non-negative -----------------------------
+    dup_g = int(r["gd_n"]) - int(r["gd_nk"])
     results.append(_row(gold_layer, "duplicate_grain", "HIGH", 0, dup_g, dup_g == 0))
-    results.append(_row(gold_layer, "non_negative_metrics", "MEDIUM", 0, int(gd["_neg"] or 0), not gd["_neg"]))
+    results.append(_row(gold_layer, "non_negative_metrics", "MEDIUM", 0, int(r["gd_neg"] or 0), not r["gd_neg"]))
 
-    # ---- gold weekly: one agg, reconcile against daily sums --------------
-    gw = gold_weekly.agg(
-        F.sum("n_turns").alias("_sum_turns"), F.sum("total_tokens").alias("_sum_tokens")
-    ).collect()[0]
+    # ---- gold weekly: reconcile against daily sums -----------------------
     for m in ("turns", "tokens"):
-        d_v = float(gd[f"_sum_{m}"] or 0)
-        w_v = float(gw[f"_sum_{m}"] or 0)
+        d_v = float(r[f"gd_{m}"] or 0)
+        w_v = float(r[f"gw_{m}"] or 0)
         results.append(
             _row(gold_layer, f"weekly_eq_sum_daily_{m}", "HIGH", d_v, w_v, abs(d_v - w_v) <= TOLERANCE)
         )
 
-    # ---- gold long: reconcile long == wide per metric. The wide-side
-    # sums were already computed in the gd aggregation above — only the
-    # LONG side is scanned here (one agg), keeping the one-scan-per-layer
-    # contract instead of re-aggregating gold_daily.
+    # ---- gold long: long == wide per metric ------------------------------
     if gold_daily_long is not None:
-        l = gold_daily_long.groupBy("metric_name").agg(F.sum("metric_value").alias("v")).collect()
-        lmap = {r["metric_name"]: r["v"] or 0.0 for r in l}
-        for m, key in (("n_turns", "_sum_turns"), ("total_tokens", "_sum_tokens")):
-            exp = float(gd[key] or 0.0)
-            act = float(lmap.get(m, 0.0))
+        for m, wide in zip(long_metrics, ("gd_turns", "gd_tokens")):
+            exp = float(r[wide] or 0.0)
+            act = float(r[f"l_{m}"] or 0.0)
             results.append(
                 _row(gold_layer, f"long_eq_wide_{m}", "HIGH", exp, act, abs(exp - act) <= TOLERANCE)
             )
-    if out_dir:
-        os.makedirs(out_dir, exist_ok=True)
-        with open(os.path.join(out_dir, f"qa_{int(time.time()*1000)}.json"), "w") as f:
-            json.dump(results, f, indent=1)
     return results

@@ -7,9 +7,12 @@ on so any pandas UDF moves data in columnar batches.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
 
 
 def _default_driver_mem() -> str:
@@ -26,23 +29,25 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """Build the engine's session, or return the live one. A live
+    session keeps its master, and ``getOrCreate`` rewrites its
+    modifiable (SQL) confs in place, so that call logs a warning naming
+    the ignored ``master`` and every conf whose value it changes."""
     master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[*]")
     if shuffle_partitions is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
         shuffle_partitions = max(cpus, 8)
-    builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem())
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    conf = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.parquet.compression.codec": "zstd",
+        "spark.ui.enabled": "false",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        "spark.sql.sources.partitionOverwriteMode": "dynamic",
         # Whole-stage-codegen methods for wide projections (many
         # defensive casts / derived columns over the same inputs) easily
         # exceed HotSpot's 8 KB HugeMethodLimit; the JVM then silently
@@ -50,14 +55,34 @@ def get_spark(
         # measured 15× slower on the CDC generator's 9.5 KB method
         # (21.8s → 1.4s for an 8M-row filter at 8 cores). Applies at JVM
         # launch only, so it must be here, not per-query.
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "-XX:-DontCompileHugeMethods"),
-        )
-        .config("spark.executor.extraJavaOptions", "-XX:-DontCompileHugeMethods")
-    )
-    for k, v in (extra_conf or {}).items():
+        "spark.driver.extraJavaOptions": os.environ.get(
+            "SPARK_GRAFT_DRIVER_JAVA_OPTS", "-XX:-DontCompileHugeMethods"
+        ),
+        "spark.executor.extraJavaOptions": "-XX:-DontCompileHugeMethods",
+        **(extra_conf or {}),
+    }
+    live = SparkSession.getActiveSession()
+    if live is not None:
+        _warn_live_session(live, master, conf)
+    builder = SparkSession.builder.master(master).appName(app_name)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _warn_live_session(live: SparkSession, master: str, conf: dict[str, str]) -> None:
+    ignored = master if master != live.sparkContext.master else None
+    changed = {
+        k: (live.conf.get(k, None), v)
+        for k, v in conf.items()
+        if live.conf.isModifiable(k) and live.conf.get(k, None) != v
+    }
+    if ignored or changed:
+        _log.warning(
+            "get_spark on a live %s session: master %s ignored; confs changed in place: %s",
+            live.sparkContext.master,
+            ignored or "(same)",
+            ", ".join(f"{k} {old!r} -> {new!r}" for k, (old, new) in changed.items()) or "none",
+        )

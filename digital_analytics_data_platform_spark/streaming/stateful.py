@@ -77,7 +77,17 @@ def _update(
 def conversation_progress(events: DataFrame) -> DataFrame:
     """Attach the stateful progress operator to a (streaming) CDC
     DataFrame. Works on batch DataFrames too (state spans the single
-    batch) — handy for tests."""
+    batch) — handy for tests.
+
+    Do not drain it with ``trigger(availableNow=True)``: its
+    ``ProcessingTimeTimeout`` makes Spark plan a no-data batch after
+    every batch so idle conversations can time out, so an
+    ``availableNow`` query never terminates and ``processAllAvailable()``
+    never returns. Run it under a processing-time trigger, or poll
+    ``recentProgress`` until the first batch with ``numInputRows == 0``
+    (it follows the last data batch) and then ``stop()`` the query, as
+    ``tests/test_streaming.py::test_stateful_conversation_progress``
+    does."""
     return (
         events.select("conv_id", "turn_idx", "ts", "lsn")
         .groupBy("conv_id")

@@ -103,8 +103,8 @@ def assert_state_equal(engine_pd, oracle_pd):
 
 
 def assert_marts_match_recompute(spark, pipe):
-    """Every persisted gold mart of a MedallionPipeline equals a full
-    recompute from its Silver table."""
+    """Every gold mart of a MedallionPipeline, the long views included,
+    equals a full recompute from its Silver table."""
     from digital_analytics_data_platform_spark.plans.transcripts import (
         gold_daily_wide,
         gold_long,

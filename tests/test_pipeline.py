@@ -2,6 +2,8 @@
 the batch, Gold recomputed for the groups Silver's changelog marks
 dirty, delete propagation, crash replay, QA."""
 
+import os
+
 from pyspark.sql import functions as F
 
 from digital_analytics_data_platform_spark import datagen
@@ -84,29 +86,35 @@ def test_medallion_delete_cascades_to_gold(spark, tmp_path):
     assert p.read(spark, "gold_daily").filter("conv_id = 'c2'").count() == 1
 
 
-def test_medallion_long_marts_persisted(spark, tmp_path):
+def test_medallion_long_marts_are_views_of_wide(spark, tmp_path):
     """The reference ships every mart daily/weekly × wide/long
-    (sql/02_SDI_SA360/README.md:27-32) — all four shapes on disk and
-    long == wide per metric."""
+    (sql/02_SDI_SA360/README.md:27-32), and long = unpivot of wide: the
+    two wide marts are on disk, each long shape reads as gold_long of its
+    persisted wide mart (a day range prunes the wide mart's files), and
+    deletes cascade into the long shapes."""
+    from digital_analytics_data_platform_spark.plans.transcripts import gold_long
+
     p = _pipe(tmp_path)
     log = datagen.change_log(spark, 2_000, n_convs=20, turns_per_conv=10)
     p.apply_batch(spark, log, 0)
-    daily = p.read(spark, "gold_daily")
-    dlong = p.read(spark, "gold_daily_long")
-    wlong = p.read(spark, "gold_weekly_long")
-    assert set(dlong.columns) == {"day", "conv_id", "metric_name", "metric_value"}
-    assert wlong.count() > 0
-    lt = dlong.filter("metric_name = 'total_tokens'").agg(F.sum("metric_value")).collect()[0][0]
-    wt = daily.agg(F.sum("total_tokens")).collect()[0][0]
-    assert abs(lt - wt) < 1e-6
+    assert not os.path.exists(p._path("gold_daily_long")) and not os.path.exists(p._path("gold_weekly_long"))
+    for wide, ids in pipe_mod._MARTS:
+        got = p.read(spark, f"{wide}_long")
+        assert set(got.columns) == {*ids, "metric_name", "metric_value"}
+        exp = gold_long(LakeTable.load(p._path(wide)).read(spark), ids)
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, exp.select(*got.columns).collect())), wide
+    day = p.read(spark, "gold_daily").first()["day"].isoformat()
+    ranged = {"stats_range": {"day": (day, day)}}
+    assert p.read(spark, "gold_daily_long", **ranged).inputFiles() == p.read(spark, "gold_daily", **ranged).inputFiles()
     # deletes cascade into the long shapes too
-    conv = daily.first()["conv_id"]
+    conv = p.read(spark, "gold_daily").first()["conv_id"]
     turns = p.read(spark, "bronze").filter(F.col("conv_id") == conv).collect()
     tombs = cdc_rows(
         spark, [("D", conv, t["turn_idx"], None, None, None, 10**6, 10**6 + i) for i, t in enumerate(turns)]
     )
     p.apply_batch(spark, tombs, 1)
-    assert p.read(spark, "gold_daily_long").filter(F.col("conv_id") == conv).count() == 0
+    for view in ("gold_daily_long", "gold_weekly_long"):
+        assert p.read(spark, view).filter(F.col("conv_id") == conv).count() == 0, view
 
 
 def test_medallion_bronze_skip_still_rebuilds_downstream(spark, tmp_path):
@@ -313,7 +321,7 @@ def test_gold_rebuild_silver_read_is_bucket_pruned(spark, tmp_path, monkeypatch)
         assert sorted(buckets) == r.bronze.affected_buckets
     bronze_reads = [b for path, b in reads if path == str(tmp_path / "medallion" / "bronze")]
     assert bronze_reads == [r.bronze.affected_buckets], "bronze re-read beyond its own merge"
-    for mart in ("gold_daily", "gold_weekly", "gold_daily_long", "gold_weekly_long"):
+    for mart, _ in pipe_mod._MARTS:
         mart_reads = [b for path, b in reads if path == str(tmp_path / "medallion" / mart)]
         assert mart_reads and all(b is not None for b in mart_reads), f"unpruned per-batch {mart} scan"
 
@@ -346,6 +354,12 @@ def test_qa_results_table_and_view(spark, tmp_path):
     before = qa.count()
     p.apply_batch(spark, log, 0)
     assert p.read(spark, "qa_results").count() == before
+    # QA rows append merge-on-read; maintenance folds the delta tail
+    qa_tbl = LakeTable.load(p._path("qa_results"))
+    assert qa_tbl.snapshot().props.get("delta_buckets")
+    p.run_maintenance(spark)
+    assert not qa_tbl.snapshot().props.get("delta_buckets")
+    assert sorted(map(tuple, p.read(spark, "qa_results").collect())) == sorted(map(tuple, rows))
 
 
 def test_run_full_audit(spark, tmp_path):
@@ -365,6 +379,8 @@ def test_run_full_audit(spark, tmp_path):
     ]
     audits = p.read(spark, "qa_results").filter("run_id LIKE 'full_audit:%'")
     assert audits.count() == len(results)
+    # QA rows have one sink, the table: no loose per-run files
+    assert not os.path.exists(os.path.join(p.base_dir, "qa"))
 
 
 def test_submit_pipeline_cli_replay_and_resume(spark, tmp_path, monkeypatch):
@@ -541,7 +557,7 @@ def test_gold_day_moving_delete_and_update_tombstone_old_day(spark, tmp_path):
     """A delete's ts is payload (LWW keeps the delete's values) and an
     update may move a turn to another day, so the old day appears in no
     surviving row — only in Silver's before-image. Its rows must still
-    be tombstoned in all four marts."""
+    be tombstoned in both marts and their long views."""
     p = _pipe(tmp_path)
     day = 86400
     p.apply_batch(
@@ -576,8 +592,8 @@ def test_gold_day_moving_delete_and_update_tombstone_old_day(spark, tmp_path):
 
 
 def test_gold_crash_after_each_mart_merge_converges(spark, tmp_path, monkeypatch):
-    """A crash after any one of the four mart merges leaves the later
-    marts' cursors behind Silver's head: the replay must not take the
+    """A crash after either mart merge leaves a later mart's cursor
+    behind Silver's head (a crash after the last leaves none): the replay must not take the
     fast path while a cursor lags, and must converge. After the first
     crash, run_maintenance with keep_snapshots=1 must keep every Silver
     snapshot from the lowest mart cursor on, or the replay's changelog
@@ -616,7 +632,7 @@ def test_gold_crash_after_each_mart_merge_converges(spark, tmp_path, monkeypatch
         assert (floor < head) == lagging
         assert p._downstream_applied(i) != lagging
         if i == 1:
-            p.run_maintenance(keep_snapshots=1)
+            p.run_maintenance(spark, keep_snapshots=1)
             assert set(range(floor, head + 1)) <= set(silver.list_snapshots())
         r = p.apply_batch(spark, batch, i)
         assert r.bronze.skipped and (r.silver is not None) == lagging
@@ -624,11 +640,11 @@ def test_gold_crash_after_each_mart_merge_converges(spark, tmp_path, monkeypatch
     assert_marts_match_recompute(spark, p)
 
 
-def test_apply_batch_is_seven_merges_with_silver_fed_by_the_batch(spark, tmp_path, monkeypatch):
+def test_apply_batch_is_five_merges_with_silver_fed_by_the_batch(spark, tmp_path, monkeypatch):
     """Silver consumes the batch itself, not the touched Bronze buckets
     (its events_in is the batch's event count on a populated table), and
     one batch commits exactly one merge per table: bronze, silver, the
-    four marts and qa."""
+    two persisted marts and qa (the long marts are views)."""
     p = MedallionPipeline(str(tmp_path / "medallion"), n_buckets=8, run_qa=True)
     p.create_tables(TRANSCRIPT_SCHEMA)
     seed = [("I", f"c{i}", t, "user", f"m{i}-{t}", None, 10 * i + t, 10 * i + t + 1) for i in range(8) for t in range(4)]
@@ -644,5 +660,54 @@ def test_apply_batch_is_seven_merges_with_silver_fed_by_the_batch(spark, tmp_pat
     batch = [("U", f"c{i}", 0, "user", f"edit {i}", None, 500 + i, 500 + i) for i in range(3)]
     r = p.apply_batch(spark, cdc_rows(spark, batch), 1)
     assert r.silver.events_in == len(batch)
-    assert calls == ["bronze", "silver", "gold_daily", "gold_weekly", "gold_daily_long", "gold_weekly_long", "qa"]
+    assert calls == ["bronze", "silver", "gold_daily", "gold_weekly", "qa"]
     assert all(row["status"] == "PASS" for row in r.qa)
+
+
+def test_lake_from_before_mart_cursors_upgrades(spark, tmp_path):
+    """A lake written before marts carried a Silver cursor: its marts have
+    no cursor prop, Silver's early snapshots may be expired, and it may
+    hold persisted gold_*_long tables. The next batch rebuilds both marts
+    in full from Silver instead of reading a changelog from version 0;
+    the stale long directories never shadow the long views; later
+    batches take the changelog path again."""
+    import dataclasses
+    import shutil
+
+    p = MedallionPipeline(str(tmp_path / "medallion"), n_buckets=8, run_qa=True)
+    p.create_tables(TRANSCRIPT_SCHEMA)
+    p.apply_batch(spark, cdc_rows(spark, [
+        ("I", "c1", 0, "user", "hello", None, 10, 1),
+        ("I", "c1", 1, "assistant", "hi", None, 20, 2),
+        ("I", "c2", 0, "user", "other", None, 30, 3),
+    ]), 0)
+    for name, _ in pipe_mod._MARTS:
+        tbl = LakeTable.load(p._path(name))
+        snap = tbl.snapshot()
+        props = {k: v for k, v in snap.props.items() if k != pipe_mod._CURSOR_PROP}
+        tbl._write_snapshot(dataclasses.replace(
+            snap, version=snap.version + 1, parent=snap.version, props=props, committed_at=None
+        ))
+        # an older lake's persisted long mart; a wide copy is easy to spot
+        shutil.copytree(p._path(name), p._path(f"{name}_long"))
+    assert set(p._cursors().values()) == {None}
+    p.run_maintenance(spark, keep_snapshots=1)
+    silver = LakeTable.load(p._path("silver"))
+    assert 0 not in silver.list_snapshots()
+
+    r = p.apply_batch(spark, cdc_rows(spark, [
+        ("D", "c1", 1, None, None, None, 40, 4),
+        ("I", "c3", 0, "user", "new", None, 50, 5),
+    ]), 1)
+    assert r.gold_daily.strategy == r.gold_weekly.strategy == "replace_full"
+    assert set(p._cursors().values()) == {silver.snapshot().version}
+    assert r.qa and all(row["status"] == "PASS" for row in r.qa)
+    assert_marts_match_recompute(spark, p)
+    long_cols = {"day", "conv_id", "metric_name", "metric_value"}
+    assert set(p.read(spark, "gold_daily_long").columns) == long_cols
+    assert "vw_gold_weekly_long" in p.register_views(spark)
+    assert set(spark.table("vw_gold_daily_long").columns) == long_cols
+
+    r = p.apply_batch(spark, cdc_rows(spark, [("U", "c2", 0, "user", "edited", None, 60, 6)]), 2)
+    assert r.gold_daily.strategy == "cow" and r.gold_weekly.strategy == "cow"
+    assert_marts_match_recompute(spark, p)
