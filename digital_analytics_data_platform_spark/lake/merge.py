@@ -1173,13 +1173,15 @@ def delete_where(
     """Row-level predicate DELETE (the GDPR / right-to-erasure shape:
     ``DELETE FROM t WHERE <predicate>``) — implemented as ordinary
     tombstone EVENTS through the merge kernel rather than a file
-    rewrite, so the deletes are **changelog-visible**: the CDC-out
-    relay propagates them downstream, IVM marts retract the deleted
-    contributions on their next sync, SCD2-style consumers see a real
-    change — none of which a physical sweep (``retention_truncate``)
-    can provide. Physical reclaim of both the tombstones and the dead
-    payload bytes follows via the normal ``compact`` →
-    ``expire_tombstones`` → ``expire_snapshots`` maintenance chain.
+    rewrite, so the deletes are **changelog-visible** at their own
+    event position: the CDC-out relay propagates them downstream, IVM
+    marts retract the deleted contributions on their next sync,
+    SCD2-style consumers see a real change, and the tombstone keeps a
+    late stale event from resurrecting the key — which a physical
+    sweep (``retention_truncate``) cannot. Physical reclaim of both
+    the tombstones and the dead payload bytes follows via the normal
+    ``compact`` → ``expire_tombstones`` → ``expire_snapshots``
+    maintenance chain.
 
     Order synthesis: each matched LIVE winner gets a delete event at
     ``(its own ts, del_lsn)`` where ``del_lsn`` = 1 + max(lsn ever
@@ -1306,13 +1308,14 @@ def retention_truncate(
     retention delete). Physical bytes are reclaimed when
     ``expire_snapshots`` ages out the pre-sweep snapshots.
 
-    Two documented eventual-consistency edges, both standard for
-    retention: a pre-cutoff event arriving AFTER the sweep re-inserts
-    until the next sweep removes it (late-data horizon), and the sweep
-    is not CDC-visible — a removal-only commit adds no files, so
-    :meth:`read_changes` emits nothing for it (downstream mirrors
-    enforce their own retention policy; same contract as tombstone
-    expiry vs changelog consumers).
+    The sweep is CDC-visible, as a Delta ``DELETE`` is in CDF: a key
+    whose every version it removes reads as a delete in
+    :meth:`~.table.LakeTable.read_changelog` (placed at the key's last
+    live position), so IVM marts retract it and the relay propagates
+    it. A key with a surviving version is no change. One documented
+    eventual-consistency edge, standard for retention: a pre-cutoff
+    event arriving AFTER the sweep re-inserts until the next sweep
+    removes it (late-data horizon).
 
     Returns ``{"files_dropped", "files_rewritten", "rows_dropped",
     "rows_rewritten", "version"}``; metadata-only when

@@ -126,6 +126,19 @@ def bucket_of(col: str, n_buckets: int) -> F.Column:
     return F.pmod(F.xxhash64(F.col(col)), F.lit(n_buckets)).cast("int")
 
 
+def file_diff(old: "Snapshot", new: "Snapshot") -> tuple[list[dict], list[dict]]:
+    """The manifest diff between two snapshots: ``(added, removed)`` file
+    entries — in ``new`` and not ``old``, and the reverse. The buckets of
+    both are the buckets the window touched; every changelog read and
+    every changed-bucket scope derives from this one diff."""
+    old_paths = {f["path"] for f in old.files}
+    new_paths = {f["path"] for f in new.files}
+    return (
+        [f for f in new.files if f["path"] not in old_paths],
+        [f for f in old.files if f["path"] not in new_paths],
+    )
+
+
 def stored_schema(fields: list[T.StructField]) -> T.StructType:
     """Stored schema of business ``fields``: the fields plus the
     tombstone flag."""
@@ -727,89 +740,6 @@ class LakeTable:
 
     # -- incremental consumption ------------------------------------------
 
-    def read_changes(
-        self,
-        spark: SparkSession,
-        *,
-        since_version: int,
-        until_version: int | None = None,
-        broadcast_keys_max_rows: int = 2_000_000,
-    ) -> DataFrame:
-        """Changelog between two snapshots: the latest state of every key
-        touched by commits after ``since_version`` (up to
-        ``until_version``, default current), with a ``_change_type``
-        column (``upsert`` / ``delete``). This is the CDC-*out* analog of
-        Iceberg's incremental read / Delta CDF: the engine ingests a
-        change feed AND can emit one to downstream consumers without
-        rescanning the table.
-
-        Plan shape (scales with the delta, not the table): the manifest
-        diff yields the files added since ``since_version``; their keys
-        are collapsed and semi-joined against a read pruned to ONLY the
-        touched buckets — O(added files + touched buckets), never a full
-        scan. Exact for merge-on-read appends; for copy-on-write or
-        compaction commits (which rewrite whole buckets) the result is a
-        conservative superset — untouched keys in rewritten buckets are
-        re-emitted with their unchanged current values, which is
-        idempotent for any upsert-consuming downstream.
-
-        Deletes appear once (``_change_type='delete'``) while the
-        tombstone is retained; after :func:`expire_tombstones` the key no
-        longer appears. Consumers needing every delete must read before
-        tombstone expiry — same contract as Iceberg changelog + snapshot
-        expiry."""
-        new = self.snapshot(until_version)
-        old = self.snapshot(since_version)
-        old_paths = {f["path"] for f in old.files}
-        added = [f for f in new.files if f["path"] not in old_paths]
-        schema = new.schema()
-        out_schema = T.StructType(
-            [f for f in schema.fields if f.name != DELETED_COL]
-            + [T.StructField("_change_type", T.StringType(), False)]
-        )
-        if not added:
-            return _to_logical(spark.createDataFrame([], out_schema), new)
-        touched = sorted({f["bucket"] for f in added})
-        df_added = spark.read.schema(schema).parquet(
-            *[os.path.join(self.path, f["path"]) for f in added]
-        )
-        keys = df_added.select(*new.key_cols).distinct()
-        window_rows = sum(int(f.get("rows") or 0) for f in added)
-        if window_rows <= broadcast_keys_max_rows:
-            keys = F.broadcast(keys)  # see read_changelog for the rationale
-        key0 = new.key_cols[0]
-        bloom_keys: dict[str, str] | None = None
-        if key0 in (new.props.get("bloom_cols") or []) and window_rows <= broadcast_keys_max_rows:
-            keyset = keys_bloom(
-                df_added.select(key0), key0, int(new.props.get("bloom_m", _BLOOM_M_DEFAULT))
-            )
-            if keyset is not None:
-                bloom_keys = {key0: keyset}  # see read_changelog
-        # key-restrict BEFORE the LWW collapse (filter∘collapse ≡
-        # collapse∘filter per key) so the collapse shuffle is
-        # O(changed-key rows), not O(touched-bucket rows)
-        current = self.read(
-            spark,
-            buckets=touched,
-            include_deleted=True,
-            snapshot_version=new.version,
-            bloom_and=bloom_keys,
-            collapse=False,
-            physical=True,
-        )
-        changed = lww_collapse(
-            current.join(keys, on=new.key_cols, how="left_semi"),
-            new.key_cols,
-            new.order_cols,
-        )
-        out = changed.select(
-            *[c for c in changed.columns if c != DELETED_COL],
-            F.when(F.col(DELETED_COL), F.lit("delete")).otherwise(F.lit("upsert")).alias("_change_type"),
-        )
-        # emit CURRENT logical names — a consumer never sees physical
-        # layout, even across rename/drop boundaries inside the window
-        return _to_logical(out, new)
-
     def read_changelog(
         self,
         spark: SparkSession,
@@ -834,30 +764,30 @@ class LakeTable:
         longer carries — so downstream consumers can re-serialize the
         feed in true event order.
 
-        Unlike :meth:`read_changes` (which re-emits untouched keys from
-        rewritten buckets as a conservative superset), this view is
-        **exact**: a key whose before and after images are equal is not
-        a change and is dropped, so compaction / clustering / rescale
-        commits produce an empty changelog.
+        The view is **exact across every physical rewrite**: a key
+        whose images are equal is not a change (compaction, clustering
+        and rescale commits yield nothing), and a key a rewrite drops
+        without a tombstone (a reconcile that omits it, a retention
+        truncation, a rollback past its insert) is a delete placed at
+        its before-image's position — as a Delta ``DELETE`` is in CDF.
 
-        Cost model (honest): ONE LWW-collapsed read of the touched
-        buckets at the *old* snapshot (the before-images; same touched
-        buckets when the bucket spec is unchanged, all old buckets
-        after a rescale — still key-semi-joined) + the window's added
-        files (O(delta)); the after-images are derived as
-        LWW(before-rows ∪ added-rows), never a second table read
-        (measured: the single-read plan keeps tick wall growth at the
-        plain relay's rate instead of 2×, `bench_runs/RELAY_r04.json`).
-        Exact before-images inherently price at touched-bucket data —
-        the same class as Iceberg's compute-updates changelog — so run
-        image ticks at coarser cadence than the plain upsert relay when
-        every batch touches every bucket. Tables with per-file blooms on
-        the first key column (`bloom_cols`) get a further pruning tier:
-        a keyset bloom of the window's changed keys skips touched-bucket
-        files that provably hold none of them — on a MOR delta tail
-        where batches touch disjoint key sets, the before-image scan
-        stays O(files that share keys with the window) instead of
-        O(tail).
+        One plan over the manifest diff. The touched buckets are the
+        buckets of the window's added and removed files; rows of
+        removed files feed only the before side, rows of added files
+        only the after side, and files carried through the window in a
+        touched bucket feed both. One ``groupBy(keys)`` with two
+        ``max_by`` (one per side) then yields both images: each side is
+        the LWW winner of that snapshot's touched buckets. Carried rows
+        are the only table-sized input, so they alone are restricted to
+        the keys of the added and removed files: the key set is
+        broadcast while the window is under ``broadcast_keys_max_rows``
+        rows (a sort-merge semi-join would shuffle the table side's
+        payloads), and on tables with per-file blooms on the first key
+        column (``bloom_cols``) a keyset bloom of the window's keys
+        skips carried files that provably hold none of them — on a MOR
+        delta tail that keeps the scan O(files sharing keys with the
+        window) instead of O(tail). A copy-on-write window carries no
+        file in a touched bucket, so it builds no key set at all.
 
         ``columns`` projects the images to key/order columns + the named
         columns, and the projection is pushed into the parquet scans —
@@ -870,8 +800,7 @@ class LakeTable:
         """
         new = self.snapshot(until_version)
         old = self.snapshot(since_version)
-        old_paths = {f["path"] for f in old.files}
-        added = [f for f in new.files if f["path"] not in old_paths]
+        added, removed = file_diff(old, new)
         schema = new.schema()
         if columns is not None:
             # caller speaks logical names; translate to the physical
@@ -886,125 +815,69 @@ class LakeTable:
             proj_fields = [f for f in schema.fields if f.name in keep or f.name == DELETED_COL]
         else:
             proj_fields = list(schema.fields)
+        proj = [f.name for f in proj_fields]
         row_fields = [f for f in proj_fields if f.name != DELETED_COL]
         row_cols = [f.name for f in row_fields]
-        row_t = T.StructType(row_fields)
-        out_schema = T.StructType(
-            [f for f in row_fields if f.name in new.key_cols]
-            + [
-                T.StructField("before", row_t),
-                T.StructField("after", row_t),
-                T.StructField("_change_type", T.StringType(), False),
-            ]
-            + [f for f in row_fields if f.name in new.order_cols]
-        )
-        if not added:
-            return _changelog_logical(spark.createDataFrame([], out_schema), new, row_fields)
-        touched = sorted({f["bucket"] for f in added})
-        df_added = spark.read.schema(schema).parquet(
-            *[os.path.join(self.path, f["path"]) for f in added]
-        )
-        keys = df_added.select(*new.key_cols).distinct()
-        # The changed-key semi-joins below must not sort-merge: that
-        # shuffles the TABLE side (full row payloads, text included),
-        # re-coupling changelog cost to table size. The manifest's row
-        # counts bound the distinct-key count for free, so broadcast the
-        # key set whenever the window is below the threshold; oversized
-        # windows (initial loads, table-sized reconciles) fall back to
-        # the shuffle join, which such a delta amortizes anyway.
-        window_rows = sum(int(f.get("rows") or 0) for f in added)
-        if window_rows <= broadcast_keys_max_rows:
-            keys = F.broadcast(keys)
-        # When the table carries per-file blooms on its first key column,
-        # a KEYSET bloom of the window's changed keys (one O(delta)
-        # column-pruned agg) prunes the before-image scan to the files
-        # that might hold those keys — the MOR delta tail from unrelated
-        # earlier batches is exactly what this skips, which is what made
-        # image-tick wall grow with the tail (`bench_runs/RELAY_r04.json`
-        # residual). Pruning is conservative: the semi-join below remains
-        # the correctness filter; bloomless files are always kept.
-        key0 = new.key_cols[0]
-        bloom_keys: dict[str, str] | None = None
-        if key0 in (new.props.get("bloom_cols") or []) and window_rows <= broadcast_keys_max_rows:
-            keyset = keys_bloom(
-                df_added.select(key0), key0, int(new.props.get("bloom_m", _BLOOM_M_DEFAULT))
-            )
-            if keyset is not None:
-                bloom_keys = {key0: keyset}
 
-        # Old-snapshot state of the touched keys. Bucket ids are only
-        # comparable across snapshots under the same bucket spec; after
-        # a rescale_buckets the old manifest is read unpruned (the key
-        # semi-join still bounds the join work). The key restriction is
-        # applied BEFORE the LWW collapse — collapse is per-key
-        # independent, so filter∘collapse ≡ collapse∘filter, and doing
-        # it first keeps the collapse shuffle O(changed-key rows)
-        # instead of O(touched-bucket rows): the only table-sized step
-        # left is the columnar scan itself.
-        prev = self.read(
-            spark,
-            buckets=touched if old.n_buckets == new.n_buckets else None,
-            include_deleted=True,
-            snapshot_version=old.version,
-            bloom_and=bloom_keys,
-            collapse=False,
-            physical=True,
-        )
-        # Align the old read to the new row schema: mid-stream-added
-        # columns surface as null, widened columns cast up.
-        prev = lww_collapse(
-            prev.select(
-                *[
-                    (F.col(f.name) if f.name in prev.columns else F.lit(None)).cast(f.dataType).alias(f.name)
-                    for f in proj_fields
-                ]
-            ).join(keys, on=new.key_cols, how="left_semi"),
-            new.key_cols,
-            new.order_cols,
-        )
-        # After-images. Pure-append windows (every old file still live —
-        # the sustained MOR apply shape): LWW over the before rows ∪ the
-        # window's added rows, saving the second touched-bucket read of
-        # the new snapshot. Windows that REMOVED files (compaction,
-        # reconcile/bucket-replace, tombstone expiry) must read the new
-        # snapshot — a rewrite can legitimately retract a high-order
-        # version (conv-removal backfill), which the union would
-        # silently resurrect.
-        new_paths = {f["path"] for f in new.files}
-        if all(p in new_paths for p in old_paths):
-            cur = lww_collapse(
-                prev.unionByName(df_added.select(*[f.name for f in proj_fields])),
-                new.key_cols,
-                new.order_cols,
-            )
-        else:
-            cur = lww_collapse(
-                self.read(
-                    spark,
-                    buckets=touched,
-                    include_deleted=True,
-                    snapshot_version=new.version,
-                    bloom_and=bloom_keys,
-                    collapse=False,
-                    physical=True,
+        def scan(files: list[dict], before: bool, after: bool) -> DataFrame:
+            # every file is read under the new schema: older files lack
+            # mid-stream-added columns (null) and carry narrower types.
+            # An empty set is a JVM-side empty frame: an empty Python-side
+            # frame would start Python workers on every read.
+            if files:
+                df = spark.read.schema(schema).parquet(*[os.path.join(self.path, f["path"]) for f in files])
+            else:
+                df = spark.range(0, numPartitions=1).select(
+                    *[F.lit(None).cast(f.dataType).alias(f.name) for f in proj_fields]
                 )
-                .select(*[f.name for f in proj_fields])
-                .join(keys, on=new.key_cols, how="left_semi"),
-                new.key_cols,
-                new.order_cols,
+            return df.select(*proj, F.lit(before).alias("_in_before"), F.lit(after).alias("_in_after"))
+
+        rows = scan(removed, True, False).unionByName(scan(added, False, True))
+        # Under a changed bucket spec (rescale) nothing is carried: a
+        # spec change rewrites every file, so bucket ids never mix here.
+        touched = {f["bucket"] for f in added + removed}
+        old_paths = {f["path"] for f in old.files}
+        carried = [f for f in new.files if f["path"] in old_paths and f["bucket"] in touched]
+        if carried:
+            changed = rows.select(*new.key_cols)
+            window_rows = sum(int(f.get("rows") or 0) for f in added + removed)
+            key0 = new.key_cols[0]
+            if key0 in (new.props.get("bloom_cols") or []) and window_rows <= broadcast_keys_max_rows:
+                keyset = keys_bloom(changed, key0, int(new.props.get("bloom_m", _BLOOM_M_DEFAULT)))
+                if keyset is not None:
+                    carried = [
+                        f
+                        for f in carried
+                        if f.get(f"bloom_{key0}") is None or _blooms_intersect(f[f"bloom_{key0}"], keyset)
+                    ]
+            if window_rows <= broadcast_keys_max_rows:
+                changed = F.broadcast(changed)
+            rows = rows.unionByName(
+                scan(carried, True, True).join(changed, on=new.key_cols, how="left_semi")
             )
 
-        def _imaged(df: DataFrame, side: str) -> DataFrame:
-            live = ~F.col(DELETED_COL)
-            return df.select(
-                *new.key_cols,
-                F.when(live, F.struct(*[F.col(c) for c in row_cols])).alias(side),
-                # tombstone rows keep their event position here even
-                # though the image struct above is nulled
-                *[F.col(c).alias(f"_{side}_{c}") for c in new.order_cols],
+        # Each side's LWW winner, tombstones included so a delete keeps
+        # its event position; max_by skips rows whose ordering is null.
+        order = F.struct(*[F.col(c) for c in new.order_cols])
+        payload = F.struct(*[F.col(c) for c in proj if c not in new.key_cols])
+        winners = rows.groupBy(*new.key_cols).agg(
+            F.max_by(payload, F.when(F.col("_in_before"), order)).alias("_b"),
+            F.max_by(payload, F.when(F.col("_in_after"), order)).alias("_a"),
+        )
+
+        def image(side: str) -> F.Column:
+            w = F.col(side)
+            return F.when(
+                w.isNotNull() & ~w[DELETED_COL],
+                F.struct(*[(F.col(c) if c in new.key_cols else w[c]).alias(c) for c in row_cols]),
             )
 
-        joined = _imaged(prev, "before").join(_imaged(cur, "after"), on=new.key_cols, how="full")
+        imaged = winners.select(
+            *new.key_cols,
+            image("_b").alias("before"),
+            image("_a").alias("after"),
+            *[F.coalesce(F.col("_a")[c], F.col("_b")[c]).alias(c) for c in new.order_cols],
+        )
         b, a = F.col("before"), F.col("after")
         # Change detection for a PROJECTED view compares only key +
         # requested columns: a redelivery whose visible payload is
@@ -1026,7 +899,7 @@ class LakeTable:
             cmp_b = F.struct(*[b[c] for c in cmp_cols])
             cmp_a = F.struct(*[a[c] for c in cmp_cols])
         return _changelog_logical(
-            joined.select(
+            imaged.select(
                 *new.key_cols,
                 "before",
                 "after",
@@ -1034,13 +907,10 @@ class LakeTable:
                 .when(b.isNotNull() & a.isNull(), F.lit("delete"))
                 .when(b.isNotNull() & a.isNotNull() & ~cmp_b.eqNullSafe(cmp_a), F.lit("update"))
                 .alias("_change_type"),
-                *[
-                    F.coalesce(F.col(f"_after_{c}"), F.col(f"_before_{c}")).alias(c)
-                    for c in new.order_cols
-                ],
+                *new.order_cols,
             )
             # both-null (delete of a never-live key) and no-op rewrites
-            # (compaction superset, same-value upsert) are not changes
+            # (compaction, same-value upsert) are not changes
             .filter(F.col("_change_type").isNotNull()),
             new,
             row_fields,
@@ -1421,11 +1291,12 @@ class LakeTable:
         ``protect_versions_since``: additionally retain EVERY version
         ``>= protect_versions_since`` regardless of ``keep_last`` — the
         incremental-consumer retention floor. A changelog consumer
-        (:meth:`read_changes` / :meth:`read_changelog` — IVM rollups,
-        CDC relays) diffs manifests from its cursor version forward, so
-        expiring the cursor's snapshot breaks the consumer's next sync
-        (Iceberg documents the same hazard for its CDC/incremental
-        reads). Callers pass the min cursor across registered consumers;
+        (:meth:`read_changelog` — IVM rollups, CDC relays, the medallion
+        gold refresh) diffs manifests from its cursor version forward
+        and reads the files the window removed as its before side, so
+        expiring the cursor's snapshot (and with it those files) breaks
+        the consumer's next sync (Iceberg documents the same hazard for
+        its CDC/incremental reads). Callers pass the min cursor across registered consumers;
         the streaming runner does this automatically for its rollups.
 
         Pure manifest-set arithmetic on the driver — no Spark job; the

@@ -53,7 +53,7 @@ from pyspark.sql import types as T
 from ..lake.merge import (
     _LEDGER_KEY, MergeResult, align_to_fields, compact, garbage_predicate, merge_changes, replace_full,
 )
-from ..lake.table import DELETED_COL, LakeTable, bucket_of
+from ..lake.table import DELETED_COL, LakeTable, bucket_of, file_diff
 from ..operators.calendar import qgp_week
 from .quality import run_quality_checks
 from .transcripts import build_silver, gold_daily_wide, gold_long, gold_weekly_wide
@@ -66,6 +66,9 @@ _MARTS = (
     ("gold_daily", ["day", "conv_id"]),
     ("gold_weekly", ["qgp_week", "conv_id"]),
 )
+# every table the pipeline owns; maintenance, tagging and rollback act on
+# these alone, so a stray directory under the base dir is never touched
+_TABLES = ("bronze", "silver", *(name for name, _ in _MARTS), "qa_results")
 # long view → (the wide mart it unpivots, the wide mart's keys)
 _LONG_VIEWS = {f"{name}_long": (name, keys) for name, keys in _MARTS}
 # Silver columns gold_daily_wide reads besides the conv_id key, ts and lsn
@@ -121,12 +124,12 @@ class MedallionPipeline:
         self._batches_since_audit = 0
         # Storage-lifecycle cadence: every N applied batches, expire old
         # snapshot manifests (keeping the newest ``keep_snapshots`` per
-        # table — this also bounds the read_changes changelog window and
-        # time-travel horizon) and vacuum uncommitted-write orphans. The
-        # pipeline writes one manifest per table per batch, so an
-        # unexpired 10^10-event replay would accumulate O(100k) manifest
-        # files each carrying a full file list; the cadence keeps the
-        # metadata O(keep_snapshots). 0 disables (caller schedules
+        # table, and Silver's from the lowest gold cursor on — this
+        # bounds the time-travel horizon) and vacuum uncommitted-write
+        # orphans. The pipeline writes one manifest per table per batch,
+        # so an unexpired 10^10-event replay would accumulate O(100k)
+        # manifest files each carrying a full file list; the cadence
+        # keeps the metadata O(keep_snapshots). 0 disables (caller schedules
         # run_maintenance itself).
         self.expire_snapshots_every = expire_snapshots_every
         self.keep_snapshots = keep_snapshots
@@ -215,18 +218,19 @@ class MedallionPipeline:
     ) -> list:
         """Fold ``qa_results``' merge-on-read delta tail, then expire old
         snapshots and vacuum orphan files on every table the pipeline
-        owns. Past the fold, driver-side manifest arithmetic only — no
-        Spark jobs. Exactly-once ledgers live in each table's CURRENT
-        snapshot props, so expiry never weakens replay idempotence; it
-        only bounds how far back time travel / read_changes can reach.
-        Silver keeps every snapshot from the lowest mart cursor on: the
-        next gold refresh reads Silver's changelog from there."""
+        owns (``_TABLES``). Past the fold, driver-side manifest
+        arithmetic only — no Spark jobs. Exactly-once ledgers live in
+        each table's CURRENT snapshot props, so expiry never weakens
+        replay idempotence; it only bounds how far back time travel can
+        reach. Silver keeps every snapshot from the lowest mart cursor
+        on: the next gold refresh reads Silver's changelog from there,
+        including the files later commits removed."""
         keep = keep_snapshots or self.keep_snapshots
         if LakeTable.exists(self._path("qa_results")):
             compact(spark, LakeTable.load(self._path("qa_results")))
         floor = min((c for c in self._cursors().values() if c is not None), default=None)
         stats = []
-        for name in sorted(os.listdir(self.base_dir)):
+        for name in _TABLES:
             path = self._path(name)
             if not LakeTable.exists(path):
                 continue
@@ -265,7 +269,7 @@ class MedallionPipeline:
         between batches), matching the pipeline's one-publisher design.
         """
         versions = {}
-        for name in sorted(os.listdir(self.base_dir)):
+        for name in _TABLES:
             path = self._path(name)
             if LakeTable.exists(path):
                 versions[name] = LakeTable.load(path).snapshot().version
@@ -293,7 +297,7 @@ class MedallionPipeline:
         rows that RECORDED the failure are observability evidence, not
         state to be reverted. Returns {table: new head version}."""
         out = {}
-        for name in sorted(os.listdir(self.base_dir)):
+        for name in _TABLES:
             if name == "qa_results":
                 continue
             path = self._path(name)
@@ -444,7 +448,7 @@ class MedallionPipeline:
     ) -> tuple[DataFrame, set]:
         """The persisted ``(day, conv_id, qgp_week)`` groups Silver's
         before/after images name since the lagging cursors, and the
-        Silver buckets those versions wrote."""
+        Silver buckets those versions touched."""
         # One changelog per distinct cursor, not one from the lowest: a
         # turn inserted after a lagging cursor and deleted again by head
         # nets out of the longer window (both images null), yet a mart
@@ -457,10 +461,10 @@ class MedallionPipeline:
             )
             named = clog.select("conv_id", F.explode(F.array("before.day", "after.day")).alias("day"))
             imgs = named if imgs is None else imgs.unionByName(named)
-            # every changed key has a file written since the cursor, so
-            # the buckets of those files hold every dirty conversation
-            old = {f["path"] for f in silver_tbl.snapshot(since).files}
-            touched |= {f["bucket"] for f in head.files if f["path"] not in old}
+            # every changed key is in a file the window added or
+            # removed, so those files' buckets hold every dirty conversation
+            added, removed = file_diff(silver_tbl.snapshot(since), head)
+            touched |= {f["bucket"] for f in added + removed}
         dirty = (
             imgs.filter(F.col("day").isNotNull())
             .distinct()
@@ -557,9 +561,13 @@ class MedallionPipeline:
         replaced (:func:`…lake.merge.reconcile_backfill`) — corrections
         may carry *older* ts than the wrong rows they supersede, so the
         LWW merge must not arbitrate them — then Gold refreshes from
-        Silver's changelog, which is exact across the rewrite: a
-        conversation the correction removes entirely arrives as
-        before-images, so its gold rows are tombstoned.
+        Silver's changelog, which is exact across the rewrite: a Silver
+        row the correction omits is dropped by Silver's window replace
+        and arrives as a delete, so a conversation the correction
+        removes entirely has its gold rows tombstoned. Bronze's
+        in-window ``D`` winners still reach Silver as tombstones: Silver
+        is built from the batch, so without them a later stale event
+        would lose in Bronze yet land in Silver.
 
         ``batch_key`` defaults to the window, which makes a *replay of
         the same correction* a no-op; a SECOND, different correction for
@@ -596,25 +604,14 @@ class MedallionPipeline:
 
         # Silver window-replace: feed = enriched bronze window rows plus
         # tombstones for keys the correction deleted (their D winners
-        # survive in bronze as in-window tombstones) and for keys it
-        # omitted: Bronze dropped those rows outright, and Silver's
-        # changelog names a change only by a key the commit writes, so
-        # an untombstoned removal would never reach Gold.
+        # survive in bronze as in-window tombstones)
         touched_all = bronze_tbl.read(spark, buckets=affected, include_deleted=True)
         live = touched_all.filter(in_window & ~F.col(DELETED_COL)).drop(DELETED_COL)
         silver_feed = build_silver(live, self.conv_dim).withColumn("op", F.lit("U"))
         silver_tbl = self._ensure("silver", silver_feed.drop("op"), ["conv_id", "turn_idx"], ["ts", "lsn"])
-        keys = ["conv_id", "turn_idx"]
-        window_keys = touched_all.filter(in_window).select(*keys)
-        omitted = (
-            silver_tbl.read(spark, buckets=window_file_buckets(silver_tbl.snapshot(), "ts", start, end))
-            .filter(in_window)
-            .join(window_keys, keys, "left_anti")
-        )
         dead = (
             touched_all.filter(in_window & F.col(DELETED_COL))
-            .select(*keys, "ts", "lsn")
-            .unionByName(omitted.select(*keys, "ts", "lsn"))
+            .select("conv_id", "turn_idx", "ts", "lsn")
             .withColumn("op", F.lit("D"))
         )
         out.silver = lake_reconcile(

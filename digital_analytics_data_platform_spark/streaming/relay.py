@@ -3,7 +3,7 @@ as JSON change envelopes a downstream binlog-style consumer can tail.
 
 This closes the loop on the CDC story: the engine ingests Debezium /
 wal2json / Maxwell / Canal feeds (``cdc_json_stream``) AND can emit the
-same formats from its own commit history (``LakeTable.read_changes``),
+same formats from its own commit history (``LakeTable.read_changelog``),
 so a second lake — or any off-the-shelf CDC consumer — can mirror a
 table without rescanning it. The reference's outbound surface is a
 BigQuery→Dataflow export job (``README.md:269-275``); here it is a
@@ -12,13 +12,18 @@ manifest-diff read re-encoded on the wire, O(delta) not O(table).
 Delivery contract: **at-least-once emission, exactly-once effect**.
 The cursor file is advanced only *after* the segment files are
 published, so a crash between the two re-emits the last window; every
-row carries its original ``(ts, lsn)``, so any LWW upsert consumer
+row carries its change's ``(ts, lsn)``, so any LWW upsert consumer
 (e.g. this engine's own ``apply_stream``) converges to the same state
 regardless of replays — the same idempotence argument as the inbound
-path. Deletes ride as full-image tombstone envelopes while the
-tombstone is retained (see ``read_changes`` for the expiry caveat).
+path. The changelog is exact across physical rewrites, so rows a
+reconcile, a retention truncation or a rollback drops ride as deletes.
+Two limits of LWW consumers remain: a rewrite that moves a key back to
+an older version (a rollback over an update, a reconcile correction
+with an older ``ts``) rides at that older position, which an LWW
+consumer ignores, so such a consumer must apply the feed in arrival
+order (one envelope per key per window — the Debezium sink contract);
+and deletes ride only while their tombstones are retained.
 """
-
 from __future__ import annotations
 
 import glob
@@ -29,7 +34,7 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..lake.table import LakeTable
@@ -76,7 +81,7 @@ def relay_cursor(out_dir: str) -> int:
     has fully encoded (0 before the first tick). Expose this to
     snapshot expiry as a retention floor —
     ``apply_stream(expire_protect=[lambda: relay_cursor(out_dir)])`` —
-    so a lagging relay's next ``read_changes(since_version=cursor)``
+    so a lagging relay's next ``read_changelog(since_version=cursor)``
     can never lose its manifest to aggressive ``expire_keep_last``."""
     return _read_cursor(out_dir)
 
@@ -102,22 +107,22 @@ def relay_changes(
     """One relay tick: encode the table's changes since the cursor as
     ``codec`` envelopes and publish them as ``.jsonl`` segments under
     ``out_dir``, then advance the cursor. Run it on a schedule (or after
-    each apply) for a continuous mirror; each tick is O(delta).
+    each apply) for a continuous mirror; each tick is one
+    :meth:`LakeTable.read_changelog` read, O(delta).
 
-    Envelope mapping: ``_change_type='delete'`` → a delete envelope
-    carrying the full row image; everything else → update. The window's
-    ``until_version`` rides as the transaction id (``txId``/``xid``/
-    ``id`` per codec), giving consumers a commit-window handle; row
-    ordering authority stays with ``(ts, lsn)`` exactly as on the
-    inbound wire.
+    Every change rides with its row image (the after-image, or the
+    before-image for a delete) at its event position, the changelog's
+    flat order columns: a delete's tombstone, or the before-image for a
+    row a rewrite dropped without one. No-op rewrites (compaction,
+    clustering, rescale) relay nothing. The window's ``until_version``
+    rides as the transaction id (``txId``/``xid``/``id`` per codec),
+    giving consumers a commit-window handle; row ordering authority
+    stays with ``(ts, lsn)`` exactly as on the inbound wire.
 
-    ``images=True`` relays from :meth:`LakeTable.read_changelog`
-    instead: ops refine to true insert/update/delete, update envelopes
-    carry the pre-update row image in the codec's before slot
-    (Debezium ``before``, Maxwell/Canal ``old``, wal2json ``identity``),
-    and no-op rewrites (compaction, clustering, rescale) relay nothing
-    at all — the exact-changelog contract downstream diff consumers
-    need. Costs one extra pruned read of the old snapshot per tick.
+    ``images`` chooses only the envelope: ``False`` sends update/delete
+    ops; ``True`` sends true insert/update/delete ops and puts the
+    pre-update image in the codec's before slot (Debezium ``before``,
+    Maxwell/Canal ``old``, wal2json ``identity``).
 
     Returns a :class:`RelayResult`; ``skipped`` is true when the table
     has no commits past the cursor (nothing is written).
@@ -129,50 +134,30 @@ def relay_changes(
     if until <= since:
         return RelayResult(since, since)
 
+    clog = table.read_changelog(spark, since_version=since, until_version=until)
+    all_cols = [f.name for f in clog.schema["after"].dataType.fields]
+    row_cols = [c for c in all_cols if c != lsn_col]
+    img, before = F.coalesce(F.col("after"), F.col("before")), F.col("before")
+    kind = F.col("_change_type")
     if images:
-        clog = table.read_changelog(spark, since_version=since, until_version=until)
-        all_cols = [f.name for f in clog.schema["after"].dataType.fields]
-        row_cols = [c for c in all_cols if c != lsn_col]
-        img = F.coalesce(F.col("after"), F.col("before"))
-        changes = clog.select(
-            # payload columns from the row image; the wire position
-            # (lsn) from the changelog's flat event-order column, so a
-            # delete rides at the tombstone's lsn, not its before-image's
-            *[img[c].alias(c) if c != lsn_col else F.col(lsn_col) for c in all_cols],
-            F.when(F.col("_change_type") == "insert", F.lit("I"))
-            .when(F.col("_change_type") == "delete", F.lit("D"))
-            .otherwise(F.lit("U"))
-            .alias("_op"),
-            F.when(
-                F.col("before").isNotNull(),
-                F.struct(*[F.col("before")[c].alias(c) for c in row_cols]),
-            ).alias("_before"),
-            F.lit(until).cast("long").alias("_commit"),
-        )
-        wire = mod.encode_envelopes(
-            changes,
-            row_cols,
-            op_col="_op",
-            lsn_col=lsn_col,
-            commit_lsn_col="_commit",
-            before_col="_before",
-        )
+        op = F.when(kind == "insert", F.lit("I")).when(kind == "delete", F.lit("D")).otherwise(F.lit("U"))
     else:
-        changes = table.read_changes(spark, since_version=since, until_version=until)
-        row_cols = [c for c in changes.columns if c not in ("_change_type", lsn_col)]
-        wire = mod.encode_envelopes(
-            changes.select(
-                *changes.columns,
-                F.when(F.col("_change_type") == "delete", F.lit("D"))
-                .otherwise(F.lit("U"))
-                .alias("_op"),
-                F.lit(until).cast("long").alias("_commit"),
-            ),
-            row_cols,
-            op_col="_op",
-            lsn_col=lsn_col,
-            commit_lsn_col="_commit",
-        )
+        op = F.when(kind == "delete", F.lit("D")).otherwise(F.lit("U"))
+    changes = clog.select(
+        # key and event-position (order) columns are the changelog's flat ones
+        *[(F.col(c) if c in clog.columns else img[c]).alias(c) for c in all_cols],
+        op.alias("_op"),
+        F.when(before.isNotNull(), F.struct(*[before[c].alias(c) for c in row_cols])).alias("_before"),
+        F.lit(until).cast("long").alias("_commit"),
+    )
+    wire = mod.encode_envelopes(
+        changes,
+        row_cols,
+        op_col="_op",
+        lsn_col=lsn_col,
+        commit_lsn_col="_commit",
+        before_col="_before" if images else None,
+    )
 
     staging = os.path.join(out_dir, f"_staging_{uuid.uuid4().hex}")
     wire.coalesce(max(1, n_segments)).write.mode("overwrite").text(staging)

@@ -1,12 +1,13 @@
 """Measure the keyset-bloom pruning of the exact-image changelog read.
 
 RELAY_r04.json documented the image relay's residual growth: the
-before-image read scans every file of the touched buckets, so on an
+changelog scans every file carried in the touched buckets, so on an
 uncompacted MOR tail the tick wall grows with tail length even when
-each tick's change window is narrow. The keyset-bloom tier
-(`LakeTable.read(bloom_and=…)`, fed by `keys_bloom` over the window's
-added files) skips tail files that provably hold none of the window's
-keys — this script measures that growth term directly.
+each tick's change window is narrow. The keyset-bloom tier inside
+`read_changelog` (`keys_bloom` over the window's added and removed
+files, intersected with each carried file's bloom) skips carried tail
+files that provably hold none of the window's keys — this script
+measures that growth term directly.
 
 Workload: the sustained streaming shape — BATCHES small micro-batches
 (each small enough that every file keeps its bloom: rows/file ≤ m/4),

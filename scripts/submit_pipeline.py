@@ -91,10 +91,10 @@ def build_parser() -> argparse.ArgumentParser:
     ap.add_argument("--relay-codec", default="debezium",
                     choices=["debezium", "wal2json", "maxwell", "canal"])
     ap.add_argument("--relay-images", action="store_true",
-                    help="relay the exact before/after-image changelog instead of "
-                         "the upsert superset: true insert/update/delete ops, "
-                         "update envelopes carry the pre-update row image, "
-                         "compaction/rescale windows relay nothing")
+                    help="relay with image envelopes: true insert/update/delete "
+                         "ops, and update envelopes carry the pre-update row "
+                         "image (without it: update/delete ops over the same "
+                         "exact changelog)")
     ap.add_argument("--rollup-group", default=None,
                     help="bronze-only: maintain an exact incremental rollup mart "
                          "(IVM over the image changelog) grouped by these "

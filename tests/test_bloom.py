@@ -131,7 +131,7 @@ def test_read_point_serving_path(spark, make_table):
 
 # ---------------------------------------------------------------------------
 # keyset-bloom (set-intersection) file skipping — prunes the changed-key
-# table reads inside read_changes / read_changelog / IVM dirty recompute
+# table reads inside read_changelog / IVM dirty recompute
 
 
 def test_keys_bloom_never_misses_a_file_holding_a_key(spark, make_table):
@@ -180,9 +180,9 @@ def test_keys_bloom_degenerate_inputs(spark):
 
 
 def test_changed_key_reads_are_keyset_bloom_pruned_and_exact(spark, make_table):
-    """read_changes and read_changelog over a window touching only one
-    batch's conversations: identical output on a bloomed vs bloomless
-    table, strictly fewer files scanned on the bloomed one (the MOR
+    """read_changelog over a window touching only one batch's
+    conversations: identical output on a bloomed vs bloomless table,
+    strictly fewer files scanned on the bloomed one (the carried MOR
     delta tail from unrelated batches is skipped)."""
     blo = _make_bloom_table(make_table, "kb2")
     ctl = make_table("kb2_ctl", n_buckets=2)
@@ -201,14 +201,11 @@ def test_changed_key_reads_are_keyset_bloom_pruned_and_exact(spark, make_table):
         extra = [F.to_json(F.col(c)) for c in ("before", "after") if c in df.columns]
         return sorted(map(tuple, df.select(*cols, *extra).collect()))
 
-    for reader in ("read_changes", "read_changelog"):
-        dfs = {
-            id(t): getattr(t, reader)(spark, since_version=since[id(t)]) for t in (blo, ctl)
-        }
-        assert rows(dfs[id(blo)]) == rows(dfs[id(ctl)]), reader
-        assert rows(dfs[id(blo)]), f"{reader}: window must be non-empty"
-        n_blo, n_ctl = len(dfs[id(blo)].inputFiles()), len(dfs[id(ctl)].inputFiles())
-        assert n_blo < n_ctl, f"{reader}: bloom pruned nothing ({n_blo}/{n_ctl})"
+    dfs = {id(t): t.read_changelog(spark, since_version=since[id(t)]) for t in (blo, ctl)}
+    assert rows(dfs[id(blo)]) == rows(dfs[id(ctl)])
+    assert rows(dfs[id(blo)]), "window must be non-empty"
+    n_blo, n_ctl = len(dfs[id(blo)].inputFiles()), len(dfs[id(ctl)].inputFiles())
+    assert n_blo < n_ctl, f"bloom pruned nothing ({n_blo}/{n_ctl})"
 
 
 def test_read_point_prunes_clustered_compacted_layout_via_key_stats(spark, make_table):

@@ -3,16 +3,26 @@ the Delta CDF `update_preimage`/`update_postimage` analog (Iceberg
 `create_changelog_view` with compute-updates), folded to one row per
 changed key. Contract under test: ops classify as insert/update/delete
 with true row images, no-op rewrites (compaction/clustering/rescale)
-produce an EMPTY changelog (unlike `read_changes`' conservative
-superset), schema evolution surfaces in old images as nulls, and the
-flat order columns carry the change event's own position (a delete
-rides at its tombstone's (ts, lsn), not its before-image's)."""
+produce an EMPTY changelog, rewrites that drop keys physically (reconcile,
+retention, rollback) emit them as deletes, schema evolution surfaces in
+old images as nulls, and the flat order columns carry the change event's
+own position (a delete rides at its tombstone's (ts, lsn), not its
+before-image's)."""
+
+from datetime import datetime, timezone
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from digital_analytics_data_platform_spark.lake import compact, merge_changes
-from digital_analytics_data_platform_spark.lake.merge import rescale_buckets
+from digital_analytics_data_platform_spark.lake.merge import (
+    delete_where, reconcile_backfill, rescale_buckets, retention_truncate,
+)
+from digital_analytics_data_platform_spark.lake.table import file_diff
+from digital_analytics_data_platform_spark.plans.ivm import IncrementalRollup
+from digital_analytics_data_platform_spark.sources import debezium
+from digital_analytics_data_platform_spark.streaming import relay_changes
 from tests.conftest import cdc_rows
 
 
@@ -91,9 +101,9 @@ def test_changelog_exact_across_noop_rewrites(spark, make_table):
     compact(spark, tbl, all_buckets=True)
     v2 = tbl.snapshot().version
 
-    # compaction rewrites every bucket: the superset view re-emits, the
-    # image view knows nothing changed
-    assert tbl.read_changes(spark, since_version=v1, until_version=v2).count() > 0
+    # compaction rewrites every file, yet nothing changed
+    added, removed = file_diff(tbl.snapshot(v1), tbl.snapshot(v2))
+    assert added and removed
     assert tbl.read_changelog(spark, since_version=v1, until_version=v2).count() == 0
 
 
@@ -234,3 +244,85 @@ def test_changelog_column_pruning_is_projected_changelog(spark, make_table):
 
     with _pytest.raises(ValueError):
         tbl.read_changelog(spark, since_version=since, columns=["nope"])
+
+
+def _ts(s):
+    return datetime.fromtimestamp(1767225600 + s, tz=timezone.utc).replace(tzinfo=None)
+
+
+_B1 = [
+    ("U", "c1", 0, "user", "hi", None, 10, 1),
+    ("U", "c1", 1, "assistant", "yo", None, 20, 2),
+    ("U", "c2", 0, "user", "q", None, 30, 3),
+    ("U", "c2", 1, "assistant", "a", None, 40, 4),
+    ("U", "c2", 2, "user", "q2", None, 50, 5),
+    ("U", "c3", 0, "user", "x", None, 60, 6),
+]
+_B2 = [
+    ("U", "c1", 1, "assistant", "yo-edited", None, 100_000, 7),
+    ("U", "c3", 1, "assistant", "y", None, 100_010, 8),
+    ("U", "c4", 0, "user", "new", None, 100_020, 9),
+    ("U", "c4", 1, "assistant", "reply", None, 100_030, 10),
+]
+_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts", "lsn"]
+
+
+def _rewrite(spark, tbl, case):
+    if case == "reconcile_omission":
+        # the corrected feed for the b1 window re-asserts c1 and c3 as
+        # they are and omits c2: the rewrite drops c2 without a tombstone
+        corrected = [r for r in _B1 if r[1] != "c2"]
+        reconcile_backfill(spark, tbl, cdc_rows(spark, corrected), _ts(0), _ts(1_000), batch_key="fix")
+    elif case in ("retention_metadata", "retention_straddling"):
+        res = retention_truncate(spark, tbl, _ts(50_000))
+        if case == "retention_metadata":
+            assert res["files_rewritten"] == 0 and res["files_dropped"] > 0
+        else:
+            assert res["files_rewritten"] > 0
+    elif case == "delete_where":
+        delete_where(spark, tbl, "conv_id = 'c2'", batch_key="gdpr")
+    else:
+        tbl.rollback(tag="b1")
+
+
+@pytest.mark.parametrize(
+    "case,strategy,images",
+    [
+        ("reconcile_omission", "cow", False),
+        ("retention_metadata", "mor", True),
+        ("retention_straddling", "cow", False),
+        ("delete_where", "mor", False),
+        ("rollback", "mor", True),
+    ],
+)
+def test_changelog_consumers_exact_across_rewrites(spark, make_table, tmp_path, case, strategy, images):
+    """Each rewrite that drops or reverts rows physically: an IVM rollup
+    and a relay mirror (the decoded wire applied in arrival order, the
+    Debezium sink contract) must both equal a recompute of the table."""
+    tbl = make_table(f"rw_{case}", n_buckets=4)
+    rollup = IncrementalRollup.create(str(tmp_path / f"roll_{case}"), tbl, ["role"], [], n_buckets=2)
+    wire, mirror = str(tmp_path / f"wire_{case}"), {}
+
+    def consume():
+        rollup.sync(spark, tbl)
+        res = relay_changes(spark, tbl, wire, images=images)
+        if res.segments:
+            # the wire carries lsn as the envelope position, not in the row
+            row_schema = T.StructType([f for f in tbl.read(spark).schema.fields if f.name != "lsn"])
+            decoded = debezium.decode_envelopes(spark.read.text(res.segments), row_schema)
+            for r in decoded.collect():
+                if r["op"] == "D":
+                    mirror.pop((r["conv_id"], r["turn_idx"]), None)
+                else:
+                    mirror[(r["conv_id"], r["turn_idx"])] = tuple(r[c] for c in _COLS)
+        live = tbl.read(spark)
+        assert mirror == {(r["conv_id"], r["turn_idx"]): tuple(r) for r in live.select(*_COLS).collect()}
+        mart = {r["role"]: r["cnt"] for r in rollup.read(spark).collect() if r["cnt"]}
+        assert mart == {r["role"]: r["count"] for r in live.groupBy("role").count().collect()}
+
+    merge_changes(spark, tbl, cdc_rows(spark, _B1), batch_key="b1", strategy=strategy)
+    tbl.set_tag("b1")
+    merge_changes(spark, tbl, cdc_rows(spark, _B2), batch_key="b2", strategy=strategy)
+    consume()
+    _rewrite(spark, tbl, case)
+    consume()

@@ -100,7 +100,7 @@ def test_remove_orphan_files(spark, make_table):
     assert tbl.read(spark).count() == 1
 
 
-def test_read_changes_emits_upserts_and_deletes(spark, make_table):
+def test_changelog_emits_inserts_updates_and_deletes(spark, make_table):
     tbl = make_table()
     _apply(
         spark,
@@ -124,43 +124,46 @@ def test_read_changes_emits_upserts_and_deletes(spark, make_table):
         "b2",
     )
     changes = {
-        (r["conv_id"], r["turn_idx"]): (r["_change_type"], r["text"])
-        for r in tbl.read_changes(spark, since_version=v1).collect()
+        (r["conv_id"], r["turn_idx"]): (
+            r["_change_type"],
+            r["before"] and r["before"]["text"],
+            r["after"] and r["after"]["text"],
+        )
+        for r in tbl.read_changelog(spark, since_version=v1).collect()
     }
     # exactly the touched keys for a MOR append; c3 untouched -> absent
     assert changes == {
-        ("c1", 0): ("upsert", "hello v2"),
-        ("c2", 0): ("delete", None),
-        ("c4", 0): ("upsert", "new"),
+        ("c1", 0): ("update", "hello", "hello v2"),
+        ("c2", 0): ("delete", "yo", None),
+        ("c4", 0): ("insert", None, "new"),
     }
 
 
-def test_read_changes_empty_and_late_loser_current_value(spark, make_table):
+def test_changelog_empty_and_late_loser_is_no_change(spark, make_table):
     tbl = make_table()
     _apply(spark, tbl, [("I", "c1", 0, "user", "winner", None, 100, 10)], "b1")
     v1 = tbl.snapshot().version
-    assert tbl.read_changes(spark, since_version=v1).count() == 0
-    # a late out-of-order event that LOSES last-writer-wins: the key is
-    # re-emitted (it was touched) but with its CURRENT winning value
+    assert tbl.read_changelog(spark, since_version=v1).count() == 0
+    # a late out-of-order event that LOSES last-writer-wins lands in a
+    # delta file, but the key's winning row is unchanged: no change
     _apply(spark, tbl, [("U", "c1", 0, "user", "stale late", None, 50, 5)], "b2")
-    rows = tbl.read_changes(spark, since_version=v1).collect()
-    assert len(rows) == 1
-    assert rows[0]["text"] == "winner" and rows[0]["_change_type"] == "upsert"
+    assert tbl.snapshot().version > v1
+    assert tbl.read_changelog(spark, since_version=v1).count() == 0
 
 
-def test_read_changes_window_between_versions(spark, make_table):
+def test_changelog_window_between_versions(spark, make_table):
     tbl = make_table()
     _apply(spark, tbl, [("I", "c1", 0, "user", "a", None, 10, 1)], "b1")
     v1 = tbl.snapshot().version
     _apply(spark, tbl, [("I", "c2", 0, "user", "b", None, 20, 2)], "b2")
     v2 = tbl.snapshot().version
     _apply(spark, tbl, [("I", "c3", 0, "user", "c", None, 30, 3)], "b3")
-    got = {r["conv_id"] for r in tbl.read_changes(spark, since_version=v1, until_version=v2).collect()}
+    got = {r["conv_id"] for r in tbl.read_changelog(spark, since_version=v1, until_version=v2).collect()}
     assert got == {"c2"}
 
 
 def test_changelog_replay_equivalence(spark, make_table):
-    """A downstream consumer applying read_changes windows version by
+    """A downstream consumer applying read_changelog windows version by
     version must converge to the table's exact final state — the
     changelog-emission analog of the north rule's replay equivalence."""
     from digital_analytics_data_platform_spark import datagen
@@ -184,12 +187,12 @@ def test_changelog_replay_equivalence(spark, make_table):
 
     state: dict = {}
     for since, until in zip(versions, versions[1:]):
-        for r in tbl.read_changes(spark, since_version=since, until_version=until).collect():
+        for r in tbl.read_changelog(spark, since_version=since, until_version=until).collect():
             k = (r["conv_id"], r["turn_idx"])
             if r["_change_type"] == "delete":
                 state.pop(k, None)
             else:
-                state[k] = r["text"]
+                state[k] = r["after"]["text"]
     final = {
         (r["conv_id"], r["turn_idx"]): r["text"] for r in tbl.read(spark).collect()
     }

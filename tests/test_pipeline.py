@@ -669,7 +669,8 @@ def test_lake_from_before_mart_cursors_upgrades(spark, tmp_path):
     no cursor prop, Silver's early snapshots may be expired, and it may
     hold persisted gold_*_long tables. The next batch rebuilds both marts
     in full from Silver instead of reading a changelog from version 0;
-    the stale long directories never shadow the long views; later
+    the stale long directories never shadow the long views, and
+    maintenance, publishing and rollback leave them alone; later
     batches take the changelog path again."""
     import dataclasses
     import shutil
@@ -691,7 +692,10 @@ def test_lake_from_before_mart_cursors_upgrades(spark, tmp_path):
         # an older lake's persisted long mart; a wide copy is easy to spot
         shutil.copytree(p._path(name), p._path(f"{name}_long"))
     assert set(p._cursors().values()) == {None}
+    planted = {name: LakeTable.load(p._path(f"{name}_long")) for name, _ in pipe_mod._MARTS}
+    planted_versions = {name: t.list_snapshots() for name, t in planted.items()}
     p.run_maintenance(spark, keep_snapshots=1)
+    assert {name: t.list_snapshots() for name, t in planted.items()} == planted_versions
     silver = LakeTable.load(p._path("silver"))
     assert 0 not in silver.list_snapshots()
 
@@ -711,3 +715,8 @@ def test_lake_from_before_mart_cursors_upgrades(spark, tmp_path):
     r = p.apply_batch(spark, cdc_rows(spark, [("U", "c2", 0, "user", "edited", None, 60, 6)]), 2)
     assert r.gold_daily.strategy == "cow" and r.gold_weekly.strategy == "cow"
     assert_marts_match_recompute(spark, p)
+
+    assert p.audit_and_publish(spark)["published"]
+    assert p.rollback_to_tag()
+    for name, t in planted.items():
+        assert t.tags() == {} and t.list_snapshots() == planted_versions[name]

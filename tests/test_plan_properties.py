@@ -151,7 +151,7 @@ def test_gold_day_range_read_prunes_files(spark, tmp_path):
 
 
 def test_changelog_key_semijoin_broadcasts_small_windows(spark, make_table):
-    """The changed-key semi-joins in read_changes/read_changelog must
+    """read_changelog's changed-key semi-join over carried files must
     broadcast the key set for normal-sized windows (the manifest's row
     counts gate it for free): a sort-merge join would shuffle the TABLE
     side's full row payloads, re-coupling changelog cost to table size.
@@ -182,25 +182,48 @@ def test_changelog_key_semijoin_broadcasts_small_windows(spark, make_table):
         strategy="mor",
     )
 
-    for df in (
-        tbl.read_changes(spark, since_version=v1),
-        tbl.read_changelog(spark, since_version=v1),
-    ):
-        plan = _explain(df)
-        assert "BroadcastHashJoin" in plan, plan
-        # the TABLE-side key restriction must never sort-merge; the
-        # changelog's before↔after FullOuter join (two already
-        # key-restricted small sides) legitimately stays SMJ — Spark
-        # cannot broadcast full-outer joins
-        assert "SortMergeJoin LeftSemi" not in plan, plan
+    small = tbl.read_changelog(spark, since_version=v1)
+    plan = _explain(small)
+    assert "BroadcastHashJoin" in plan, plan
+    assert "SortMergeJoin" not in plan, plan
 
     # window above the gate: the engine must NOT hint a broadcast of an
     # unbounded key set (Spark may still pick one from its own size
     # stats at this toy scale — that's its call, not the engine's)
-    small = tbl.read_changes(spark, since_version=v1)
-    big = tbl.read_changes(spark, since_version=v1, broadcast_keys_max_rows=0)
+    big = tbl.read_changelog(spark, since_version=v1, broadcast_keys_max_rows=0)
     assert "ResolvedHint" in small._jdf.queryExecution().analyzed().toString()
     assert "ResolvedHint" not in big._jdf.queryExecution().analyzed().toString()
+
+
+@pytest.mark.parametrize("strategy", ["mor", "cow"])
+def test_changelog_plans_one_aggregate_and_no_full_outer_join(spark, make_table, strategy):
+    """read_changelog is one aggregation over the window's removed,
+    added and carried rows: one Aggregate on the table key, no
+    before/after join. A copy-on-write window rewrites whole buckets, so
+    it carries no file in a touched bucket and plans no key semi-join."""
+    from tests.conftest import cdc_rows
+
+    from digital_analytics_data_platform_spark.lake import merge_changes
+
+    tbl = make_table(f"clog_plan_{strategy}", n_buckets=4)
+    merge_changes(
+        spark, tbl,
+        cdc_rows(spark, [("U", f"c{i}", 0, "user", f"m{i}", None, 1, i) for i in range(20)]),
+        batch_key="b1", strategy=strategy,
+    )
+    v1 = tbl.snapshot().version
+    merge_changes(
+        spark, tbl,
+        cdc_rows(spark, [("U", "c1", 0, "user", "upd", None, 99, 99), ("D", "c2", 0, None, None, None, 99, 100)]),
+        batch_key="b2", strategy=strategy,
+    )
+    df = tbl.read_changelog(spark, since_version=v1)
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    aggregates = [ln for ln in optimized.splitlines() if "Aggregate [" in ln]
+    assert len(aggregates) == 1 and "[conv_id#" in aggregates[0], optimized
+    assert "FullOuter" not in optimized, optimized
+    assert ("LeftSemi" in optimized) == (strategy == "mor"), optimized
+    assert {(r.conv_id, r._change_type) for r in df.collect()} == {("c1", "update"), ("c2", "delete")}
 
 
 def test_logical_mapping_keeps_pushdown_and_identity_is_free(spark, make_table):

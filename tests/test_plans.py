@@ -93,8 +93,8 @@ def _standalone_checks(bronze, silver, daily, weekly, long, *, max_ts, as_of, la
 def test_fused_quality_checks_match_standalone_checks(spark, make_table):
     """run_quality_checks fuses every layer's checks into one collect; its
     rows must equal the standalone check_* functions' on clean inputs and
-    on inputs corrupted one way each. Duplicates are added once per key,
-    where surplus rows (fused) and duplicated keys (standalone) agree."""
+    on inputs corrupted one way each. One duplicated key is present three
+    times: both report duplicated keys (A7), not surplus rows."""
     from datetime import timedelta
 
     table_rows = _bronze(spark, make_table, n=600)
@@ -108,7 +108,7 @@ def test_fused_quality_checks_match_standalone_checks(spark, make_table):
     null_key = {**rows[0].asDict(), "conv_id": None}
     cases = {
         "clean": {},
-        "duplicate_grain": {"bronze": spark.createDataFrame(rows + rows[:3], bronze.schema)},
+        "duplicate_grain": {"bronze": spark.createDataFrame(rows + rows[:3] + rows[:1], bronze.schema)},
         "null_key": {"bronze": spark.createDataFrame(rows + [null_key], bronze.schema)},
         "negative_metric": {"daily": daily.withColumn("n_turns", F.when(
             F.col("conv_id") == rows[0]["conv_id"], -F.col("n_turns")).otherwise(F.col("n_turns")))},
