@@ -23,6 +23,7 @@ second writer fails loudly instead of corrupting state.
 from __future__ import annotations
 
 import base64
+import datetime
 import json
 import os
 import uuid
@@ -122,8 +123,106 @@ def bucket_of(col: str, n_buckets: int) -> F.Column:
     """The layout's one bucket function: ``pmod(xxhash64(col), n_buckets)``.
     Tables bucket by their first key column; writers, bucket-pruned reads
     and bucket-aligned side tables must all use this function, or rows
-    land in buckets the reads never look in."""
+    land in buckets the reads never look in. It has two evaluators: this
+    column expression, run by Spark over rows, and :func:`bucket_of_value`,
+    run on the driver for one value. Tests hold the two equal."""
     return F.pmod(F.xxhash64(F.col(col)), F.lit(n_buckets)).cast("int")
+
+
+_XXH_P1 = 0x9E3779B185EBCA87
+_XXH_P2 = 0xC2B2AE3D27D4EB4F
+_XXH_P3 = 0x165667B19E3779F9
+_XXH_P4 = 0x85EBCA77C2B2AE63
+_XXH_P5 = 0x27D4EB2F165667C5
+_U64 = (1 << 64) - 1
+_XXH_SEED = 42  # Spark's xxhash64 seed
+_EPOCH = datetime.date(1970, 1, 1)  # DateType stores days since it
+# Spark hashes these through hashInt (4 bytes, byte/short widened) or
+# hashLong (8 bytes): type → (value bits, hashed bytes)
+_HASH_INTEGRAL = {T.ByteType: (8, 4), T.ShortType: (16, 4), T.IntegerType: (32, 4), T.LongType: (64, 8)}
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _U64
+
+
+def _xxh_round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _XXH_P2) & _U64, 31) * _XXH_P1 & _U64
+
+
+def _xxh64(data: bytes) -> int:
+    """XXH64 of ``data`` with Spark's seed, as Spark's
+    ``XXH64.hashUnsafeBytes`` computes it (little-endian lanes), returned
+    as Spark's signed long. ``hashInt`` and ``hashLong`` are this
+    function over the value's 4 / 8 little-endian bytes."""
+    seed, n, i = _XXH_SEED, len(data), 0
+    if n >= 32:
+        v = [(seed + _XXH_P1 + _XXH_P2) & _U64, (seed + _XXH_P2) & _U64, seed, (seed - _XXH_P1) & _U64]
+        while i <= n - 32:
+            for j in range(4):
+                v[j] = _xxh_round(v[j], int.from_bytes(data[i + 8 * j : i + 8 * j + 8], "little"))
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _U64
+        for x in v:
+            h = ((h ^ _xxh_round(0, x)) * _XXH_P1 + _XXH_P4) & _U64
+    else:
+        h = (seed + _XXH_P5) & _U64
+    h = (h + n) & _U64
+    while i + 8 <= n:
+        h ^= _xxh_round(0, int.from_bytes(data[i : i + 8], "little"))
+        h = (_rotl(h, 27) * _XXH_P1 + _XXH_P4) & _U64
+        i += 8
+    if i + 4 <= n:
+        h ^= int.from_bytes(data[i : i + 4], "little") * _XXH_P1 & _U64
+        h = (_rotl(h, 23) * _XXH_P2 + _XXH_P3) & _U64
+        i += 4
+    for b in data[i:]:
+        h ^= b * _XXH_P5 & _U64
+        h = _rotl(h, 11) * _XXH_P1 & _U64
+    h = (h ^ (h >> 33)) * _XXH_P2 & _U64
+    h = (h ^ (h >> 29)) * _XXH_P3 & _U64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+def _driver_xxhash64(value: Any, dtype: T.DataType) -> int | None:
+    """Spark's ``xxhash64`` of one ``value`` of column type ``dtype``,
+    computed on the driver; None for a type (or a value the type would
+    not accept) the driver has no evaluator for. Null hashes as the
+    seed."""
+    if value is None:
+        return _XXH_SEED
+    if dtype == T.StringType() and isinstance(value, str):  # UTF8_BINARY collation only
+        return _xxh64(value.encode("utf-8"))
+    if isinstance(dtype, T.DateType) and type(value) is datetime.date:
+        return _xxh64((value - _EPOCH).days.to_bytes(4, "little", signed=True))
+    bits, width = _HASH_INTEGRAL.get(type(dtype), (0, 0))
+    if bits and type(value) is int and -(1 << (bits - 1)) <= value < 1 << (bits - 1):
+        return _xxh64(value.to_bytes(width, "little", signed=True))
+    return None
+
+
+def bucket_of_value(spark: SparkSession, value: Any, dtype: T.DataType, n_buckets: int) -> int:
+    """The bucket :func:`bucket_of` puts ``value`` (of column type
+    ``dtype``) in, derived on the driver without a Spark job for string,
+    byte/short/int/long and date keys (Python ``%`` by a positive count
+    equals Spark's ``pmod``). Any other type is evaluated once by Spark
+    over a typed literal — a JVM-side one-row plan, never a Python-side
+    frame."""
+    h = _driver_xxhash64(value, dtype)
+    if h is not None:
+        return h % n_buckets
+    lit = spark.range(1).select(F.lit(value).cast(dtype).alias("k"))
+    return lit.select(bucket_of("k", n_buckets).alias("b")).first()["b"]
+
+
+def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    """An empty frame of ``schema``, planned in the JVM. The Python-side
+    ``spark.createDataFrame([], schema)`` is an RDD whose every scan
+    starts Python workers."""
+    return spark.range(0, numPartitions=1).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+    )
 
 
 def file_diff(old: "Snapshot", new: "Snapshot") -> tuple[list[dict], list[dict]]:
@@ -384,8 +483,10 @@ class LakeTable:
         If the snapshot carries merge-on-read delta files (appended by
         ``merge_changes(strategy="mor")``), a key may appear in several
         files; the read collapses to the latest version per key with the
-        same last-writer-wins hash agg the MERGE uses. ``collapse``
-        forces/suppresses this (default: auto from the manifest).
+        same last-writer-wins hash agg the MERGE uses — only when a file
+        the read keeps lies in a bucket the manifest's ``delta_buckets``
+        lists, so a read of clean buckets plans no aggregate. ``collapse``
+        forces/suppresses this.
 
         ``tag`` resolves a named pin from :meth:`set_tag`; ``as_of``
         resolves a wall-clock publish time via :meth:`version_at`
@@ -481,13 +582,15 @@ class LakeTable:
                 ]
         schema = snap.schema()
         if not files:
-            df = spark.createDataFrame([], schema)
+            df = empty_frame(spark, schema)
             if not include_deleted:
                 df = df.drop(DELETED_COL)
             return df if physical else _to_logical(df, snap)
         df = spark.read.schema(schema).parquet(*[os.path.join(self.path, f["path"]) for f in files])
         if collapse is None:
-            collapse = bool(snap.props.get("delta_buckets"))
+            # a stored ``False`` (SCD2 / patch sinks) never collapses
+            delta = snap.props.get("delta_buckets")
+            collapse = isinstance(delta, dict) and any(str(f["bucket"]) in delta for f in files)
         if collapse:
             df = lww_collapse(df, snap.key_cols, snap.order_cols)
         if not include_deleted:
@@ -822,14 +925,10 @@ class LakeTable:
         def scan(files: list[dict], before: bool, after: bool) -> DataFrame:
             # every file is read under the new schema: older files lack
             # mid-stream-added columns (null) and carry narrower types.
-            # An empty set is a JVM-side empty frame: an empty Python-side
-            # frame would start Python workers on every read.
             if files:
                 df = spark.read.schema(schema).parquet(*[os.path.join(self.path, f["path"]) for f in files])
             else:
-                df = spark.range(0, numPartitions=1).select(
-                    *[F.lit(None).cast(f.dataType).alias(f.name) for f in proj_fields]
-                )
+                df = empty_frame(spark, T.StructType(proj_fields))
             return df.select(*proj, F.lit(before).alias("_in_before"), F.lit(after).alias("_in_after"))
 
         rows = scan(removed, True, False).unionByName(scan(added, False, True))
@@ -926,12 +1025,13 @@ class LakeTable:
     ) -> DataFrame:
         """Serving-path point lookup: every live row of one bucket-key
         value (e.g. all turns of one conversation), composing the
-        pruning tiers in one call — bucket (derived JVM-side with the
-        table's own hash, one 1-row job), per-file bloom skip when the
-        table has `bloom_cols`, per-file min/max stats as an equality
-        range (bites on key-clustered compacted layouts, where big
-        files saturate past their bloom budget but carry sliver-narrow
-        key stats), and the equality predicate on the pruned read. At
+        pruning tiers in one call — bucket (derived on the driver with
+        :func:`bucket_of_value`, so the lookup is its one pruned read),
+        per-file bloom skip when the table has `bloom_cols`, per-file
+        min/max stats as an equality range (bites on key-clustered
+        compacted layouts, where big files saturate past their bloom
+        budget but carry sliver-narrow key stats), and the equality
+        predicate on the pruned read. At
         10^10 events this touches one bucket's surviving files, never
         the table."""
         if tag is not None and snapshot_version is None:
@@ -941,11 +1041,7 @@ class LakeTable:
             tag = None  # resolved; avoid double resolution in read()
         snap = self.snapshot(snapshot_version)
         key0 = snap.key_cols[0]
-        bucket = (
-            spark.createDataFrame([(value,)], T.StructType([snap.schema()[key0]]))
-            .select(bucket_of(key0, snap.n_buckets).alias("b"))
-            .first()["b"]
-        )
+        bucket = bucket_of_value(spark, value, snap.schema()[key0].dataType, snap.n_buckets)
         df = self.read(
             spark,
             buckets=[bucket],

@@ -46,7 +46,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..lake.merge import merge_changes
-from ..lake.table import _BLOOM_M_DEFAULT, DELETED_COL, LakeTable, bucket_of, keys_bloom, lww_collapse
+from ..lake.table import (
+    _BLOOM_M_DEFAULT,
+    DELETED_COL,
+    LakeTable,
+    bucket_of,
+    empty_frame,
+    keys_bloom,
+    lww_collapse,
+)
 
 _CURSOR_PROP = "ivm_src_version"
 
@@ -302,7 +310,7 @@ class IncrementalRollup:
             res = merge_changes(
                 spark,
                 self.table,
-                spark.createDataFrame([], self._batch_schema(snap)),
+                empty_frame(spark, self._batch_schema(snap)),
                 batch_key=batch_key,
                 strategy=strategy,
                 extra_props=extra_props,
@@ -776,7 +784,7 @@ class SketchRollup:
             res = merge_changes(
                 spark,
                 self.table,
-                spark.createDataFrame([], self._batch_schema(snap)),
+                empty_frame(spark, self._batch_schema(snap)),
                 batch_key=f"ivms:{since}->{head}",
                 strategy=strategy,
                 extra_props={_CURSOR_PROP: head},
@@ -1109,7 +1117,7 @@ class JoinRollup:
             ]
             if not buckets:
                 out_schema = T.StructType([snap.schema()[c] for c in cols])
-                return spark.createDataFrame([], out_schema)
+                return empty_frame(spark, out_schema)
             if j0 in (snap.props.get("bloom_cols") or []) and broadcast_ok:
                 keyset = keys_bloom(
                     keys.select(j0), j0, int(snap.props.get("bloom_m", _BLOOM_M_DEFAULT))

@@ -25,7 +25,7 @@ from dataclasses import asdict, dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from ..lake.merge import compact, merge_changes, retention_truncate
-from ..lake.table import LakeTable
+from ..lake.table import LakeTable, empty_frame
 
 
 @dataclass
@@ -345,7 +345,7 @@ def metrics_df(spark: SparkSession, table_path: str, pipeline_id: str | None = "
     )
     mdir = os.path.join(table_path, "metrics")
     if not os.path.isdir(mdir) or not os.listdir(mdir):
-        return spark.createDataFrame([], schema)
+        return empty_frame(spark, schema)
     df = spark.read.schema(schema).json(mdir)
     if pipeline_id is not None:
         df = df.filter(F.col("pipeline_id") == pipeline_id)

@@ -17,10 +17,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from digital_analytics_data_platform_spark import datagen
 from digital_analytics_data_platform_spark.lake import LakeTable, merge_changes
-from digital_analytics_data_platform_spark.lake.table import bucket_of
+from digital_analytics_data_platform_spark.lake.table import bucket_of_value
 from digital_analytics_data_platform_spark.session import get_spark
 
 
@@ -64,13 +65,9 @@ def main() -> dict:
     target = (
         log.filter(F.col("conv_id") != "conv_00000000").select("conv_id").first()["conv_id"]
     )
-    # the bucket is derivable JVM-side (one 1-row job) — the baseline a
-    # competent point read already has; bloom's payoff is ON TOP of it
-    tgt_bucket = (
-        spark.createDataFrame([(target,)], "conv_id string")
-        .select(bucket_of("conv_id", buckets).alias("b"))
-        .first()["b"]
-    )
+    # the bucket is derived on the driver with no Spark job, as
+    # read_point derives it; bloom's payoff is ON TOP of bucket pruning
+    tgt_bucket = bucket_of_value(spark, target, T.StringType(), buckets)
 
     def point_read(bucket_prune: bool, use_bloom: bool):
         t = time.monotonic()

@@ -4,15 +4,24 @@ on hash-distributed string keys, where per-file min/max stats are
 uselessly wide inside a bucket. Contracts: pruned point reads are
 value-identical to unpruned reads (skipping is conservative), actually
 skip files, saturated blooms are omitted (file kept), and non-string
-columns never get blooms."""
+columns never get blooms. The point-read path's driver-side bucket
+evaluator is pinned here to Spark's xxhash64, as the bloom probe is to
+Spark's crc32."""
+
+import datetime
+import uuid
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from digital_analytics_data_platform_spark.lake import merge_changes
+from digital_analytics_data_platform_spark.lake import LakeTable, merge_changes
 from digital_analytics_data_platform_spark.lake.table import (
     _BLOOM_M_DEFAULT,
     _bloom_might_contain,
     _blooms_intersect,
+    _driver_xxhash64,
+    bucket_of,
+    bucket_of_value,
     keys_bloom,
 )
 from tests.conftest import TRANSCRIPT_SCHEMA, cdc_rows
@@ -22,16 +31,29 @@ def _make_bloom_table(make_table, name, **props):
     return make_table(name, n_buckets=2, props={"bloom_cols": ["conv_id"], **props})
 
 
-def _batches(spark, tbl, n_batches=4, convs_per_batch=30):
-    """Disjoint conv sets per MOR batch → many files per bucket, each
-    holding different keys (the delta-file shape blooms exist for)."""
+def _batches(spark, tbl, n_batches=4, convs_per_batch=30, strategy="mor"):
+    """Disjoint conv sets per batch → under MOR, many files per bucket,
+    each holding different keys (the delta-file shape blooms exist for)."""
     for b in range(n_batches):
         rows = [
             ("U", f"conv_{b:02d}_{i:03d}", t, "user", f"m{b}/{i}/{t}", None, b * 600 + i, b * 1000 + i * 3 + t)
             for i in range(convs_per_batch)
             for t in range(3)
         ]
-        merge_changes(spark, tbl, cdc_rows(spark, rows), batch_key=f"b{b}", strategy="mor")
+        merge_changes(spark, tbl, cdc_rows(spark, rows), batch_key=f"b{b}", strategy=strategy)
+
+
+def _jobs_run(spark, fn):
+    """``fn()``'s result and the number of Spark jobs it ran, counted by
+    a fresh job group through the status tracker."""
+    sc = spark.sparkContext
+    group = f"pin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_bloom_point_read_prunes_files_and_stays_exact(spark, make_table):
@@ -109,24 +131,77 @@ def test_bloom_probe_matches_spark_crc32_layout(spark):
     assert misses <= 3  # FP ~ 50/32768 per probe
 
 
-def test_read_point_serving_path(spark, make_table):
+def test_bucket_of_value_matches_spark_xxhash64(spark):
+    """Pin the driver-side bucket evaluator to Spark's: the same
+    xxhash64 (seed 42) and the same bucket under bucket_of, at 16 and
+    64 buckets, for every key type the driver evaluates — strings of
+    each XXH64 length regime (empty, < 4, < 8, 31/32/33 bytes, > 64)
+    and multi-byte UTF-8, the integral types at their extremes, dates —
+    and null, which Spark hashes as the seed."""
+    cases = {
+        T.StringType(): [
+            "", "a", "abc", "conv_00000042", "x" * 31, "y" * 32, "z" * 33, "q" * 77, "é" * 50,
+            "ünïcödé", "数据湖", "🎉🚀", "mixed ☃ text " * 7, None,
+        ],
+        T.ByteType(): [-128, -1, 0, 1, 127, None],
+        T.ShortType(): [-32768, -1, 0, 32767, None],
+        T.IntegerType(): [-(2**31), -1, 0, 1, 123456789, 2**31 - 1, None],
+        T.LongType(): [-(2**63), -1, 0, 1, 2**40 + 7, 2**63 - 1, None],
+        T.DateType(): [
+            datetime.date(1, 1, 1), datetime.date(1969, 12, 31), datetime.date(1970, 1, 1),
+            datetime.date(2026, 3, 15), datetime.date(9999, 12, 31), None,
+        ],
+    }
+    for dtype, values in cases.items():
+        df = spark.createDataFrame([(v,) for v in values], T.StructType([T.StructField("k", dtype)]))
+        got = df.select(
+            F.xxhash64("k").alias("h"), bucket_of("k", 16).alias("b16"), bucket_of("k", 64).alias("b64")
+        ).collect()
+        for v, r in zip(values, got):
+            assert _driver_xxhash64(v, dtype) == r["h"], (dtype, v)
+            assert bucket_of_value(spark, v, dtype, 16) == r["b16"], (dtype, v)
+            assert bucket_of_value(spark, v, dtype, 64) == r["b64"], (dtype, v)
+    # a type without a driver evaluator takes one JVM evaluation, equal too
+    row = spark.createDataFrame([(2.5,)], "k double").select(bucket_of("k", 16).alias("b")).first()
+    assert bucket_of_value(spark, 2.5, T.DoubleType(), 16) == row["b"]
+
+
+def test_read_point_serving_path(spark, make_table, tmp_path):
     """read_point composes bucket derivation + bloom skip + predicate:
-    exact rows for one conversation, scanning a small slice of files."""
+    exact rows for one conversation, scanning a small slice of files.
+    The bucket is derived on the driver, so on a copy-on-write table the
+    lookup runs exactly one Spark job: its pruned read."""
     tbl = _make_bloom_table(make_table, "bloom5")
     _batches(spark, tbl)
     snap = tbl.snapshot()
     target = "conv_02_011"
     got = tbl.read_point(spark, target)
-    assert sorted(r.turn_idx for r in got.collect()) == [0, 1, 2]
-    assert got.select("conv_id").distinct().collect()[0][0] == target
+    rows = sorted(map(tuple, got.collect()))
+    assert rows == sorted(map(tuple, tbl.read(spark).filter(F.col("conv_id") == target).collect()))
+    assert sorted(r[1] for r in rows) == [0, 1, 2]
     # scans at most the target bucket's bloom survivors
     assert len(got.inputFiles()) < len(snap.files) // 2
 
-    # works on a table without blooms too (bucket + predicate only)
+    # works on a copy-on-write table without blooms too (bucket +
+    # predicate only), in one job
     plain = make_table("bloom5_plain", n_buckets=2)
-    _batches(spark, plain, n_batches=2)
-    got2 = plain.read_point(spark, "conv_01_003")
-    assert got2.count() == 3
+    _batches(spark, plain, n_batches=2, strategy="cow")
+    rows2, jobs = _jobs_run(spark, lambda: plain.read_point(spark, "conv_01_003").collect())
+    assert jobs == 1
+    expect = plain.read(spark).filter(F.col("conv_id") == "conv_01_003").collect()
+    assert sorted(map(tuple, rows2)) == sorted(map(tuple, expect)) and len(rows2) == 3
+
+    # a key type without a driver evaluator goes through the JVM fallback
+    schema = T.StructType(
+        [T.StructField("k", T.DoubleType()), T.StructField("v", T.StringType()), T.StructField("lsn", T.LongType())]
+    )
+    dbl = LakeTable.create(str(tmp_path / "dbl_key"), schema, ["k"], ["lsn"], n_buckets=4)
+    batch = spark.createDataFrame(
+        [("U", i / 4, f"v{i}", i, 0) for i in range(12)], "op string, k double, v string, lsn long, commit_lsn long"
+    )
+    merge_changes(spark, dbl, batch, batch_key="d1")
+    assert _driver_xxhash64(1.25, T.DoubleType()) is None
+    assert [tuple(r) for r in dbl.read_point(spark, 1.25).collect()] == [(1.25, "v5", 5)]
 
 
 # ---------------------------------------------------------------------------
