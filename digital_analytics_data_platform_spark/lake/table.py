@@ -136,10 +136,6 @@ _XXH_P4 = 0x85EBCA77C2B2AE63
 _XXH_P5 = 0x27D4EB2F165667C5
 _U64 = (1 << 64) - 1
 _XXH_SEED = 42  # Spark's xxhash64 seed
-_EPOCH = datetime.date(1970, 1, 1)  # DateType stores days since it
-# Spark hashes these through hashInt (4 bytes, byte/short widened) or
-# hashLong (8 bytes): type → (value bits, hashed bytes)
-_HASH_INTEGRAL = {T.ByteType: (8, 4), T.ShortType: (16, 4), T.IntegerType: (32, 4), T.LongType: (64, 8)}
 
 
 def _rotl(x: int, r: int) -> int:
@@ -153,8 +149,7 @@ def _xxh_round(acc: int, lane: int) -> int:
 def _xxh64(data: bytes) -> int:
     """XXH64 of ``data`` with Spark's seed, as Spark's
     ``XXH64.hashUnsafeBytes`` computes it (little-endian lanes), returned
-    as Spark's signed long. ``hashInt`` and ``hashLong`` are this
-    function over the value's 4 / 8 little-endian bytes."""
+    as Spark's signed long."""
     seed, n, i = _XXH_SEED, len(data), 0
     if n >= 32:
         v = [(seed + _XXH_P1 + _XXH_P2) & _U64, (seed + _XXH_P2) & _U64, seed, (seed - _XXH_P1) & _U64]
@@ -187,31 +182,29 @@ def _xxh64(data: bytes) -> int:
 
 def _driver_xxhash64(value: Any, dtype: T.DataType) -> int | None:
     """Spark's ``xxhash64`` of one ``value`` of column type ``dtype``,
-    computed on the driver; None for a type (or a value the type would
-    not accept) the driver has no evaluator for. Null hashes as the
-    seed."""
+    computed on the driver for a string (its UTF-8 bytes) or a null
+    (the seed); None for any other type, which the driver leaves to
+    Spark."""
     if value is None:
         return _XXH_SEED
     if dtype == T.StringType() and isinstance(value, str):  # UTF8_BINARY collation only
         return _xxh64(value.encode("utf-8"))
-    if isinstance(dtype, T.DateType) and type(value) is datetime.date:
-        return _xxh64((value - _EPOCH).days.to_bytes(4, "little", signed=True))
-    bits, width = _HASH_INTEGRAL.get(type(dtype), (0, 0))
-    if bits and type(value) is int and -(1 << (bits - 1)) <= value < 1 << (bits - 1):
-        return _xxh64(value.to_bytes(width, "little", signed=True))
     return None
 
 
 def bucket_of_value(spark: SparkSession, value: Any, dtype: T.DataType, n_buckets: int) -> int:
     """The bucket :func:`bucket_of` puts ``value`` (of column type
-    ``dtype``) in, derived on the driver without a Spark job for string,
-    byte/short/int/long and date keys (Python ``%`` by a positive count
-    equals Spark's ``pmod``). Any other type is evaluated once by Spark
-    over a typed literal — a JVM-side one-row plan, never a Python-side
-    frame."""
+    ``dtype``) in, derived on the driver without a Spark job for string
+    keys and nulls (Python ``%`` by a positive count equals Spark's
+    ``pmod``). Any other type is evaluated once by Spark over a typed
+    literal — a JVM-side one-row plan, never a Python-side frame."""
     h = _driver_xxhash64(value, dtype)
     if h is not None:
         return h % n_buckets
+    if type(value) is datetime.date:
+        # PySpark's date literal converter writes years < 1000 unpadded,
+        # which java.sql.Date rejects; the ISO string casts exactly
+        value = value.isoformat()
     lit = spark.range(1).select(F.lit(value).cast(dtype).alias("k"))
     return lit.select(bucket_of("k", n_buckets).alias("b")).first()["b"]
 
@@ -483,10 +476,8 @@ class LakeTable:
         If the snapshot carries merge-on-read delta files (appended by
         ``merge_changes(strategy="mor")``), a key may appear in several
         files; the read collapses to the latest version per key with the
-        same last-writer-wins hash agg the MERGE uses — only when a file
-        the read keeps lies in a bucket the manifest's ``delta_buckets``
-        lists, so a read of clean buckets plans no aggregate. ``collapse``
-        forces/suppresses this.
+        same last-writer-wins hash agg the MERGE uses. ``collapse``
+        forces/suppresses this (default: auto from the manifest).
 
         ``tag`` resolves a named pin from :meth:`set_tag`; ``as_of``
         resolves a wall-clock publish time via :meth:`version_at`
@@ -588,9 +579,7 @@ class LakeTable:
             return df if physical else _to_logical(df, snap)
         df = spark.read.schema(schema).parquet(*[os.path.join(self.path, f["path"]) for f in files])
         if collapse is None:
-            # a stored ``False`` (SCD2 / patch sinks) never collapses
-            delta = snap.props.get("delta_buckets")
-            collapse = isinstance(delta, dict) and any(str(f["bucket"]) in delta for f in files)
+            collapse = bool(snap.props.get("delta_buckets"))
         if collapse:
             df = lww_collapse(df, snap.key_cols, snap.order_cols)
         if not include_deleted:

@@ -132,12 +132,12 @@ def test_bloom_probe_matches_spark_crc32_layout(spark):
 
 
 def test_bucket_of_value_matches_spark_xxhash64(spark):
-    """Pin the driver-side bucket evaluator to Spark's: the same
-    xxhash64 (seed 42) and the same bucket under bucket_of, at 16 and
-    64 buckets, for every key type the driver evaluates — strings of
-    each XXH64 length regime (empty, < 4, < 8, 31/32/33 bytes, > 64)
-    and multi-byte UTF-8, the integral types at their extremes, dates —
-    and null, which Spark hashes as the seed."""
+    """Pin the driver-side bucket evaluator to Spark's: the same bucket
+    under bucket_of, at 16 and 64 buckets. Strings of each XXH64 length
+    regime (empty, < 4, < 8, 31/32/33 bytes, > 64) and multi-byte UTF-8,
+    and nulls (which Spark hashes as the seed), are hashed on the driver
+    and must also equal Spark's xxhash64; the integral types at their
+    extremes and dates take the one-literal JVM evaluation."""
     cases = {
         T.StringType(): [
             "", "a", "abc", "conv_00000042", "x" * 31, "y" * 32, "z" * 33, "q" * 77, "é" * 50,
@@ -158,19 +158,18 @@ def test_bucket_of_value_matches_spark_xxhash64(spark):
             F.xxhash64("k").alias("h"), bucket_of("k", 16).alias("b16"), bucket_of("k", 64).alias("b64")
         ).collect()
         for v, r in zip(values, got):
-            assert _driver_xxhash64(v, dtype) == r["h"], (dtype, v)
+            h = _driver_xxhash64(v, dtype)
+            assert h == r["h"] if v is None or dtype == T.StringType() else h is None, (dtype, v)
             assert bucket_of_value(spark, v, dtype, 16) == r["b16"], (dtype, v)
             assert bucket_of_value(spark, v, dtype, 64) == r["b64"], (dtype, v)
-    # a type without a driver evaluator takes one JVM evaluation, equal too
-    row = spark.createDataFrame([(2.5,)], "k double").select(bucket_of("k", 16).alias("b")).first()
-    assert bucket_of_value(spark, 2.5, T.DoubleType(), 16) == row["b"]
 
 
 def test_read_point_serving_path(spark, make_table, tmp_path):
     """read_point composes bucket derivation + bloom skip + predicate:
     exact rows for one conversation, scanning a small slice of files.
-    The bucket is derived on the driver, so on a copy-on-write table the
-    lookup runs exactly one Spark job: its pruned read."""
+    The bucket of a string key is derived on the driver, so on a
+    copy-on-write table the lookup runs exactly one Spark job: its
+    pruned read."""
     tbl = _make_bloom_table(make_table, "bloom5")
     _batches(spark, tbl)
     snap = tbl.snapshot()
@@ -182,14 +181,21 @@ def test_read_point_serving_path(spark, make_table, tmp_path):
     # scans at most the target bucket's bloom survivors
     assert len(got.inputFiles()) < len(snap.files) // 2
 
-    # works on a copy-on-write table without blooms too (bucket +
-    # predicate only), in one job
+    # works on a merge-on-read table without blooms too (bucket + stats
+    # pruning, then the collapse)
     plain = make_table("bloom5_plain", n_buckets=2)
-    _batches(spark, plain, n_batches=2, strategy="cow")
-    rows2, jobs = _jobs_run(spark, lambda: plain.read_point(spark, "conv_01_003").collect())
-    assert jobs == 1
+    _batches(spark, plain, n_batches=2)
+    got2 = plain.read_point(spark, "conv_01_003").collect()
     expect = plain.read(spark).filter(F.col("conv_id") == "conv_01_003").collect()
-    assert sorted(map(tuple, rows2)) == sorted(map(tuple, expect)) and len(rows2) == 3
+    assert sorted(map(tuple, got2)) == sorted(map(tuple, expect)) and len(got2) == 3
+
+    # on a copy-on-write table the lookup is exactly one job
+    cow = make_table("bloom5_cow", n_buckets=2)
+    _batches(spark, cow, n_batches=2, strategy="cow")
+    rows3, jobs = _jobs_run(spark, lambda: cow.read_point(spark, "conv_01_003").collect())
+    assert jobs == 1
+    expect = cow.read(spark).filter(F.col("conv_id") == "conv_01_003").collect()
+    assert sorted(map(tuple, rows3)) == sorted(map(tuple, expect)) and len(rows3) == 3
 
     # a key type without a driver evaluator goes through the JVM fallback
     schema = T.StructType(
